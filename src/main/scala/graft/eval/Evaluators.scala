@@ -39,16 +39,18 @@ object RowDqEvaluator {
   * interpreted (higher-order functions are CodegenFallback) and bloats
   * any cache of the result (~KB/row). Rule outcomes are really just N
   * bits, so here each group of up to 64 rules compiles to ONE long
-  * column: `when(expectation, 0) otherwise (1 << bit)` OR-folded — pure
-  * codegen'd integer arithmetic, 8 bytes of DQ state per row. Every
-  * downstream consumer (error filter, drop/fail gates, per-rule failure
-  * counts) is a bitwise op, and the reference-compatible meta maps are
-  * reconstructed only for the (small) error subset.
+  * column, a [[RuleMask]] whose generated code stays in small
+  * JIT-compilable methods — 8 bytes of DQ state per row. Every
+  * downstream consumer (error filter, drop/fail gates) is a bitwise op,
+  * every count comes from one [[MaskCounts]] aggregate, and the
+  * reference-compatible meta maps are reconstructed only for the
+  * (small) error subset.
   *
   * Measured at sf0.1 (600k rows, 5 rules incl. a window rule): map-based
   * cache materialization 60 s → masked 2 s.
   */
 object MaskedRowDqEvaluator {
+  import org.apache.spark.sql.classic.GraftExpressionBridge.{column, expression}
 
   val MaskPrefix = "meta_dq_fail_mask_"
 
@@ -63,9 +65,8 @@ object MaskedRowDqEvaluator {
     require(rules.forall(_.ruleType == RuleType.RowDq.name), "row_dq rules only")
     if (rules.isEmpty) return df
     val maskCols = rules.grouped(64).zipWithIndex.map { case (chunk, ci) =>
-      chunk.zipWithIndex.map { case (r, bit) =>
-        when(expr(r.expectation), lit(0L)).otherwise(lit(1L << bit))
-      }.reduce(_ bitwiseOR _).as(s"$MaskPrefix$ci")
+      column(RuleMask(chunk.map(r => expression(expr(r.expectation)))))
+        .as(s"$MaskPrefix$ci")
     }.toSeq
     df.select(col("*") +: maskCols: _*)
   }
@@ -74,14 +75,17 @@ object MaskedRowDqEvaluator {
   def anyFailed(rules: Seq[Rule]): Column =
     maskColNames(rules.size).map(c => col(c) =!= 0L).reduce(_ || _)
 
+  /** Per chunk, the bits of the rules carrying `action`. */
+  private def actionBits(rules: Seq[Rule], action: String): Seq[Long] =
+    rules.grouped(64).map(_.zipWithIndex.collect {
+      case (r, bit) if r.actionIfFailed == action => 1L << bit
+    }.foldLeft(0L)(_ | _)).toSeq
+
   /** true ⇔ a failed rule on the row carries `action`. */
   def hasFailedAction(rules: Seq[Rule], action: String): Column = {
-    val perChunk = rules.zipWithIndex
-      .filter(_._1.actionIfFailed == action)
-      .groupMap { case (_, i) => i / 64 } { case (_, i) => 1L << (i % 64) }
-      .view.mapValues(_.reduce(_ | _)).toMap
+    val perChunk = actionBits(rules, action).zipWithIndex.filter(_._1 != 0L)
     if (perChunk.isEmpty) lit(false)
-    else perChunk.map { case (ci, m) =>
+    else perChunk.map { case (m, ci) =>
       col(s"$MaskPrefix$ci").bitwiseAND(lit(m)) =!= 0L
     }.reduce(_ || _)
   }
@@ -117,50 +121,40 @@ object MaskedRowDqEvaluator {
     def outputRows: Long = inputRows - dropFailedRows
   }
 
-  /** The aggregate expressions behind every pipeline count — shared by
-    * the dedicated fused-aggregate job (`pipelineCounts`) and the
-    * zero-extra-job `Dataset.observe` path (CountsMode.OnWrite), which
-    * attaches them to the final frame so the sink write itself yields
-    * the counts.
-    */
-  def pipelineAggExprs(rules: Seq[Rule]): Seq[Column] =
-    Seq(
-      count(lit(1)).as("_n"),
-      sum(when(anyFailed(rules), 1L).otherwise(0L)).as("_err"),
-      sum(when(hasFailedAction(rules, "drop"), 1L).otherwise(0L)).as("_drop")) ++
-      rules.zipWithIndex.map { case (_, i) =>
-        val (c, b) = bitOf(i)
-        sum(shiftright(col(c), b).bitwiseAND(lit(1L))).as(s"_c_$i")
-      }
+  /** Name of the [[pipelineAgg]] column and observed metric. */
+  private val CountsName = "_counts"
 
-  /** Decode `pipelineAggExprs` results from a named metrics map (the
-    * shape `Observation.get` returns; sums over zero rows are null).
+  /** The one aggregate behind every pipeline count — shared by the
+    * dedicated fused-aggregate job (`pipelineCounts`), the zero-extra-job
+    * `Dataset.observe` path (CountsMode.OnWrite), which attaches it to
+    * the final frame so the sink write itself yields the counts, and
+    * the per-micro-batch streaming observation.
+    */
+  def pipelineAgg(rules: Seq[Rule]): Column =
+    column(MaskCounts(maskColNames(rules.size).map(c => expression(col(c))),
+      actionBits(rules, "drop"), rules.size).toAggregateExpression())
+      .as(CountsName)
+
+  /** Decode the `pipelineAgg` array from a named metrics map (the shape
+    * `Observation.get` and streaming observed metrics give).
     */
   def countsFromMetrics(rules: Seq[Rule], metrics: Map[String, Any]): PipelineCounts = {
-    def l(name: String): Long = metrics.get(name) match {
-      case Some(v: Long)   => v
-      case Some(v: Number) => v.longValue()
-      case _               => 0L
+    val c: IndexedSeq[Long] = metrics.get(CountsName) match {
+      case Some(s: scala.collection.Seq[_]) => s.map(_.asInstanceOf[Number].longValue).toIndexedSeq
+      case _                                => IndexedSeq.empty
     }
-    PipelineCounts(l("_n"), l("_err"), l("_drop"),
-      rules.zipWithIndex.map { case (r, i) => r.rule -> l(s"_c_$i") }.toMap)
+    def l(i: Int): Long = if (i < c.size) c(i) else 0L
+    PipelineCounts(l(0), l(1), l(2),
+      rules.zipWithIndex.map { case (r, i) => r.rule -> l(i + 3) }.toMap)
   }
 
   /** input/error/dropped/per-rule counts in ONE global aggregate — the
     * reference issues separate count() jobs for input, errors, and
-    * output (core/expectations.py:960,660; writer.py:1061); over the
-    * masks they are four flavors of the same codegen'd sum.
+    * output (core/expectations.py:960,660; writer.py:1061).
     */
   def pipelineCounts(masked: DataFrame, rules: Seq[Rule]): PipelineCounts = {
-    if (rules.isEmpty) {
-      val n = masked.count()
-      return PipelineCounts(n, 0L, 0L, Map.empty)
-    }
-    val aggs = pipelineAggExprs(rules)
-    val row = masked.agg(aggs.head, aggs.tail: _*).head()
-    def l(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-    PipelineCounts(l(0), l(1), l(2),
-      rules.zipWithIndex.map { case (r, i) => r.rule -> l(i + 3) }.toMap)
+    val row = masked.agg(pipelineAgg(rules)).head()
+    countsFromMetrics(rules, Map(CountsName -> row.get(0)))
   }
 }
 

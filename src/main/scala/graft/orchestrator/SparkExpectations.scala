@@ -444,14 +444,13 @@ final class SparkExpectations(
       if (settings.rowDq) timed("row_dq") {
         var masked = MaskedRowDqEvaluator.run(df, rowRules)
         // streaming runs report batch counts as 0 (reference semantics),
-        // but the SAME count aggregates ride every micro-batch as named
-        // observed metrics — graft.streaming.StreamingDqMetricsListener
-        // decodes them per batch, giving streaming DQ the stats the
+        // but the SAME count aggregate rides every micro-batch as a named
+        // observed metric — graft.streaming.StreamingDqMetricsListener
+        // decodes it per batch, giving streaming DQ the stats the
         // reference only has in batch mode, at no extra pass
         if (streaming) {
-          val aggs = MaskedRowDqEvaluator.pipelineAggExprs(rowRules)
           masked = masked.observe(SparkExpectations.StreamingObservationName,
-            aggs.head, aggs.tail: _*)
+            MaskedRowDqEvaluator.pipelineAgg(rowRules))
           // agg_dq on streams: the reference skips these entirely (a
           // stream can't run a global aggregate), but per-micro-batch
           // they are just more observed metrics — source-side rules
@@ -510,13 +509,12 @@ final class SparkExpectations(
               failFailed.map(_.rule))
           }
         } else if (observeCounts) {
-          // zero extra jobs: the same count aggregates ride the final
-          // frame as observe metrics (collected by whichever downstream
+          // zero extra jobs: the same count aggregate rides the final
+          // frame as an observed metric (collected by whichever downstream
           // action runs first — target agg/query stage or the write);
           // error rows are still extracted from the persisted frame
           val obs = org.apache.spark.sql.Observation(s"graft_counts_${ctx.runId}")
-          val aggs = MaskedRowDqEvaluator.pipelineAggExprs(rowRules)
-          masked = persisted.observe(obs, aggs.head, aggs.tail: _*)
+          masked = persisted.observe(obs, MaskedRowDqEvaluator.pipelineAgg(rowRules))
           pendingCounts = Some(obs)
           pendingMasked = Some(persisted)
           errorDf = ErrorWriter.errorRowsMasked(persisted, rowRules, ctx)

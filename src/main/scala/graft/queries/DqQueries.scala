@@ -87,8 +87,9 @@ object DqQueries {
       import s.implicits._
       val li = Tables.load(s, dir, "lineitem")
       val res = new SparkExpectations(P, T, rowRules ++ aggRules, config).run(li)
-      Seq((res.stats.inputCount, res.stats.errorCount, res.stats.outputCount))
+      try Seq((res.stats.inputCount, res.stats.errorCount, res.stats.outputCount))
         .toDF("input_count", "error_count", "output_count")
+      finally res.unpersist()
     }
 
   private val statsOracle = s"""
@@ -207,9 +208,10 @@ object DqQueries {
     // (Dataset.observe metrics riding the target write; DuckDB checks the
     // observe path produces byte-identical counts to the fused aggregate)
     QueryDef("dq_stats_observe", (s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_obs_stats").toString
-      statsCountsFn(DqConfig(countsMode = CountsMode.OnWrite,
+      val out = java.nio.file.Files.createTempDirectory("graft_obs_stats")
+      try statsCountsFn(DqConfig(countsMode = CountsMode.OnWrite,
         writeTargetTablePath = Some(s"$out/target")))(s, dir)
+      finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
     }, Some(statsOracle)),
 
     // -- operator #11: agg-rule evaluation (one global aggregate) -----------

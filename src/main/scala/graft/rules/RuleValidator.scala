@@ -128,15 +128,27 @@ object RuleValidator {
 
   /** Live probe: analyze (not execute) each row/agg expectation against the
     * actual input schema, catching missing columns / type errors
-    * (reference probes with `df.select(expr(e)).limit(1)`).
+    * (reference probes with `df.select(expr(e)).limit(1)`). All row rules
+    * are analyzed in one select and all agg rules in another (the two
+    * cannot share one); only a type whose combined analysis throws is
+    * re-probed rule by rule, so the violations are those of a per-rule
+    * probe.
     */
-  def probe(df: DataFrame, rules: Seq[Rule]): Seq[Violation] =
-    rules.filter(r => r.ruleType == "row_dq" || r.ruleType == "agg_dq").flatMap { r =>
+  def probe(df: DataFrame, rules: Seq[Rule]): Seq[Violation] = {
+    def analyzes(rs: Seq[Rule]): Boolean =
+      try { df.select(rs.map(r => expr(r.expectation)): _*).queryExecution.analyzed; true }
+      catch { case _: Exception => false }
+    val perRule = Set("row_dq", "agg_dq").filter { t =>
+      val rs = rules.filter(_.ruleType == t)
+      rs.nonEmpty && !analyzes(rs)
+    }
+    rules.filter(r => perRule(r.ruleType)).flatMap { r =>
       try { df.select(expr(r.expectation)).queryExecution.analyzed; None }
       catch { case e: Exception =>
         Some(Violation(r, s"probe failed: ${e.getMessage.linesIterator.next()}"))
       }
     }
+  }
 
   def validate(spark: SparkSession, rules: Seq[Rule]): Seq[Violation] =
     rules.flatMap(validateOne(spark, _))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The streaming orchestrator path keeps the reference's contract
   * (stats report 0 on streams, drop-only enforcement,
   * core/expectations.py:523-546,960) but attaches the batch pipeline's
-  * count aggregates to every micro-batch as named observed metrics
+  * count aggregate to every micro-batch as a named observed metric
   * (`SparkExpectations.StreamingObservationName`). Register this
   * listener with `spark.streams.addListener` and every processed batch
   * delivers input/error/dropped/per-rule counts — computed inside the
@@ -31,7 +31,7 @@ final class StreamingDqMetricsListener(
     onBatch: (Long, PipelineCounts) => Unit = (_, _) => ())
   extends StreamingQueryListener {
 
-  // the orchestrator builds the _c_<i> metrics from ACTIVE row_dq rules
+  // the orchestrator builds the per-rule counts from ACTIVE row_dq rules
   // only — decode against the same subset so callers can pass their
   // full rule list without positionally misassigning per-rule counts
   private val rowRules = rules.filter(r =>

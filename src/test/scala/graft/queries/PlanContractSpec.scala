@@ -446,6 +446,17 @@ class PlanContractSpec extends SparkSpec {
     res.unpersist()
   }
 
+  test("dq_stats queries release their cache and their temp dir") {
+    spark.catalog.clearCache()
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def statsDirs = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_obs_stats")).toSet
+    val before = statsDirs
+    Seq("dq_stats", "dq_stats_observe").foreach(q => SparkEntry.queries(q)(spark, dir).collect())
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty shouldBe true
+    (statsDirs -- before) shouldBe empty
+  }
+
   test("ngram_lm_score: no forced broadcast; candidate explode stays un-cached") {
     // the model sides are vocab-bounded and AQE-broadcastable, but a
     // FORCED hint would pin an unbounded reference corpus build-side;

@@ -189,4 +189,25 @@ class RuleValidatorSpec extends SparkSpec {
     v.head.problem should include ("probe failed")
     RuleValidator.probe(df, Seq(r("row_dq", "a > 1"))) shouldBe empty
   }
+
+  test("batched probe yields exactly the per-rule probe's violations, in rule order") {
+    import spark.implicits._
+    val df = Seq((1, 2.0, "a"), (2, 3.0, "b")).toDF("id", "amount", "tag")
+    def named(t: String, name: String, e: String) = r(t, e).copy(rule = name)
+    val rules = Seq(
+      named("row_dq", "ok_row", "id > 0"),
+      named("agg_dq", "ok_agg", "sum(amount) > 1"),
+      named("row_dq", "missing_col", "no_such_col > 0"),
+      named("agg_dq", "bad_agg", "sum(amount) > 1 AND max(nope) > 0"),
+      named("row_dq", "unparsable", "id > AND"),
+      named("row_dq", "agg_in_row", "sum(amount) > 0"),
+      named("agg_dq", "row_in_agg", "amount > 0"),
+      named("query_dq", "query_not_probed", "(select count(*) from nowhere) > 0"),
+      named("row_dq", "ok_window", "count(*) OVER (PARTITION BY tag) = 1"))
+    val perRule = rules.flatMap(x => RuleValidator.probe(df, Seq(x)))
+    perRule.map(_.rule.rule) shouldBe Seq("missing_col", "bad_agg", "unparsable")
+    RuleValidator.probe(df, rules) shouldBe perRule
+    // a clean set passes both combined analyses
+    RuleValidator.probe(df, rules.filterNot(x => perRule.exists(_.rule == x))) shouldBe empty
+  }
 }
