@@ -1,7 +1,7 @@
 package graft.eval
 
 import graft.model.Rule
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Detailed agg/query evaluation: splits an expectation into
@@ -62,38 +62,4 @@ object DetailedAggEvaluator {
         if (ok) "pass" else "fail")
     }
   }
-}
-
-/** Detailed query evaluation + custom query output.
-  *
-  * For a composite query_dq expectation the sub-queries have already been
-  * split by [[graft.rules.CompositeQuerySplitter]]; each named sub-query is
-  * executed via `spark.sql` and its rows captured for the query-output
-  * table; the final expectation is evaluated as
-  * `SELECT (<expectation>) AS output` (reference: utils/actions.py:302-424).
-  */
-object DetailedQueryEvaluator {
-
-  final case class QueryDetail(
-      rule: Rule,
-      status: String,
-      subQueryOutputs: Map[String, String]
-  )
-
-  def evalBoolean(spark: SparkSession, expectation: String): Boolean = {
-    val row = spark.sql(s"SELECT ($expectation) AS output").head()
-    !row.isNullAt(0) && row.getBoolean(0)
-  }
-
-  def run(spark: SparkSession, rules: Seq[Rule],
-          subQueries: Map[String, Map[String, String]]): Seq[QueryDetail] =
-    rules.map { r =>
-      val subs = subQueries.getOrElse(r.rule, Map.empty)
-      val outputs = subs.map { case (alias, sql) =>
-        val rows = spark.sql(sql).collect()
-        alias -> rows.map(_.toSeq.mkString("[", ",", "]")).mkString(";")
-      }
-      val ok = scala.util.Try(evalBoolean(spark, r.expectation)).getOrElse(false)
-      QueryDetail(r, if (ok) "pass" else "fail", outputs)
-    }
 }

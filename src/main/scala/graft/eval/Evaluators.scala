@@ -2,49 +2,25 @@ package graft.eval
 
 import graft.model.{Rule, RuleType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import scala.jdk.CollectionConverters._
-
-/** Row-level rule evaluation — the engine's core distributed operator.
+/** Bitmask row-rule evaluation — the engine's one row-DQ representation.
   *
   * All row rules are applied in ONE projection over the input
-  * (reference: utils/actions.py:497-516,598-599): Catalyst collapses the
-  * N `when` chains into a single `Project` inside whole-stage codegen, so
-  * evaluation costs one scan regardless of rule count.
-  */
-object RowDqEvaluator {
-
-  def metaColName: String = "meta_row_dq_results"
-
-  /** Returns the input with one extra column `meta_row_dq_results:
-    * array<map<string,string>>` holding the failed-rule maps for that row
-    * (empty array when the row passes everything).
-    */
-  def run(df: DataFrame, rules: Seq[Rule]): DataFrame = {
-    require(rules.forall(_.ruleType == RuleType.RowDq.name), "row_dq rules only")
-    if (rules.isEmpty) return df.withColumn(metaColName, array())
-    val ruleCols = rules.map(RuleCompiler.ruleColumn)
-    val names    = rules.map(RuleCompiler.resultColName)
-    df.select(col("*") +: ruleCols: _*)
-      .withColumn(metaColName, RuleCompiler.collapseFailed(names))
-      .drop(names: _*)
-  }
-}
-
-/** Bitmask row-rule evaluation — the scale path used by the orchestrator.
-  *
-  * The map-based evaluator above matches the reference's error-table
-  * shape, but building an `array<map<string,string>>` per row is
-  * interpreted (higher-order functions are CodegenFallback) and bloats
-  * any cache of the result (~KB/row). Rule outcomes are really just N
-  * bits, so here each group of up to 64 rules compiles to ONE long
-  * column, a [[RuleMask]] whose generated code stays in small
+  * (reference: utils/actions.py:497-516,598-599), but rule outcomes are
+  * kept as N bits rather than the reference's per-row
+  * `array<map<string,string>>`: each group of up to 64 rules compiles to
+  * ONE long column, a [[RuleMask]] whose generated code stays in small
   * JIT-compilable methods — 8 bytes of DQ state per row. Every
   * downstream consumer (error filter, drop/fail gates) is a bitwise op,
   * every count comes from one [[MaskCounts]] aggregate, and the
-  * reference-compatible meta maps are reconstructed only for the
-  * (small) error subset.
+  * reference-shaped meta maps and action lists are decoded from the
+  * bits through one constant table per chunk ([[metaColumn]],
+  * [[actionsColumn]]).
   *
   * Measured at sf0.1 (600k rows, 5 rules incl. a window rule): map-based
   * cache materialization 60 s → masked 2 s.
@@ -53,10 +29,13 @@ object MaskedRowDqEvaluator {
   import org.apache.spark.sql.classic.GraftExpressionBridge.{column, expression}
 
   val MaskPrefix = "meta_dq_fail_mask_"
+  /** The reference's failed-rule maps column. */
+  val MetaCol = "meta_row_dq_results"
+  /** The reference's per-row action list column. */
+  val ActionCol = "meta_dq_actions"
 
   def numChunks(n: Int): Int = (n + 63) / 64
   def maskColNames(n: Int): Seq[String] = (0 until numChunks(n)).map(i => s"$MaskPrefix$i")
-  private def bitOf(i: Int): (String, Int) = (s"$MaskPrefix${i / 64}", i % 64)
 
   /** Input + one long mask column per 64 rules; bit set ⇔ rule FAILED
     * (NULL expectation result counts as failure, like the reference).
@@ -90,26 +69,45 @@ object MaskedRowDqEvaluator {
     }.reduce(_ || _)
   }
 
-  /** The reference-shaped `meta_row_dq_results` column (failed-rule maps)
-    * rebuilt from the mask — applied only where needed (error rows).
+  /** The reference's `meta_row_dq_results` type, exactly:
+    * `array<map<string,string>>` with non-null elements.
+    */
+  private val MetaType =
+    ArrayType(MapType(StringType, StringType, valueContainsNull = true), containsNull = false)
+  /** `meta_dq_actions` keeps its `array<string>` schema with nullable
+    * elements.
+    */
+  private val ActionsType = ArrayType(StringType, containsNull = true)
+
+  private def utf8(v: String): UTF8String = UTF8String.fromString(Option(v).getOrElse(""))
+
+  /** The per-rule `value`s of the rules whose bit is set, in rule order.
+    * Each 64-rule chunk is ONE literal array filtered by that chunk's
+    * mask, so the expression has O(chunks) nodes at any rule count.
+    */
+  private def decode(rules: Seq[Rule], tpe: ArrayType)(value: Rule => Any): Column =
+    if (rules.isEmpty) column(Literal(new GenericArrayData(Array.empty[Any]), tpe))
+    else concat(rules.grouped(64).zipWithIndex.map { case (chunk, ci) =>
+      val table = column(Literal(new GenericArrayData(chunk.map(value).toArray), tpe))
+      filter(table, (_, i) => bit_get(col(s"$MaskPrefix$ci"), i) === 1)
+    }.toSeq: _*)
+
+  /** The reference-shaped `meta_row_dq_results` column (failed-rule
+    * maps, keys in [[RuleCompiler.propEntries]] order plus
+    * `status=fail`) decoded from the mask.
     */
   def metaColumn(rules: Seq[Rule]): Column =
-    array_compact(array(rules.zipWithIndex.map { case (r, i) =>
-      val (c, b) = bitOf(i)
+    decode(rules, MetaType) { r =>
       val props = RuleCompiler.propEntries(r) :+ ("status" -> "fail")
-      when(shiftright(col(c), b).bitwiseAND(lit(1L)) === 1L,
-        map(props.flatMap { case (k, v) =>
-          Seq(lit(k), lit(Option(v).getOrElse(""))) }: _*))
-        .otherwise(lit(null).cast("map<string,string>"))
-    }: _*))
+      ArrayBasedMapData(props.map(p => utf8(p._1)).toArray, props.map(p => utf8(p._2)).toArray)
+    }
 
-  /** Total failed-row count + per-rule failed counts in ONE global
-    * aggregate over the masks (replaces the reference's explode +
-    * groupBy + count shuffle, sinks/utils/writer.py:1071-1158).
+  /** The failed rules' `action_if_failed` values, defaulted to
+    * ['ignore'] when no rule failed (reference: utils/udf.py:17-42).
     */
-  def failureCounts(masked: DataFrame, rules: Seq[Rule]): (Long, Map[String, Long]) = {
-    val c = pipelineCounts(masked, rules)
-    (c.errorRows, c.perRule)
+  def actionsColumn(rules: Seq[Rule]): Column = {
+    val acts = decode(rules, ActionsType)(r => utf8(r.actionIfFailed))
+    when(size(acts) === 0, array(lit("ignore"))).otherwise(acts)
   }
 
   /** Every count the batch pipeline needs, from one scan. */

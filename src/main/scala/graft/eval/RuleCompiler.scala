@@ -47,18 +47,8 @@ object RuleCompiler {
   }
 
   /** Collapse per-rule map columns into `meta_{rule_type}_results`,
-    * keeping only FAILED rule maps (reference: utils/actions.py:589-594 +
-    * utils/udf.py:5-14 strip the passing maps). Pure higher-order
-    * functions — no UDF.
-    */
-  def collapseFailed(ruleCols: Seq[String]): Column =
-    filter(
-      array(ruleCols.map(col): _*),
-      m => element_at(m, "status") === lit("fail")
-    )
-
-  /** Same collapse but keeping every rule map (used for agg/query stages
-    * where pass results also feed detailed stats).
+    * keeping every rule map (agg/query stages, where pass results also
+    * feed detailed stats).
     */
   def collapseAll(ruleCols: Seq[String]): Column =
     array(ruleCols.map(col): _*)

@@ -63,7 +63,12 @@ object Clustering {
         Similarity.cosine(col("vec"), col("cent")).as("cosine"))
   }
 
-  final case class KmeansModel(centroids: Array[Seq[Double]], k: Int)
+  /** Trained centroids; `k` is how many there are, which is fewer than
+    * requested when the corpus has fewer distinct seed vectors.
+    */
+  final case class KmeansModel(centroids: Array[Seq[Double]]) {
+    def k: Int = centroids.length
+  }
 
   /** Lloyd's k-means over (id, vec): seeded deterministic sample init,
     * `iters` distributed assign/mean rounds (delegates to
@@ -72,7 +77,7 @@ object Clustering {
     */
   def kmeans(vecs: DataFrame, k: Int, iters: Int = 3,
              seed: Long = 42L): KmeansModel =
-    KmeansModel(Similarity.ivfCentroids(vecs, k, iters, seed), k)
+    KmeansModel(Similarity.ivfCentroids(vecs, k, iters, seed))
 
   /** Per-cluster cardinality and mean cosine-to-centroid — the shard
     * quality report (a collapsed shard shows up as n≈0, an incoherent

@@ -11,10 +11,6 @@ import org.apache.spark.storage.StorageLevel
 /** Run configuration (subset of the reference's user_config surface). */
 final case class DqConfig(
     params: Map[String, String] = Map.empty,
-    /** persist the row-dq result before its multiple consumers — fixes the
-      * reference's known repeated-evaluation inefficiency (BASELINE.md).
-      */
-    persistRowDq: Boolean = true,
     /** drop the meta/action columns from the returned final DataFrame. */
     cleanFinalDf: Boolean = true,
     writeErrorTablePath: Option[String] = None,
@@ -460,8 +456,11 @@ final class SparkExpectations(
             SparkExpectations.StreamingSourceAggObservationName,
             grouped(RuleType.AggDq).filter(_.enableForSourceDqValidation))
         }
+        // batch runs persist the masked frame before its consumers —
+        // fixes the reference's known repeated-evaluation inefficiency
+        // (BASELINE.md)
         val persisted =
-          if (!streaming && config.persistRowDq) {
+          if (!streaming) {
             // close over a stable val: `masked` is reassigned below in
             // OnWrite mode, and unpersisting the observe-wrapped frame
             // would miss the cache entry and leak it
@@ -482,20 +481,11 @@ final class SparkExpectations(
 
         if (!streaming && !observeCounts) {
           // ONE aggregate yields input/error/output counts + per-rule
-          // summaries (and materializes the cache for consumers below)
-          val (pc, summaries) = ErrorWriter.pipelineSummaries(persisted, rowRules)
-          inputCount = pc.inputRows
-          errorCount = pc.errorRows
-          outputCount = pc.outputRows
-          rowSummaries = summaries
+          // failed counts (and materializes the cache for consumers below)
+          val pc = MaskedRowDqEvaluator.pipelineCounts(persisted, rowRules)
           errorDf = ErrorWriter.errorRowsMasked(persisted, rowRules, ctx)
           writeErrors(errorDf)
-          config.notifier.foreach { n =>
-            n.onThresholdBreach(productId, targetTable,
-              rowSummaries.filter(_.thresholdBreached(inputCount)), inputCount)
-            n.onIgnoreRuleFailures(rowRules,
-              rowSummaries.filter(_.failedRowCount > 0).map(_.rule).toSet)
-          }
+          harvestCounts(pc)
           // fail gate from the summaries already in hand — no extra job;
           // nothing is written on abort, so output reports 0
           val failFailed = rowSummaries.filter(s =>
@@ -532,10 +522,10 @@ final class SparkExpectations(
         finalDf =
           if (config.cleanFinalDf) kept.drop(maskCols: _*)
           else kept
-            .withColumn(RowDqEvaluator.metaColName,
+            .withColumn(MaskedRowDqEvaluator.MetaCol,
               MaskedRowDqEvaluator.metaColumn(rowRules))
-            .withColumn(ActionResolver.ActionCol,
-              ActionResolver.actionsColumn(RowDqEvaluator.metaColName))
+            .withColumn(MaskedRowDqEvaluator.ActionCol,
+              MaskedRowDqEvaluator.actionsColumn(rowRules))
             .drop(maskCols: _*)
         // Passed even with error rows: ignore/drop failures don't fail
         // the stage (reference golden matrix, conftest.py case 0/1)

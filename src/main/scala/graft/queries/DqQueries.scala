@@ -130,9 +130,9 @@ object DqQueries {
       val masked = MaskedRowDqEvaluator.run(li, rowRules)
       masked
         .filter(MaskedRowDqEvaluator.anyFailed(rowRules))
-        .withColumn(RowDqEvaluator.metaColName, MaskedRowDqEvaluator.metaColumn(rowRules))
+        .withColumn(MaskedRowDqEvaluator.MetaCol, MaskedRowDqEvaluator.metaColumn(rowRules))
         .select(col("l_orderkey"), col("l_linenumber"),
-          array_join(sort_array(transform(col(RowDqEvaluator.metaColName),
+          array_join(sort_array(transform(col(MaskedRowDqEvaluator.MetaCol),
             m => element_at(m, "rule"))), ",").as("failed_rules"))
         .orderBy("l_orderkey", "l_linenumber", "failed_rules")
     }, Some(s"""
@@ -165,7 +165,8 @@ object DqQueries {
       import s.implicits._
       val li = Tables.load(s, dir, "lineitem")
       val masked = MaskedRowDqEvaluator.run(li, rowRules)
-      ErrorWriter.summarizeMasked(masked, rowRules)._2
+      ErrorWriter.summariesFromCounts(
+        MaskedRowDqEvaluator.pipelineCounts(masked, rowRules), rowRules)
         .map(x => (x.rule, x.failedRowCount))
         .toDF("rule", "failed_count").orderBy("rule")
     }, Some(s"""
@@ -183,7 +184,8 @@ object DqQueries {
       val li = Tables.load(s, dir, "lineitem")
       val inputCount = li.count()
       val masked = MaskedRowDqEvaluator.run(li, rowRules)
-      ErrorWriter.summarizeMasked(masked, rowRules)._2
+      ErrorWriter.summariesFromCounts(
+        MaskedRowDqEvaluator.pipelineCounts(masked, rowRules), rowRules)
         .map(x => (x.rule, x.failedRowCount, x.failedRowCount * 100.0 / inputCount,
           x.errorDropThreshold, x.failedRowCount * 100.0 / inputCount > x.errorDropThreshold))
         .toDF("rule", "failed_count", "failed_pct", "threshold", "breached")

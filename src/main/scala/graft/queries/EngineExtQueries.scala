@@ -49,7 +49,8 @@ object EngineExtQueries {
       import s.implicits._
       val li = Tables.loadSpread(s, dir, "lineitem")
       val masked = MaskedRowDqEvaluator.run(li, wideRules)
-      ErrorWriter.summarizeMasked(masked, wideRules)._2
+      ErrorWriter.summariesFromCounts(
+        MaskedRowDqEvaluator.pipelineCounts(masked, wideRules), wideRules)
         .map(x => (x.rule, x.failedRowCount))
         .toDF("rule", "failed_count").orderBy("rule")
     }, Some((0 until 96).map { i =>

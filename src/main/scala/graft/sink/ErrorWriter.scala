@@ -1,7 +1,7 @@
 package graft.sink
 
 import graft.model.{Rule, RuleFailureSummary, RunContext}
-import graft.eval.RowDqEvaluator
+import graft.eval.MaskedRowDqEvaluator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,44 +15,24 @@ object ErrorWriter {
 
   /** Rows with at least one failed row rule, plus run metadata columns —
     * the error-table shape (reference: sinks/utils/writer.py:1031-1049).
-    * `exists(meta, m -> m.status == 'fail')` replaces the reference's
-    * OR-chain over per-rule size() checks; since `meta_row_dq_results`
-    * already holds only failed maps, a size check suffices.
-    */
-  def errorRows(rowDqDf: DataFrame, ctx: RunContext): DataFrame =
-    rowDqDf
-      .filter(size(col(RowDqEvaluator.metaColName)) > 0)
-      .withColumn(RunIdCol, lit(ctx.runId))
-      .withColumn(RunDateCol, lit(ctx.runDate))
-
-  /** Error rows rebuilt from the bitmask evaluation: filter on the mask
-    * (codegen), attach the reference-shaped meta maps only to this small
-    * subset, drop the mask columns.
+    * The filter is a bitwise test on the masks; the reference-shaped
+    * meta maps are decoded from the bits, and the mask columns dropped.
     */
   def errorRowsMasked(masked: DataFrame, rules: Seq[Rule], ctx: RunContext): DataFrame = {
     import graft.eval.MaskedRowDqEvaluator._
     masked
       .filter(anyFailed(rules))
-      .withColumn(RowDqEvaluator.metaColName, metaColumn(rules))
+      .withColumn(MetaCol, metaColumn(rules))
       .drop(maskColNames(rules.size): _*)
       .withColumn(RunIdCol, lit(ctx.runId))
       .withColumn(RunDateCol, lit(ctx.runDate))
   }
 
-  /** All pipeline counts + zero-filled per-rule summaries in ONE
-    * aggregate over the masked frame (no explode/groupBy shuffle, no
-    * separate input/output count jobs).
+  /** Zero-filled per-rule failure summaries from the pipeline counts
+    * (reference: sinks/utils/writer.py:1071-1158, which explodes the
+    * error rows and groups by rule instead).
     */
-  def pipelineSummaries(masked: DataFrame, rules: Seq[Rule])
-      : (graft.eval.MaskedRowDqEvaluator.PipelineCounts, Seq[RuleFailureSummary]) = {
-    val pc = graft.eval.MaskedRowDqEvaluator.pipelineCounts(masked, rules)
-    (pc, summariesFromCounts(pc, rules))
-  }
-
-  /** Zero-filled per-rule summaries from already-computed counts (shared
-    * by the fused-aggregate and observe-on-write counting paths).
-    */
-  def summariesFromCounts(pc: graft.eval.MaskedRowDqEvaluator.PipelineCounts,
+  def summariesFromCounts(pc: MaskedRowDqEvaluator.PipelineCounts,
                           rules: Seq[Rule]): Seq[RuleFailureSummary] =
     rules.map { r =>
       RuleFailureSummary(
@@ -62,37 +42,6 @@ object ErrorWriter {
         errorDropThreshold = r.errorDropThreshold,
         enableErrorDropAlert = r.enableErrorDropAlert)
     }
-
-  /** Error count + per-rule summaries (see pipelineSummaries). */
-  def summarizeMasked(masked: DataFrame, rules: Seq[Rule])
-      : (Long, Seq[RuleFailureSummary]) = {
-    val (pc, summaries) = pipelineSummaries(masked, rules)
-    (pc.errorRows, summaries)
-  }
-
-  /** Per-rule failed-row counts via explode + groupBy
-    * (reference: sinks/utils/writer.py:1071-1158), zero-filled for rules
-    * with no failures.
-    */
-  def summarize(errorDf: DataFrame, rules: Seq[Rule]): Seq[RuleFailureSummary] = {
-    val counts: Map[String, Long] =
-      if (rules.isEmpty) Map.empty
-      else errorDf
-        .select(explode(col(RowDqEvaluator.metaColName)).as("m"))
-        .select(element_at(col("m"), "rule").as("rule"))
-        .groupBy(col("rule")).count()
-        .collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .toMap
-    rules.map { r =>
-      RuleFailureSummary(
-        rule = r.rule, ruleType = r.ruleType, actionIfFailed = r.actionIfFailed,
-        tag = r.tag, description = r.description, columnName = r.columnName,
-        failedRowCount = counts.getOrElse(r.rule, 0L),
-        errorDropThreshold = r.errorDropThreshold,
-        enableErrorDropAlert = r.enableErrorDropAlert)
-    }
-  }
 
   /** Threshold check rows for stats + alerting
     * (reference: sinks/utils/writer.py:1160-1209).

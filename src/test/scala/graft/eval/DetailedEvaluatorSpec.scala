@@ -28,15 +28,4 @@ class DetailedEvaluatorSpec extends SparkSpec {
     byRule("max_bad").status shouldBe "fail"
     byRule("max_bad").actualValue.toString.toDouble shouldBe 4.0
   }
-
-  test("DetailedQueryEvaluator captures sub-query outputs and final status") {
-    df.createOrReplaceTempView("det_q_src")
-    val rule = Rule("p", "t", "query_dq", "cnt", "",
-      "(select count(*) from det_q_src) = 4", enableQuerydqCustomOutput = true)
-    val subs = Map("cnt" -> Map("n" -> "select count(*) as n from det_q_src"))
-    val out = DetailedQueryEvaluator.run(spark, Seq(rule), subs)
-    out should have size 1
-    out.head.status shouldBe "pass"
-    out.head.subQueryOutputs("n") shouldBe "[4]"
-  }
 }

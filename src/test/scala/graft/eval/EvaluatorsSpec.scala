@@ -7,27 +7,8 @@ import org.apache.spark.sql.functions._
 class EvaluatorsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def rowRule(name: String, e: String, action: String = "ignore") =
-    Rule("p1", "t1", "row_dq", name, "col1", e, action)
-
   private val df = Seq((0, 1, "a"), (1, 2, "b"), (2, 3, "c"))
     .toDF("row_id", "col1", "col2")
-
-  test("RowDqEvaluator attaches only failed maps; drops per-rule columns") {
-    val rules = Seq(rowRule("gt1", "col1 > 1"), rowRule("lt3", "col1 < 3"))
-    val out = RowDqEvaluator.run(df, rules)
-    out.columns.toSeq shouldBe Seq("row_id", "col1", "col2", RowDqEvaluator.metaColName)
-    val metas = out.orderBy("row_id")
-      .select(transform(col(RowDqEvaluator.metaColName), m => element_at(m, "rule")))
-      .collect().map(_.getSeq[String](0).toList)
-    metas shouldBe Array(List("gt1"), Nil, List("lt3"))
-  }
-
-  test("RowDqEvaluator with no rules yields empty meta") {
-    val out = RowDqEvaluator.run(df, Seq.empty)
-    out.select(org.apache.spark.sql.functions.size(col(RowDqEvaluator.metaColName)))
-      .collect().map(_.getInt(0)) shouldBe Array(0, 0, 0)
-  }
 
   test("AggDqEvaluator evaluates global aggregates in one projection") {
     val rules = Seq(

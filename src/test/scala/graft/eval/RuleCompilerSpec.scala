@@ -44,21 +44,6 @@ class RuleCompilerSpec extends SparkSpec {
     out shouldBe Array("pass", "fail")
   }
 
-  test("collapseFailed keeps only failed maps") {
-    val r2 = rule.copy(rule = "col1_lt_3", expectation = "col1 < 3")
-    val cols = Seq(rule, r2)
-    val named = df.select(col("*") +: cols.map(RuleCompiler.ruleColumn): _*)
-    val collapsed = named
-      .withColumn("meta", RuleCompiler.collapseFailed(cols.map(RuleCompiler.resultColName)))
-      .select(col("row_id"), transform(col("meta"), m => element_at(m, "rule")).as("failed"))
-      .orderBy("row_id").collect()
-      .map(r => r.getInt(0) -> r.getSeq[String](1).toList)
-    collapsed shouldBe Array(
-      0 -> List("col1_gt_1"), // col1=1 fails >1, passes <3
-      1 -> Nil,               // col1=2 passes both
-      2 -> List("col1_lt_3")) // col1=3 passes >1, fails <3
-  }
-
   test("window-function expectations compile (PK uniqueness)") {
     val dup = Seq((1, "x"), (1, "y"), (2, "z")).toDF("k", "v")
     val r = rule.copy(rule = "pk", expectation = "count(*) OVER (PARTITION BY k) = 1")

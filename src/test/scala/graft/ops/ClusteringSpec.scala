@@ -73,6 +73,13 @@ class ClusteringSpec extends SparkSpec {
       Clustering.meanCosine(vecs, init) - 1e-9
   }
 
+  test("kmeans over one repeated vector reports the centroids it holds") {
+    val same = (0L until 6L).map(i => (i, Seq(0.6, 0.8))).toDF("id", "vec")
+    val model = Clustering.kmeans(same, k = 2, iters = 2)
+    model.centroids.length shouldBe 1
+    model.k shouldBe model.centroids.length
+  }
+
   test("clusterStats reports cardinality and mean cosine per shard") {
     val cents = Array(Seq(1.0, 0.0), Seq(0.0, 1.0))
     val st = Clustering.clusterStats(vecs, cents)

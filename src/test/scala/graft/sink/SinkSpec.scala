@@ -1,7 +1,7 @@
 package graft.sink
 
 import graft.SparkSpec
-import graft.eval.RowDqEvaluator
+import graft.eval.MaskedRowDqEvaluator
 import graft.model.{Rule, RunContext}
 import org.apache.spark.sql.functions._
 
@@ -14,25 +14,37 @@ class SinkSpec extends SparkSpec {
       enableErrorDropAlert = true, errorDropThreshold = 10),
     Rule("p", "t", "row_dq", "gt9", "col1", "col1 > 9", "ignore"))
 
+  private def summaries(rs: Seq[Rule]) = ErrorWriter.summariesFromCounts(
+    MaskedRowDqEvaluator.pipelineCounts(MaskedRowDqEvaluator.run(df, rs), rs), rs)
+
   test("errorRows keeps failing rows with run metadata columns") {
     val ctx = RunContext.create("p", "t")
-    val err = ErrorWriter.errorRows(RowDqEvaluator.run(df, rules), ctx)
+    val err = ErrorWriter.errorRowsMasked(MaskedRowDqEvaluator.run(df, rules), rules, ctx)
     err.count() shouldBe 3 // every row fails gt9
     err.columns should contain allOf (ErrorWriter.RunIdCol, ErrorWriter.RunDateCol)
     err.select(ErrorWriter.RunIdCol).head().getString(0) shouldBe ctx.runId
   }
 
+  test("errorRowsMasked attaches only failed maps and drops the mask columns") {
+    val rs = Seq(rules.head, rules.head.copy(rule = "lt3", expectation = "col1 < 3"))
+    val err = ErrorWriter.errorRowsMasked(MaskedRowDqEvaluator.run(df, rs), rs,
+      RunContext.create("p", "t"))
+    err.columns.toSeq shouldBe Seq("row_id", "col1", MaskedRowDqEvaluator.MetaCol,
+      ErrorWriter.RunIdCol, ErrorWriter.RunDateCol)
+    err.orderBy("row_id")
+      .select(col("row_id"), transform(col(MaskedRowDqEvaluator.MetaCol), m => element_at(m, "rule")))
+      .collect().map(r => r.getInt(0) -> r.getSeq[String](1).toList) shouldBe
+      Array(0 -> List("gt1"), 2 -> List("lt3")) // row 1 (col1=2) passes both
+  }
+
   test("summarize zero-fills rules without failures") {
-    val ctx = RunContext.create("p", "t")
-    val err = ErrorWriter.errorRows(RowDqEvaluator.run(df, rules), ctx)
-    val sums = ErrorWriter.summarize(err, rules).map(s => s.rule -> s.failedRowCount).toMap
-    sums shouldBe Map("gt1" -> 1L, "gt9" -> 3L)
+    val gt0 = rules.head.copy(rule = "gt0", expectation = "col1 > 0")
+    summaries(rules :+ gt0).map(s => s.rule -> s.failedRowCount) shouldBe
+      Seq("gt1" -> 1L, "gt9" -> 3L, "gt0" -> 0L)
   }
 
   test("thresholds computes pct and breach flags") {
-    val ctx = RunContext.create("p", "t")
-    val err = ErrorWriter.errorRows(RowDqEvaluator.run(df, rules), ctx)
-    val th = ErrorWriter.thresholds(ErrorWriter.summarize(err, rules), inputCount = 3)
+    val th = ErrorWriter.thresholds(summaries(rules), inputCount = 3)
     val byRule = th.map(m => m("rule") -> m).toMap
     byRule("gt1")("error_drop_percentage") shouldBe "33.33"
     byRule("gt1")("threshold_breached") shouldBe "true"  // 33% > 10, alert enabled
