@@ -49,7 +49,6 @@ object Curation {
       TA.qualityScore(col(textCol)).as("quality"),
       TA.fingerprint(col(textCol)).as("fp"))
     val kept = scored.filter(col("quality") >= minQuality && col("n_tokens") >= minTokens)
-    val w = Window.partitionBy(col("fp")).orderBy(col(idCol))
     // persist only the NARROW survivor frame (id, lang, n_tokens) and
     // materialize it eagerly; the one text consumer (decontamination's
     // shingle index) re-reads the source and semi-joins the cached ids.
@@ -57,8 +56,7 @@ object Curation {
     // the scoring regexes until the cache fills), and at 100 TB caching
     // surviving corpus TEXT per stage is not an option while the id set
     // is a few longs per survivor.
-    val dedupedAll = kept.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val dedupedAll = TopK.rank(kept, Seq(col("fp")), Seq(col(idCol)), 1, "rn")
       .select(col(idCol), col(langCol), col("n_tokens"))
     val deduped =
       if (persist) dedupedAll.persist(StorageLevel.MEMORY_AND_DISK) else dedupedAll
@@ -1294,13 +1292,10 @@ object Curation {
       .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
     val dfT = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("score").desc, col("token"))
-    tf.join(dfT, Seq("token")).crossJoin(nDocs)
+    val scored = tf.join(dfT, Seq("token")).crossJoin(nDocs)
       .withColumn("score",
         col("tf").cast("double") * (col("n_docs") / col("df").cast("double")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topN)
+    TopK.rank(scored, Seq(col(idCol)), Seq(col("score").desc, col("token")), topN)
       .select(col(idCol), col("token"), col("tf"), col("df"),
         col("score"), col("rank"))
   }

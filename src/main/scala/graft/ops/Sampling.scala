@@ -97,14 +97,9 @@ object Sampling {
   def stratifiedFixedN(df: DataFrame, strataCol: String, idCol: String, n: Int,
                        saltBuckets: Int = 0): DataFrame = {
     require(n > 0, "n must be positive")
-    def topN(d: DataFrame, parts: Seq[Column]): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(parts: _*)
-        .orderBy(hashBucket(col(idCol)).asc, col(idCol).asc)
-      d.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= n)
+    def topN(d: DataFrame, parts: Seq[Column]): DataFrame =
+      TopK.rank(d, parts, Seq(hashBucket(col(idCol)).asc, col(idCol).asc), n, "__rn")
         .drop("__rn")
-    }
     if (saltBuckets <= 1) topN(df, Seq(col(strataCol)))
     else {
       // salt off a DIFFERENT fold of the id than the rank key so cell

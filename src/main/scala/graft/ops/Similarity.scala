@@ -1,18 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths:
-  *   - brute-force cosine top-k — the exact baseline; broadcast the query
-  *     side, one pass over the corpus, per-query top-k via window.
-  *   - SRP-LSH (signed random projections) — bucket by hyperplane sign
-  *     bits so only same-bucket pairs are scored; the 100 TB path (the
-  *     shuffle key is the bucket, candidate volume is corpus-size
-  *     independent per query).
+  * Every retrieval tier is one *candidate source* × one *scorer*, ranked
+  * per query by the one shared [[TopK.rank]] (cosine desc, neighbor id
+  * asc):
+  *   - candidate sources: [[allPairs]] (the exact baselines: a cross
+  *     join), [[probe]] (IVF: queries explode over their probed cells and
+  *     equi-join the cell-keyed corpus) and [[srp]] (multi-table SRP-LSH:
+  *     same-bucket pairs, deduped before scoring);
+  *   - scorers: [[cosine]] (fp64) and [[cosineQ8]] (int8);
+  *   - the coarse-then-refine tiers (RP, IVF re-rank) end in one exact
+  *     re-rank tail, [[rerankExact]].
   *
   * All arithmetic is double left-fold (cast each float element up first)
   * so results are bit-deterministic and oracle-comparable.
@@ -39,6 +41,42 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column =
     fromExpr(graft.functions.VecCosine(toExpr(a), toExpr(b)))
+
+  /** Cosine of two int8-quantized vectors (scale-invariant, so the
+    * per-vector scale never enters).
+    */
+  private def cosineQ8(a: Column, b: Column): Column =
+    fromExpr(graft.functions.VecCosineI8(toExpr(a), toExpr(b)))
+
+  /** Candidate source of the exact tiers: every (query, corpus) pair that
+    * passes `keep` (the self or label predicate).
+    */
+  private def allPairs(q: DataFrame, c: DataFrame, keep: Column): DataFrame =
+    q.crossJoin(c).filter(keep)
+
+  /** IVF candidate source: each query row (`qCols` of `queries`) explodes
+    * over its `nprobe` nearest cells and equi-joins the cell-keyed
+    * `cells`; pairs failing `keep` are dropped.
+    */
+  private def probe(queries: DataFrame, qCols: Seq[Column], cents: Array[Seq[Double]],
+                    nprobe: Int, cells: DataFrame, keep: Column): DataFrame =
+    queries.select(qCols :+ explode(probeCells(col("vec"), cents, nprobe)).as("cell"): _*)
+      .join(cells, Seq("cell"))
+      .filter(keep)
+
+  private def notSelf: Column = col("query_id") =!= col("neighbor_id")
+
+  /** Score every candidate into `cosine` and keep each query's top k. */
+  private def scoreTopK(cands: DataFrame, score: Column, k: Int): DataFrame =
+    TopK.rank(cands.withColumn("cosine", score), Seq(col("query_id")),
+      Seq(col("cosine").desc, col("neighbor_id")), k)
+
+  /** The (query_id, neighbor_id, rank, cosine) top-k of a candidate frame. */
+  private def ranked(cands: DataFrame, score: Column, k: Int): DataFrame =
+    scoreTopK(cands, score, k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+
+  private def fp64: Column = cosine(col("qv"), col("cv"))
 
   /** Symmetric int8 quantization of an (id, vec) frame → (id, qvec
     * array<tinyint>, qscale): 8x smaller than the double vectors (4x vs
@@ -81,15 +119,7 @@ object Similarity {
   def quantizedTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = quantizeInt8(queries).select(col("id").as("query_id"), col("qvec").as("qa"))
     val c = quantizeInt8(corpus).select(col("id").as("neighbor_id"), col("qvec").as("qb"))
-    val scored = q.crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        fromExpr(graft.functions.VecCosineI8(toExpr(col("qa")), toExpr(col("qb")))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+    ranked(allPairs(q, c, notSelf), cosineQ8(col("qa"), col("qb")), k)
   }
 
   /** Exact top-k neighbors for each query vector (brute force).
@@ -98,14 +128,7 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"))
     val c = corpus.select(col("id").as("neighbor_id"), col("vec").as("cv"))
-    val scored = broadcast(q).crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+    ranked(allPairs(broadcast(q), c, notSelf), fp64, k)
   }
 
   /** Hard-negative mining: for each vector, the top-k most similar
@@ -122,18 +145,7 @@ object Similarity {
   def hardNegativeTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
       col("label").as("ql"))
-    val c = corpus.select(col("id").as("neighbor_id"), col("vec").as("cv"),
-      col("label").as("cl"))
-    val scored = q.crossJoin(c)
-      .filter(col("ql") =!= col("cl"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("ql").as("query_label"),
-        col("neighbor_id"), col("cl").as("neighbor_label"),
-        col("rank"), col("cosine"))
+    hardNegatives(allPairs(q, labelledCorpus(corpus), col("ql") =!= col("cl")), k)
   }
 
   /** The IVF scale tier of [[hardNegativeTopK]]: the label predicate
@@ -150,22 +162,33 @@ object Similarity {
                           nlist: Int = 16, nprobe: Int = 4,
                           iters: Int = 3): DataFrame = {
     require(k > 0, "k must be positive")
-    val cents = ivfCentroids(corpus, nlist, iters)
-    val c = corpus.select(col("id").as("neighbor_id"), col("vec").as("cv"),
-      col("label").as("cl"), nearestCell(col("vec"), cents).as("cell"))
-    val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
-      col("label").as("ql"),
-      explode(probeCells(col("vec"), cents, nprobe)).as("cell"))
-    val scored = q.join(c, Seq("cell"))
-      .filter(col("ql") =!= col("cl"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    hardNegatives(labelledProbe(queries, corpus, "ql", nlist, nprobe, iters,
+      col("ql") =!= col("cl")), k)
+  }
+
+  /** The hard-negative top-k of labelled candidates, both labels kept. */
+  private def hardNegatives(cands: DataFrame, k: Int): DataFrame =
+    scoreTopK(cands, fp64, k)
       .select(col("query_id"), col("ql").as("query_label"),
         col("neighbor_id"), col("cl").as("neighbor_label"),
         col("rank"), col("cosine"))
+
+  /** The corpus side of the labelled tiers: (neighbor_id, cv, cl), plus
+    * `extra` columns (the IVF cell).
+    */
+  private def labelledCorpus(corpus: DataFrame, extra: Column*): DataFrame =
+    corpus.select(Seq(col("id").as("neighbor_id"), col("vec").as("cv"),
+      col("label").as("cl")) ++ extra: _*)
+
+  /** [[probe]] candidates of the labelled IVF tiers, trained on the fly:
+    * query label as `qLabel`, corpus label as `cl`.
+    */
+  private def labelledProbe(queries: DataFrame, corpus: DataFrame, qLabel: String,
+                            nlist: Int, nprobe: Int, iters: Int,
+                            keep: Column): DataFrame = {
+    val cents = ivfCentroids(corpus, nlist, iters)
+    probe(queries, Seq(col("id").as("query_id"), col("vec").as("qv"), col("label").as(qLabel)),
+      cents, nprobe, labelledCorpus(corpus, nearestCell(col("vec"), cents).as("cell")), keep)
   }
 
   /** k-NN majority-vote label classification over embeddings — the
@@ -186,12 +209,7 @@ object Similarity {
     require(k > 0, "k must be positive")
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
       col("label").as("true_label"))
-    val c = corpus.select(col("id").as("neighbor_id"), col("vec").as("cv"),
-      col("label").as("cl"))
-    val scored = q.crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    majorityVote(topKOf(scored, k))
+    majorityVote(scoreTopK(allPairs(q, labelledCorpus(corpus), notSelf), fp64, k))
   }
 
   /** The IVF scale tier of [[knnClassify]]: the same rank-k cut and the
@@ -211,16 +229,8 @@ object Similarity {
                      nlist: Int = 16, nprobe: Int = 4,
                      iters: Int = 3): DataFrame = {
     require(k > 0, "k must be positive")
-    val cents = ivfCentroids(corpus, nlist, iters)
-    val c = corpus.select(col("id").as("neighbor_id"), col("vec").as("cv"),
-      col("label").as("cl"), nearestCell(col("vec"), cents).as("cell"))
-    val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
-      col("label").as("true_label"),
-      explode(probeCells(col("vec"), cents, nprobe)).as("cell"))
-    val scored = q.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    majorityVote(topKOf(scored, k))
+    majorityVote(scoreTopK(labelledProbe(queries, corpus, "true_label", nlist, nprobe,
+      iters, notSelf), fp64, k))
   }
 
   /** Vote a prediction from ANY (query_id, neighbor_id) top-k stream —
@@ -243,12 +253,6 @@ object Similarity {
     majorityVote(nn)
   }
 
-  private def topKOf(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** Collapse ranked (query_id, true_label, cl) neighbor rows into one
     * prediction per query: count votes per candidate label, keep the
     * (votes DESC, label ASC) winner.
@@ -256,9 +260,7 @@ object Similarity {
   private def majorityVote(nn: DataFrame): DataFrame = {
     val votes = nn.groupBy(col("query_id"), col("true_label"), col("cl"))
       .agg(count(lit(1)).as("votes"))
-    val vw = Window.partitionBy(col("query_id"))
-      .orderBy(col("votes").desc, col("cl"))
-    votes.withColumn("vr", row_number().over(vw)).filter(col("vr") === 1)
+    TopK.rank(votes, Seq(col("query_id")), Seq(col("votes").desc, col("cl")), 1, "vr")
       .select(col("query_id"), col("true_label"),
         col("cl").as("predicted_label"), col("votes"),
         (col("cl") === col("true_label")).as("correct"))
@@ -380,7 +382,7 @@ object Similarity {
                    tag: String = "rp"): DataFrame =
     rerankExact(
       rpTopK(queries, corpus, k * overFetch, dIn, dOut, tag),
-      queries, corpus, k)
+      queries, fullVectors(corpus), k)
 
   /** [[rpRerankTopK]] with IVF candidate generation IN the reduced
     * space: project both sides (4x cheaper vectors), bucket and probe
@@ -397,25 +399,23 @@ object Similarity {
     rerankExact(
       ivfTopK(randomProject(queries, dIn, dOut, tag),
         randomProject(corpus, dIn, dOut, tag), k * overFetch, nlist, nprobe),
-      queries, corpus, k)
+      queries, fullVectors(corpus), k)
 
-  /** The exact re-rank tail shared by the coarse-then-refine tiers:
-    * score ONLY the candidate pairs at full dimension (keyed joins —
-    * full-dim vectors travel for candidate rows alone) and keep the
-    * exact top-k per query.
+  /** The (neighbor_id, cv) lookup side of the RP tiers' re-rank. */
+  private def fullVectors(corpus: DataFrame): DataFrame =
+    corpus.select(col("id").as("neighbor_id"), col("vec").as("cv"))
+
+  /** The exact re-rank tail shared by the coarse-then-refine tiers
+    * ([[rpRerankTopK]], [[rpIvfRerankTopK]], [[ivfTopKIndexedRerank]]):
+    * score ONLY the candidate pairs at full dimension against the
+    * (neighbor_id, cv) `vectors` (keyed joins — full-dim vectors travel
+    * for candidate rows alone) and keep the exact top-k per query.
     */
   private def rerankExact(cands: DataFrame, queries: DataFrame,
-                          corpus: DataFrame, k: Int): DataFrame = {
-    val rescored = cands.select(col("query_id"), col("neighbor_id"))
+                          vectors: DataFrame, k: Int): DataFrame =
+    ranked(cands.select(col("query_id"), col("neighbor_id"))
       .join(queries.select(col("id").as("query_id"), col("vec").as("qv")), Seq("query_id"))
-      .join(corpus.select(col("id").as("neighbor_id"), col("vec").as("cv")), Seq("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
-  }
+      .join(vectors, Seq("neighbor_id")), fp64, k)
 
   /** SRP bucket id: one sign bit per hyperplane. One codegen kernel
     * call per row (graft.functions.SrpBucket) instead of numPlanes
@@ -430,16 +430,40 @@ object Similarity {
     * table). Single-table SRP has poor recall on unclustered data: a
     * neighbor at 75° disagrees per plane with p=0.42, so an 8-bit single
     * table keeps it with p≈0.01; eight 4-bit tables keep it with p≈0.55.
+    * Rows carry `vec` (the full-precision `col("vec")`, or its int8
+    * quantization — computed ONCE per row, before the table explode);
+    * the bucket bits always come from the full-precision vector.
     */
-  private def tableBuckets(vecs: DataFrame, idAlias: String,
+  private def tableBuckets(vecs: DataFrame, idAlias: String, vec: Column,
                            numTables: Int, planesPerTable: Int, dim: Int): DataFrame = {
     val entries = (0 until numTables).map { t =>
       val planes = hyperplanes(planesPerTable, dim, seed = 42L + t)
       struct(lit(t).as("tbl"), srpBucket(col("vec"), planes).as("bucket"))
     }
-    vecs.select(col("id").as(idAlias), col("vec"),
-        explode(array(entries: _*)).as("tb"))
-      .select(col(idAlias), col("vec"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
+    val exploded = vecs.select(col("id").as(idAlias), vec, explode(array(entries: _*)).as("tb"))
+    exploded.select(col(idAlias), col(exploded.columns(1)),
+      col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
+  }
+
+  /** SRP candidate source: (query_id, `qName`, neighbor_id, `cName`)
+    * pairs colliding in at least one table, self-pairs dropped, each pair
+    * ONCE (deduped before scoring). No broadcast hint: the exploded query
+    * side is queries x numTables rows carrying vectors — forcing it
+    * build-side OOMs on a large query batch. AQE broadcasts small batches
+    * on its own; otherwise the SMJ against a (tbl, bucket)-bucketed
+    * corpus shuffles only the query side.
+    */
+  private def srp(queries: DataFrame, corpus: DataFrame, vec: Column,
+                  qName: String, cName: String,
+                  numTables: Int, planesPerTable: Int, dim: Int): DataFrame = {
+    def side(df: DataFrame, idAlias: String, as: String): DataFrame = {
+      val t = tableBuckets(df, idAlias, vec, numTables, planesPerTable, dim)
+      t.withColumnRenamed(t.columns(1), as)
+    }
+    side(queries, "query_id", qName).join(side(corpus, "neighbor_id", cName), Seq("tbl", "bucket"))
+      .filter(notSelf)
+      .select("query_id", qName, "neighbor_id", cName)
+      .dropDuplicates("query_id", "neighbor_id")
   }
 
   /** Approximate top-k via multi-table SRP-LSH: score only candidates
@@ -450,43 +474,9 @@ object Similarity {
     */
   def srpLshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                  numTables: Int = 8, planesPerTable: Int = 4,
-                 dim: Int = 64): DataFrame = {
-    val q = tableBuckets(queries, "query_id", numTables, planesPerTable, dim)
-      .withColumnRenamed("vec", "qv")
-    val c = tableBuckets(corpus, "neighbor_id", numTables, planesPerTable, dim)
-      .withColumnRenamed("vec", "cv")
-    // no broadcast hint: the exploded query side is queries x numTables
-    // rows carrying full vectors — forcing it build-side OOMs on a large
-    // query batch. AQE broadcasts small batches on its own; otherwise the
-    // SMJ against a (tbl, bucket)-bucketed corpus shuffles only the
-    // query side (same rationale as ivfTopKIndexed).
-    val cands = q.join(c, Seq("tbl", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "qv", "neighbor_id", "cv")
-      .dropDuplicates("query_id", "neighbor_id")
-    val scored = cands.withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
-  }
-
-  /** [[tableBuckets]] carrying the int8-quantized vector instead of the
-    * full-precision one: quantize ONCE per row (before the table
-    * explode), so the candidate join ships 8× smaller payloads.
-    */
-  private def tableBucketsQ8(vecs: DataFrame, idAlias: String,
-                             numTables: Int, planesPerTable: Int, dim: Int): DataFrame = {
-    val entries = (0 until numTables).map { t =>
-      val planes = hyperplanes(planesPerTable, dim, seed = 42L + t)
-      struct(lit(t).as("tbl"), srpBucket(col("vec"), planes).as("bucket"))
-    }
-    vecs.select(col("id").as(idAlias), quantizeCol(col("vec")).as("qv"),
-        explode(array(entries: _*)).as("tb"))
-      .select(col(idAlias), col("qv"), col("tb.tbl").as("tbl"),
-        col("tb.bucket").as("bucket"))
-  }
+                 dim: Int = 64): DataFrame =
+    ranked(srp(queries, corpus, col("vec"), "qv", "cv", numTables, planesPerTable, dim),
+      fp64, k)
 
   /** [[srpLshTopK]] with int8 scoring — the SRP twin of
     * [[ivfTopKIndexedQ8]]: same multi-table candidate generation (the
@@ -497,23 +487,9 @@ object Similarity {
     */
   def srpLshTopKQ8(queries: DataFrame, corpus: DataFrame, k: Int,
                    numTables: Int = 8, planesPerTable: Int = 4,
-                   dim: Int = 64): DataFrame = {
-    val q = tableBucketsQ8(queries, "query_id", numTables, planesPerTable, dim)
-      .withColumnRenamed("qv", "qa")
-    val c = tableBucketsQ8(corpus, "neighbor_id", numTables, planesPerTable, dim)
-      .withColumnRenamed("qv", "qb")
-    val cands = q.join(c, Seq("tbl", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "qa", "neighbor_id", "qb")
-      .dropDuplicates("query_id", "neighbor_id")
-    val scored = cands.withColumn("cosine",
-      fromExpr(graft.functions.VecCosineI8(toExpr(col("qa")), toExpr(col("qb")))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
-  }
+                   dim: Int = 64): DataFrame =
+    ranked(srp(queries, corpus, quantizeCol(col("vec")).as("qv"), "qa", "qb",
+      numTables, planesPerTable, dim), cosineQ8(col("qa"), col("qb")), k)
 
   /** IVF (inverted-file) top-k: a coarse quantizer of `nlist` centroids
     * partitions the corpus; each query probes its `nprobe` nearest
@@ -588,9 +564,7 @@ object Similarity {
     val sampleN = nlist.toLong * sampleFactor
     val train =
       if (knownCount.exists(_ > 6L * sampleN)) {
-        val n = knownCount.get
-        val m = 1L << 20
-        val keep = math.max(1L, m * sampleN / n)
+        val (m, keep) = lloydSampleKeep(knownCount.get, sampleN)
         corpus.select(col("vec"))
           .filter(pmod(xxhash64(col("vec"), lit(seed), lit(0x9E3779B9L)),
             lit(m)) < lit(keep))
@@ -607,6 +581,21 @@ object Similarity {
     }
     if (!(train eq corpus)) train.unpersist()
     cents
+  }
+
+  /** Sampled-Lloyd hash filter `(m, keep)`: a row trains iff its hash mod
+    * `m` is below `keep`, so the expected sample is `n·keep/m`. `m` is
+    * 2^20, or the smallest power of two ≥ ⌈n / sampleN⌉ when that is
+    * larger: up to n = 2^20·sampleN the filter is `keep = 2^20·sampleN/n`
+    * over 2^20 (≥ 1, the original rule), and past it the modulus grows
+    * with n, keeping the expected sample in (sampleN/2, sampleN] instead
+    * of letting a floor of `keep = 1` over 2^20 grow it linearly in n.
+    */
+  private[ops] def lloydSampleKeep(n: Long, sampleN: Long): (Long, Long) = {
+    val need = (n + sampleN - 1) / sampleN
+    var m = 1L << 20
+    while (m < need) m <<= 1
+    (m, m * sampleN / n)
   }
 
   /** Index of the nearest centroid by cosine — a native codegen
@@ -764,12 +753,32 @@ object Similarity {
     * re-running Lloyd (the [[marginPairsIvf]] shared-training shape).
     */
   def buildIvfIndexWith(corpus: DataFrame,
-                        cents: Array[Seq[Double]]): IvfIndex = {
-    IvfIndex(cents,
-      corpus.select(col("id").as("neighbor_id"), col("vec").as("cv"),
-        nearestCell(col("vec"), cents).as("cell"),
-        quantizeCol(col("vec")).as("qcv")),
-      cents.length)
+                        cents: Array[Seq[Double]]): IvfIndex =
+    IvfIndex(cents, assignCells(corpus, cents), cents.length)
+
+  /** An (id, vec) frame as index rows under `cents`: (neighbor_id, cv,
+    * cell, qcv), the vector pre-quantized once.
+    */
+  private def assignCells(vecs: DataFrame, cents: Array[Seq[Double]]): DataFrame =
+    vecs.select(col("id").as("neighbor_id"), col("vec").as("cv"),
+      nearestCell(col("vec"), cents).as("cell"),
+      quantizeCol(col("vec")).as("qcv"))
+
+  /** Write the centroid matrix as the one-row-per-cell `<prefix>_centroids`. */
+  private def saveCentroids(cents: Array[Seq[Double]], spark: org.apache.spark.sql.SparkSession,
+                            prefix: String): Unit = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
+      .toDF("cell", "centroid")
+      .write.mode("overwrite").saveAsTable(s"${prefix}_centroids")
+  }
+
+  /** Read back a matrix written by [[saveCentroids]], in cell order. */
+  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+                            prefix: String): Array[Seq[Double]] = {
+    import spark.implicits._
+    spark.table(s"${prefix}_centroids")
+      .orderBy("cell").as[(Int, Seq[Double])].collect().map(_._2)
   }
 
   /** Persist an [[IvfIndex]] as catalog tables: `<prefix>_corpus`
@@ -779,21 +788,15 @@ object Similarity {
     * (one row per cell) that reloads into the driver-held matrix.
     */
   def saveIvfIndex(index: IvfIndex, prefix: String, buckets: Int = 16): Unit = {
-    val spark = index.corpus.sparkSession
-    import spark.implicits._
     index.corpus.write.mode("overwrite")
       .bucketBy(buckets, "cell").saveAsTable(s"${prefix}_corpus")
-    index.centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_centroids")
+    saveCentroids(index.centroids, index.corpus.sparkSession, prefix)
   }
 
   /** Load an [[IvfIndex]] persisted by [[saveIvfIndex]]. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
                    prefix: String): IvfIndex = {
-    import spark.implicits._
-    val cents = spark.table(s"${prefix}_centroids")
-      .orderBy("cell").as[(Int, Seq[Double])].collect().map(_._2)
+    val cents = loadCentroids(spark, prefix)
     val corpus = spark.table(s"${prefix}_corpus")
     // indexes persisted before the q8 tier lack qcv — derive it in the
     // scan projection (keeps the bucketed layout; no extra pass)
@@ -819,9 +822,7 @@ object Similarity {
                        batch: DataFrame, prefix: String,
                        buckets: Int = 16): IvfIndex = {
     val idx = loadIvfIndex(spark, prefix)
-    val assigned = batch.select(col("id").as("neighbor_id"), col("vec").as("cv"),
-      nearestCell(col("vec"), idx.centroids).as("cell"),
-      quantizeCol(col("vec")).as("qcv"))
+    val assigned = assignCells(batch, idx.centroids)
     // an index persisted before the q8 tier has no qcv column — match
     // the standing schema rather than failing the append
     val out = if (spark.table(s"${prefix}_corpus").columns.contains("qcv"))
@@ -838,18 +839,9 @@ object Similarity {
     * corpus table the sort-merge fallback shuffles only the query side.
     */
   def ivfTopKIndexed(queries: DataFrame, index: IvfIndex, k: Int,
-                     nprobe: Int = 4): DataFrame = {
-    val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
-      explode(probeCells(col("vec"), index.centroids, nprobe)).as("cell"))
-    val scored = q.join(index.corpus, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
-  }
+                     nprobe: Int = 4): DataFrame =
+    ranked(probe(queries, Seq(col("id").as("query_id"), col("vec").as("qv")),
+      index.centroids, nprobe, index.corpus, notSelf), fp64, k)
 
   /** The production int8 ANN tier: IVF candidate pruning + int8
     * scoring. Queries quantize on the fly (one kernel call per query
@@ -863,21 +855,14 @@ object Similarity {
     * near-equal cosines (`sim_topk_q8_ivf` recall row bounds it).
     */
   def ivfTopKIndexedQ8(queries: DataFrame, index: IvfIndex, k: Int,
-                       nprobe: Int = 4): DataFrame = {
-    val q = queries.select(col("id").as("query_id"),
-      quantizeCol(col("vec")).as("qqv"),
-      explode(probeCells(col("vec"), index.centroids, nprobe)).as("cell"))
-    val scored = q
-      .join(index.corpus.select(col("cell"), col("neighbor_id"), col("qcv")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        fromExpr(graft.functions.VecCosineI8(toExpr(col("qqv")), toExpr(col("qcv")))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
-  }
+                       nprobe: Int = 4): DataFrame =
+    ranked(probe(queries, quantizedQuery, index.centroids, nprobe,
+      index.corpus.select(col("cell"), col("neighbor_id"), col("qcv")), notSelf),
+      cosineQ8(col("qqv"), col("qcv")), k)
+
+  /** Query columns of the int8 probe tiers: (query_id, qqv). */
+  private def quantizedQuery: Seq[Column] =
+    Seq(col("id").as("query_id"), quantizeCol(col("vec")).as("qqv"))
 
   /** Train-and-probe convenience for the q8 IVF tier (the index-once
     * deployment path is [[buildIvfIndex]]/[[saveIvfIndex]] +
@@ -987,9 +972,7 @@ object Similarity {
       .bucketBy(buckets, "cell").saveAsTable(s"${prefix}_cells")
     index.vectors.write.mode("overwrite")
       .bucketBy(buckets, "neighbor_id").saveAsTable(s"${prefix}_vectors")
-    index.centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_centroids")
+    saveCentroids(index.centroids, spark, prefix)
     Seq(index.nassign).toDF("nassign")
       .write.mode("overwrite").saveAsTable(s"${prefix}_meta")
   }
@@ -1042,9 +1025,7 @@ object Similarity {
   /** Load an [[IvfRerankIndex]] persisted by [[saveIvfRerankIndex]]. */
   def loadIvfRerankIndex(spark: org.apache.spark.sql.SparkSession,
                          prefix: String): IvfRerankIndex = {
-    import spark.implicits._
-    val cents = spark.table(s"${prefix}_centroids")
-      .orderBy("cell").as[(Int, Seq[Double])].collect().map(_._2)
+    val cents = loadCentroids(spark, prefix)
     IvfRerankIndex(cents,
       spark.table(s"${prefix}_cells"),
       spark.table(s"${prefix}_vectors"),
@@ -1064,29 +1045,13 @@ object Similarity {
                            k: Int, nprobe: Int = 4,
                            overFetch: Int = 4): DataFrame = {
     require(overFetch >= 1, "need overFetch >= 1")
-    val q = queries.select(col("id").as("query_id"),
-      quantizeCol(col("vec")).as("qqv"),
-      explode(probeCells(col("vec"), index.centroids, nprobe)).as("cell"))
-    val cand = q.join(index.cells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("q8",
-        fromExpr(graft.functions.VecCosineI8(toExpr(col("qqv")), toExpr(col("qcv")))))
+    val cand = probe(queries, quantizedQuery, index.centroids, nprobe, index.cells, notSelf)
+      .withColumn("q8", cosineQ8(col("qqv"), col("qcv")))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("q8")).as("q8"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("q8").desc, col("neighbor_id"))
-    val over = cand.withColumn("r", row_number().over(w))
-      .filter(col("r") <= k * overFetch)
-      .select(col("query_id"), col("neighbor_id"))
-    val rescored = over
-      .join(queries.select(col("id").as("query_id"), col("vec").as("qv")), Seq("query_id"))
-      .join(index.vectors, Seq("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-    val rw = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(rw))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+    val over = TopK.rank(cand, Seq(col("query_id")),
+      Seq(col("q8").desc, col("neighbor_id")), k * overFetch, "r")
+    rerankExact(over, queries, index.vectors, k)
   }
 
   /** Exact embedding-cosine pairs above `tau` — the brute-force baseline
@@ -1120,7 +1085,7 @@ object Similarity {
   def embeddingNearDupPairs(vecs: DataFrame, tau: Double,
                             numTables: Int = 8, planesPerTable: Int = 6,
                             dim: Int = 64, bucketCap: Int = 65536): DataFrame = {
-    val all = tableBuckets(vecs, "id", numTables, planesPerTable, dim)
+    val all = tableBuckets(vecs, "id", col("vec"), numTables, planesPerTable, dim)
     val v =
       if (bucketCap <= 0) all
       else all.join(
@@ -1203,12 +1168,9 @@ object Similarity {
       p.count()
       p
     } else scored0
-    def ranked(part: Column, order: Column, keyName: String): DataFrame = {
-      val w = Window.partitionBy(part).orderBy(col("cosine").desc, order)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+    def ranked(part: Column, order: Column, keyName: String): DataFrame =
+      TopK.rank(scored, Seq(part), Seq(col("cosine").desc, order), k)
         .select(part.as(keyName), col("rank"), col("cosine"))
-    }
     val mx = rankedMean(ranked(col("qid"), col("nid"), "qid"), k, "qid", "mean_q")
     val my = rankedMean(ranked(col("nid"), col("qid"), "nid"), k, "nid", "mean_n")
     val pairs = bestByMargin(scored, mx, my, minMargin)
@@ -1300,13 +1262,11 @@ object Similarity {
     */
   private def bestByMargin(pairs: DataFrame, mx: DataFrame, my: DataFrame,
                            minMargin: Double): DataFrame = {
-    val wBest = Window.partitionBy(col("qid"))
-      .orderBy(col("margin").desc, col("nid"))
-    pairs.join(mx, Seq("qid")).join(my, Seq("nid"))
+    val scored = pairs.join(mx, Seq("qid")).join(my, Seq("nid"))
       .withColumn("margin",
         col("cosine") / ((col("mean_q") + col("mean_n")) / lit(2.0)))
-      .withColumn("__r", row_number().over(wBest))
-      .filter(col("__r") === 1 && col("margin") >= minMargin)
+    TopK.rank(scored, Seq(col("qid")), Seq(col("margin").desc, col("nid")), 1, "__r")
+      .filter(col("margin") >= minMargin)
       .select(col("qid").as("query_id"), col("nid").as("neighbor_id"),
         col("cosine"), col("margin"))
   }

@@ -810,4 +810,59 @@ class SimilaritySpec extends SparkSpec {
       dOut = 8, overFetch = 4, nlist = 4, nprobe = 4))
     (exact intersect rpIvf).size.toDouble / exact.size shouldBe 1.0
   }
+
+  test("exact-by-configuration tiers return bruteForceTopK's rows, ties by neighbor_id") {
+    // 140 vectors: 60 random ones, each copied under a second id and the
+    // first 20 under a third, so every query meets tied cosines
+    val rnd = new scala.util.Random(23)
+    val base = (0 until 60).map(_ => Seq.fill(16)(rnd.nextGaussian()))
+    val rows = (0L until 140L).map(i => (i, base((i % 60).toInt), s"l${i % 3}"))
+    val corpus = rows.toDF("id", "vec", "label")
+    val queries = corpus.filter($"id" < 10)
+    val n = rows.size
+    val k = 5
+    val overFetch = n / k + 1
+    def topk(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "rank", "cosine").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq.sorted
+    val exact = topk(Similarity.bruteForceTopK(queries, corpus, k))
+    exact.size shouldBe 10 * k
+    // the fixture really ties: some adjacent ranks share a cosine, and
+    // the lower neighbor id takes the better rank
+    val tied = exact.sliding(2).collect { case Seq(a, b)
+      if a._1 == b._1 && a._4 == b._4 => (a, b) }.toSeq
+    tied should not be empty
+    all(tied.map { case (a, b) => a._2 < b._2 }) shouldBe true
+
+    topk(Similarity.ivfTopK(queries, corpus, k, nlist = 8, nprobe = 8)) shouldBe exact
+    topk(Similarity.ivfRerankTopK(queries, corpus, k, nlist = 8, nprobe = 8,
+      overFetch = overFetch)) shouldBe exact
+    topk(Similarity.rpRerankTopK(queries, corpus, k, dIn = 16, dOut = 4,
+      overFetch = overFetch)) shouldBe exact
+
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val hardNeg = rowsOf(Similarity.hardNegativeTopK(queries, corpus, k))
+    hardNeg.size shouldBe 10 * k
+    rowsOf(Similarity.hardNegativeTopKIvf(queries, corpus, k, nlist = 8, nprobe = 8)) shouldBe
+      hardNeg
+    val knn = rowsOf(Similarity.knnClassify(queries, corpus, k))
+    knn.size shouldBe 10
+    rowsOf(Similarity.knnClassifyIvf(queries, corpus, k, nlist = 8, nprobe = 8)) shouldBe knn
+  }
+
+  test("sampled-Lloyd keep rule: unchanged up to 2^20·sampleN, bounded sample above") {
+    val sampleN = 4096L
+    val limit = (1L << 20) * sampleN
+    def expected(n: Long, mk: (Long, Long)) = BigDecimal(n) * mk._2 / mk._1
+    def floorRule(n: Long) = (1L << 20, math.max(1L, (1L << 20) * sampleN / n))
+    for (n <- Seq(10000L, limit, 1L << 40)) {
+      val mk = Similarity.lloydSampleKeep(n, sampleN)
+      if (n <= limit) mk shouldBe floorRule(n)
+      expected(n, mk) should be >= BigDecimal(sampleN / 2)
+      expected(n, mk) should be <= BigDecimal(sampleN)
+    }
+    // the floor rule this replaces samples 2^20 rows at n = 2^40
+    expected(1L << 40, floorRule(1L << 40)) shouldBe BigDecimal(1L << 20)
+  }
 }
