@@ -3,9 +3,10 @@ package graft.eval
 import graft.model.{Rule, RuleType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bitmask row-rule evaluation — the engine's one row-DQ representation.
@@ -156,51 +157,121 @@ object MaskedRowDqEvaluator {
   }
 }
 
-/** Aggregate-level rule evaluation.
-  *
-  * The same when/otherwise conditions selected WITHOUT `col("*")` — an
-  * expectation like `sum(l_quantity) > 20` makes Catalyst plan a single
-  * global Aggregate producing one row of rule-result maps
-  * (reference: utils/actions.py:580-594).
+/** One agg_dq/query_dq rule's outcome. `actual` is set only for an agg
+  * rule evaluated with detailed stats whose expectation splits into an
+  * aggregate part and a comparison ([[RuleStageEvaluator.parse]]).
   */
-object AggDqEvaluator {
+private[graft] final case class RuleOutcome(rule: Rule, passed: Boolean,
+                                            actual: Option[ActualValue]) {
+  def status: String = if (passed) "pass" else "fail"
 
-  /** Evaluates all agg rules in one job; returns every rule's result map
-    * (both pass and fail — the caller separates them; the reference keeps
-    * only failures for `meta_agg_dq_results` but needs pass results for
-    * detailed stats).
+  /** The reference-shaped result map (utils/actions.py:507-516): the
+    * rule's [[RuleCompiler.propEntries]] plus `status`, NULL properties
+    * as "".
     */
-  def run(df: DataFrame, rules: Seq[Rule]): Seq[Map[String, String]] = {
-    require(rules.forall(_.ruleType == RuleType.AggDq.name), "agg_dq rules only")
+  def resultMap: Map[String, String] =
+    (RuleCompiler.propEntries(rule) :+ ("status" -> status))
+      .map { case (k, v) => k -> Option(v).getOrElse("") }.toMap
+}
+
+/** The value an agg rule's aggregate part took (`String.valueOf`, so
+  * NULL reads "null") and the comparison it was held to: `> 10`,
+  * `between 1 and 5`.
+  */
+private[graft] final case class ActualValue(value: String, expected: String)
+
+/** The one agg_dq/query_dq evaluator: all rules of a stage in ONE
+  * `select` + `head()` over the stage frame — the input for agg rules
+  * (`sum(x) > 20` makes Catalyst plan one global aggregate row), a
+  * one-row placeholder for query rules, so scalar-subquery SQL over the
+  * orchestrator's temp views runs exactly once (reference:
+  * utils/actions.py:580-594, placeholder from core/context.py:1995-1998).
+  * Each rule is one column, its expectation; NULL counts as failure,
+  * like the reference. With `detailed`, each agg rule whose expectation
+  * splits also selects its aggregate part as a string; Catalyst plans
+  * one aggregate function for both uses, so actual values cost no
+  * second job (the reference runs one, utils/actions.py:122-301).
+  */
+private[graft] object RuleStageEvaluator {
+
+  def run(frame: DataFrame, rules: Seq[Rule], detailed: Boolean): Seq[RuleOutcome] = {
     if (rules.isEmpty) return Seq.empty
-    val ruleCols = rules.map(RuleCompiler.ruleColumn)
-    val names    = rules.map(RuleCompiler.resultColName)
-    val row = df.select(ruleCols: _*)
-      .select(RuleCompiler.collapseAll(names).as("res"))
-      .head()
-    row.getSeq[scala.collection.Map[String, String]](0).map(_.toMap)
+    val splits = rules.map(r =>
+      if (detailed && r.ruleType == RuleType.AggDq.name) parse(r.expectation) else None)
+    val selected = frame.select(rules.map(r => expr(r.expectation)) ++
+      splits.flatten.map(s => expr(s._1).cast("string")): _*)
+    val notBoolean = rules.zip(selected.schema).collect {
+      case (r, f) if f.dataType != BooleanType => r.rule
+    }
+    require(notBoolean.isEmpty, s"non-boolean expectation in rule(s) ${notBoolean.mkString(", ")}")
+    val row = selected.head()
+    // column of rule i's actual value, when it has one
+    val actualAt = splits.scanLeft(rules.size)((c, s) => c + s.size)
+    rules.indices.map { i =>
+      RuleOutcome(rules(i), !row.isNullAt(i) && row.getBoolean(i),
+        splits(i).map { case (_, cmp, bounds) =>
+          ActualValue(String.valueOf(row.get(actualAt(i)): Any),
+            s"$cmp ${bounds.mkString(" and ")}")
+        })
+    }
+  }
+
+  /** `<agg expr> between <lo> and <hi>` (case-insensitive). */
+  private val BetweenRe = """(?is)^\s*(.+?)\s+between\s+(.+?)\s+and\s+(.+?)\s*$""".r
+  /** `<agg expr> <cmp> <bound>` where cmp ∈ {>=, <=, >, <, =, ==, !=, <>}. */
+  private val CmpRe = """(?s)^\s*(.+?)\s*(>=|<=|!=|<>|==|=|>|<)\s*(.+?)\s*$""".r
+
+  /** Splits an expectation into (aggregate part, comparator, bound[s])
+    * with the reference's regexes (config/user_config.py:105-115), matched
+    * against the text outside parentheses and quoted literals only, so
+    * `count(case when q > 45 then 1 end) = 0` splits at `=`. None when
+    * neither matches or the aggregate part does not parse.
+    */
+  def parse(expectation: String): Option[(String, String, Seq[String])] = {
+    val top = topLevelOnly(expectation)
+    def groups(re: scala.util.matching.Regex) = re.findFirstMatchIn(top).map(m =>
+      (1 to m.groupCount).map(i => expectation.substring(m.start(i), m.end(i))))
+    groups(BetweenRe).map(g => (g(0), "between", Seq(g(1), g(2))))
+      .orElse(groups(CmpRe).map(g => (g(0), g(1), Seq(g(2)))))
+      .filter(p => scala.util.Try(CatalystSqlParser.parseExpression(p._1)).isSuccess)
+  }
+
+  /** `e` with every character inside parentheses or a quoted literal
+    * replaced by `_` (same length, so match offsets index `e`).
+    */
+  private def topLevelOnly(e: String): String = {
+    var depth = 0
+    var quote: Option[Char] = None
+    e.map { c =>
+      val top = depth == 0 && quote.isEmpty
+      quote match {
+        case Some(q) => if (c == q) quote = None
+        case None =>
+          if ("'\"`".contains(c)) quote = Some(c)
+          else if (c == '(') depth += 1
+          else if (c == ')') depth -= 1
+      }
+      if (top) c else '_'
+    }
   }
 }
 
-/** Query-level rule evaluation.
-  *
-  * Conditions are selected against a ONE-ROW placeholder DataFrame so that
-  * scalar-subquery SQL like `(select sum(x) from view) > 10` executes
-  * exactly once (reference: utils/actions.py:585-587 with the placeholder
-  * from core/context.py:1995-1998). Rules access data through temp views
-  * registered by the orchestrator.
+/** Agg-level rule evaluation: every rule's reference-shaped result map
+  * (pass and fail; the caller separates them), one job per call.
+  */
+object AggDqEvaluator {
+  def run(df: DataFrame, rules: Seq[Rule]): Seq[Map[String, String]] = {
+    require(rules.forall(_.ruleType == RuleType.AggDq.name), "agg_dq rules only")
+    RuleStageEvaluator.run(df, rules, detailed = false).map(_.resultMap)
+  }
+}
+
+/** Query-level rule evaluation over a one-row placeholder frame; rules
+  * read data through temp views the orchestrator registers.
   */
 object QueryDqEvaluator {
-
   def run(spark: SparkSession, rules: Seq[Rule]): Seq[Map[String, String]] = {
     require(rules.forall(_.ruleType == RuleType.QueryDq.name), "query_dq rules only")
-    if (rules.isEmpty) return Seq.empty
-    val ruleCols = rules.map(RuleCompiler.ruleColumn)
-    val names    = rules.map(RuleCompiler.resultColName)
-    val row = spark.range(1)
-      .select(ruleCols: _*)
-      .select(RuleCompiler.collapseAll(names).as("res"))
-      .head()
-    row.getSeq[scala.collection.Map[String, String]](0).map(_.toMap)
+    RuleStageEvaluator.run(spark.range(1).toDF(), rules, detailed = false).map(_.resultMap)
   }
 }

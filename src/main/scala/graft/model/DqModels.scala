@@ -21,17 +21,6 @@ final case class ExecutionSettings(
     targetQueryDq: Boolean
 )
 
-/** One evaluated rule outcome: the flattened map the engine attaches per
-  * rule per row/stage (reference: utils/actions.py:507-516).
-  */
-final case class RuleResult(props: Map[String, String]) {
-  def rule: String       = props.getOrElse("rule", "")
-  def ruleType: String   = props.getOrElse("rule_type", "")
-  def status: String     = props.getOrElse("status", "")
-  def action: String     = props.getOrElse("action_if_failed", "ignore")
-  def failed: Boolean    = status == "fail"
-}
-
 /** Per-rule failure summary used for stats + threshold alerting
   * (reference: sinks/utils/writer.py:1071-1209).
   */

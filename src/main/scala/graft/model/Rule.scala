@@ -76,9 +76,6 @@ final case class Rule(
 
   /** MD5 of the expectation text (core/expectations.py:106-126). */
   def expectationHash: String = Md5.hex(Option(expectation).getOrElse("").trim)
-
-  /** Column-name-safe identifier for the per-rule result column. */
-  def safeName: String = rule.replaceAll("[^A-Za-z0-9_]", "_")
 }
 
 object Rule {

@@ -39,8 +39,7 @@ object Curation {
       minTokens: Long = 10L,
       k: Int = 3,
       tau: Double = 0.5,
-      budget: Int = 256,
-      persist: Boolean = true): CurationRun = {
+      budget: Int = 256): CurationRun = {
     val bench = docs.filter(col(idCol) % benchMod === 0)
     val train = docs.filter(col(idCol) % benchMod =!= 0)
 
@@ -56,11 +55,10 @@ object Curation {
     // the scoring regexes until the cache fills), and at 100 TB caching
     // surviving corpus TEXT per stage is not an option while the id set
     // is a few longs per survivor.
-    val dedupedAll = TopK.rank(kept, Seq(col("fp")), Seq(col(idCol)), 1, "rn")
+    val deduped = TopK.rank(kept, Seq(col("fp")), Seq(col(idCol)), 1, "rn")
       .select(col(idCol), col(langCol), col("n_tokens"))
-    val deduped =
-      if (persist) dedupedAll.persist(StorageLevel.MEMORY_AND_DISK) else dedupedAll
-    if (persist) deduped.count()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    deduped.count()
 
     val dedupedText = train.select(col(idCol), col(textCol))
       .join(deduped.select(col(idCol)), Seq(idCol))
@@ -72,7 +70,7 @@ object Curation {
       clean.select(col(idCol), col(langCol), col("n_tokens")),
       tokensCol = "n_tokens", orderCol = idCol, partCol = langCol, budget = budget)
     val summary = Packing.packSummary(packed, langCol, budget = budget)
-    CurationRun(summary, () => { if (persist) deduped.unpersist(); () })
+    CurationRun(summary, () => { deduped.unpersist(); () })
   }
 
   /** The staged frames of [[pipelineV2]], exposed so each stage's
@@ -117,8 +115,7 @@ object Curation {
       minQuality: Double = 0.5,
       blockSize: Int = 32,
       alpha: Double = 0.5,
-      tokenBudget: Long = 15000L,
-      eager: Boolean = true): PipelineV2Stages = {
+      tokenBudget: Long = 15000L): PipelineV2Stages = {
     val minQ = math.floor(minQuality * 1000000.0).toLong
     // `gated` is consumed twice (the dedup kernel and the lang
     // re-attach) inside the ONE action that materializes `deduped` —
@@ -135,7 +132,7 @@ object Curation {
         TA.tokenCount(col("text_dedup")).cast("long").as("n_tokens"),
         TA.qualityScoreQ(col("text_dedup")).as("q2"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) deduped.count()
+    deduped.count()
     val mixed = Sampling.temperatureSample(deduped, langCol, idCol, alpha)
     val budgeted = tokenBudgetGate(mixed, "q2", "n_tokens", tokenBudget,
       persistScored = false, quantized = true)
@@ -210,14 +207,13 @@ object Curation {
       bucketWidth: Int = 32,
       batchSize: Int = 8,
       nShards: Int = 4,
-      shardBy: Option[Column] = None,
-      eager: Boolean = true): PipelineV3Stages = {
+      shardBy: Option[Column] = None): PipelineV3Stages = {
     val kept0 = classifierGate(docs, idCol, textCol, model,
         carry = Seq(col(langCol),
           TA.tokenCount(col(textCol)).cast("long").as("n_tokens")))
       .select(col(idCol), col(langCol), col("n_tokens"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) kept0.count()
+    kept0.count()
     val sv0 = docs.join(kept0.select(col(idCol)), Seq(idCol))
     // cover-free span stats: kept0 IS the id universe, so survivors are
     // its anti-join against the over-threshold ids (no sampled spans ≡
@@ -227,7 +223,7 @@ object Curation {
       .select(col("id").as(idCol))
     val kept1 = kept0.join(bad1, Seq(idCol), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) kept1.count()
+    kept1.count()
     val sv1 = docs.join(kept1.select(col(idCol)), Seq(idCol))
     // attachMissing=false because the OOV gate below KEEPS docs absent
     // from the stats frame (no bigrams ≡ NULL oov_rate ≡ kept),
@@ -286,8 +282,7 @@ object Curation {
       langCol: String = "lang",
       textCol: String = "text",
       refLang: String = "en",
-      buckets: Int = 65536,
-      eager: Boolean = true): PipelineV4Stages = {
+      buckets: Int = 65536): PipelineV4Stages = {
     // the pipeline owns its caches so release() can free them. Only TWO
     // frames persist: the narrow weights (the resample's max aggregate
     // and membership filter both read it, and its lineage — the fused
@@ -304,7 +299,7 @@ object Curation {
       // longs per row — still narrow)
       .select(col(idCol), col("target_hits"), col("raw_hits"), col("weight"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) weights.count()
+    weights.count()
     val selected = importanceResampleExact(weights, idCol)
       .select(col(idCol))
     val sv = docs.join(selected, Seq(idCol))
@@ -318,7 +313,7 @@ object Curation {
     val scored = lm.join(docs.select(col(idCol), col(langCol)), Seq(idCol))
       .select(col(idCol), col(langCol), col("n_bigrams"), col("lm_score"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) scored.count()
+    scored.count()
     val bucketed = ccnetBuckets(scored, langCol, "lm_score",
       persistScored = false)
     val kept = bucketed.filter(col("bucket") =!= "tail")
@@ -370,8 +365,7 @@ object Curation {
         * `benchDf` instead.
         */
       benchMod: Int = 10,
-      benchDf: Option[DataFrame] = None,
-      eager: Boolean = true): PipelineV5Stages = {
+      benchDf: Option[DataFrame] = None): PipelineV5Stages = {
     val train = benchDf.map(_ => docs)
       .getOrElse(docs.filter(col(idCol) % benchMod =!= 0))
     val bench = benchDf
@@ -383,7 +377,7 @@ object Curation {
       .select(col(idCol), col(langCol),
         TA.tokenCount(col(textCol)).cast("long").as("n_tokens"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) clean.count()
+    clean.count()
     val mixed = Sampling.mixtureSelect(clean, langCol, idCol, shares,
       weightCol = Some("n_tokens"))
     val summary = mixed.groupBy(col(langCol))
@@ -443,8 +437,7 @@ object Curation {
         Seq(("train", 900000L), ("val", 50000L), ("test", 50000L)),
       k: Int = 3,
       tau: Double = 0.8,
-      capPerDomain: Long = 800L,
-      eager: Boolean = true): PipelineV6Stages = {
+      capPerDomain: Long = 800L): PipelineV6Stages = {
     // the pair tier's (id, s) shingle index feeds FOUR subtrees (sizes,
     // both self-join sides, the over-cap supplement) — own it HERE via
     // the FromIndex form and drop it the moment the pair list (the
@@ -457,7 +450,8 @@ object Curation {
     val pairs = Dedup.ngramJaccardPairsFromIndex(shingleIx, tau)
       .select(col("id_a"), col("id_b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) { pairs.count(); shingleIx.unpersist() }
+    pairs.count()
+    shingleIx.unpersist()
     val clusters = Dedup.connectedComponents(pairs)
       .select(col("doc_id").as(idCol), col("cluster_id"))
     val labeled = Sampling.splitByGroup(
@@ -469,14 +463,14 @@ object Curation {
         .drop("cluster_id"),
       "grp", splits)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) labeled.count()
+    labeled.count()
     // the audit is <= (#splits+1)^2 rows but its subtree (two label
     // joins + aggregate) feeds THREE consumers (returned handle + both
     // union branches of the per-split cross counts) — persist the tiny
     // result, owned by release()
     val audit = Sampling.splitLeakageAudit(pairs, labeled, idCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) audit.count()
+    audit.count()
     val capped = groupTokenCap(
         labeled.withColumn("__ss", concat_ws("|", col("split"), col(srcCol))),
         "__ss", "q", "n_tokens", capPerDomain,
@@ -500,8 +494,7 @@ object Curation {
         coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"),
         coalesce(col("n_cross_pairs"), lit(0L)).as("n_cross_pairs"))
     PipelineV6Stages(labeled, audit, capped, summary,
-      () => { pairs.unpersist(); labeled.unpersist(); audit.unpersist()
-        shingleIx.unpersist(); () }) // no-op when eager already dropped it
+      () => { pairs.unpersist(); labeled.unpersist(); audit.unpersist(); () })
   }
 
   /** Stage handles of [[pipelineV7Stages]]: `keptIds` the narrow gated
@@ -544,14 +537,13 @@ object Curation {
       srcCol: String = "source",
       textCol: String = "text",
       maxTopBigramPpm: Long = 100000L,
-      numMerges: Int = 6,
-      eager: Boolean = true): PipelineV7Stages = {
+      numMerges: Int = 6): PipelineV7Stages = {
     val ppm = TA.gopherRepetition(docs, idCol, textCol,
       topNs = Seq(2), dupNs = Seq.empty)
     val keptIds = ppm.filter(col("top2_ppm") <= maxTopBigramPpm)
       .select(col(idCol))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) keptIds.count()
+    keptIds.count()
     val kept = docs.join(keptIds, Seq(idCol), "left_semi")
     val merges = collectMerges(bpeTrain(kept, numMerges, idCol, textCol))
     val encoded = kept.select(col(idCol), col(srcCol),

@@ -291,27 +291,9 @@ final class SparkExpectations(
         config.targetTableView.getOrElse(s"${ctx.viewBase}_view"))
     }
 
-    /** Reference stage-status semantics (utils/regulate_flow.py:150-156 +
-      * conftest golden matrix): a stage reports Failed ONLY when its
-      * fail-action enforcement aborts the run; rules failing with
-      * ignore/drop leave the stage Passed (their outcomes live in the
-      * per-rule results, not the stage status).
-      */
-    def enforceCollected(res: Seq[Map[String, String]], statusKey: String,
-                         stage: String): Unit = {
-      val failFailures = res.filter(m =>
-        m.get("status").contains("fail") && m.get("action_if_failed").contains("fail"))
-      if (failFailures.nonEmpty) {
-        statuses += statusKey -> StageStatus.Failed
-        throw new DqRuleFailedException(
-          s"job failed: $stage rules with action 'fail' failed: " +
-            failFailures.flatMap(_.get("rule")).mkString(", "),
-          failFailures.flatMap(_.get("rule")))
-      }
-      statuses += statusKey -> StageStatus.Passed
-    }
-
-    var sourceAgg, sourceQuery, targetAgg, targetQuery = Seq.empty[Map[String, String]]
+    // each run agg/query stage's result maps, keyed by its status key
+    var stageResults = Map.empty[String, Seq[Map[String, String]]]
+    def results(statusKey: String) = stageResults.getOrElse(statusKey, Seq.empty)
     var rowSummaries = Seq.empty[RuleFailureSummary]
     // per-rule detailed stats, source- and target-side, joinable on the
     // reference's 6 keys via StatsBuilder.detailedStats
@@ -330,19 +312,46 @@ final class SparkExpectations(
                 rows.map(_.toSeq.mkString("[", ",", "]")).mkString(";"), ctx.runDate)
             }
           }
-    def aggDetails(data: DataFrame, rules: Seq[Rule]): Seq[DetailedStat] =
-      DetailedAggEvaluator.run(data, rules).map { d =>
-        DetailedStat(ctx.runId, productId, targetTable, d.rule.ruleType,
-          d.rule.rule, d.rule.columnName, d.rule.expectation, d.rule.tag,
-          d.rule.description, d.status,
-          actualValue = String.valueOf(d.actualValue),
-          expectedValue = d.expectedDescription,
-          actualOutcome = d.status, expectedOutcome = "pass",
-          failedRowCount = 0L)
+    /** One agg_dq/query_dq stage: evaluate (one job), record detailed
+      * stats and query outputs, then enforce. Reference stage-status
+      * semantics (utils/regulate_flow.py:150-156 + conftest golden
+      * matrix): a stage reports Failed ONLY when its fail-action
+      * enforcement aborts the run; rules failing with ignore/drop leave
+      * the stage Passed (their outcomes live in the per-rule results).
+      */
+    def ruleStage(statusKey: String, label: String, stageRules: Seq[Rule],
+                  frame: DataFrame): Unit = timed(statusKey) {
+      val source = statusKey.startsWith("source")
+      val outcomes = RuleStageEvaluator.run(frame, stageRules, config.enableDetailedStats)
+      val details = outcomes.flatMap(o => o.actual.map { a =>
+        DetailedStat(ctx.runId, productId, targetTable, o.rule.ruleType,
+          o.rule.rule, o.rule.columnName, o.rule.expectation, o.rule.tag,
+          o.rule.description, o.status, actualValue = a.value,
+          expectedValue = a.expected, actualOutcome = o.status,
+          expectedOutcome = "pass", failedRowCount = 0L)
+      })
+      if (source) sourceDetails ++= details else targetDetails ++= details
+      captureQueryOutputs(stageRules.filter(_.ruleType == RuleType.QueryDq.name),
+        if (source) "source_dq" else "target_dq")
+      stageResults += statusKey -> outcomes.map(_.resultMap)
+      val failed = outcomes.collect {
+        case o if !o.passed && o.rule.actionIfFailed == "fail" => o.rule.rule
       }
+      if (failed.nonEmpty) {
+        statuses += statusKey -> StageStatus.Failed
+        throw new DqRuleFailedException(
+          s"job failed: $label rules with action 'fail' failed: " + failed.mkString(", "),
+          failed)
+      }
+      statuses += statusKey -> StageStatus.Passed
+    }
     var errorDf = df.limit(0)
     var errorCount = 0L
     var outputCount = 0L
+    def buildStats(): DqStats = StatsBuilder.build(ctx, inputCount, errorCount,
+      outputCount, grouped, results("source_agg_dq"), results("source_query_dq"),
+      rowSummaries, results("final_agg_dq"), results("final_query_dq"),
+      statuses, timings, config.jobMetadata)
     var finalDf = df
     // CountsMode.OnWrite: the observation riding the final frame, plus
     // the rules to decode it with; harvested after the target write (or
@@ -415,23 +424,16 @@ final class SparkExpectations(
     }
 
     try {
-      // stage 1: source agg_dq (batch only — reference skips on streaming)
+      // stages 1/2: source agg_dq, source query_dq (batch only — the
+      // reference skips them on streaming)
       val aggRules = grouped(RuleType.AggDq)
-      if (!streaming && settings.sourceAggDq) timed("source_agg_dq") {
-        val active = aggRules.filter(_.enableForSourceDqValidation)
-        sourceAgg = AggDqEvaluator.run(df, active)
-        if (config.enableDetailedStats) sourceDetails ++= aggDetails(df, active)
-        enforceCollected(sourceAgg, "source_agg_dq", "source agg_dq")
-      }
-
-      // stage 2: source query_dq
       val queryRules = grouped(RuleType.QueryDq)
-      if (!streaming && settings.sourceQueryDq) timed("source_query_dq") {
-        val active = queryRules.filter(_.enableForSourceDqValidation)
-        sourceQuery = QueryDqEvaluator.run(spark, active)
-        captureQueryOutputs(active, "source_dq")
-        enforceCollected(sourceQuery, "source_query_dq", "source query_dq")
-      }
+      if (!streaming && settings.sourceAggDq)
+        ruleStage("source_agg_dq", "source agg_dq",
+          aggRules.filter(_.enableForSourceDqValidation), df)
+      if (!streaming && settings.sourceQueryDq)
+        ruleStage("source_query_dq", "source query_dq",
+          queryRules.filter(_.enableForSourceDqValidation), spark.range(1).toDF())
 
       // stage 3: row_dq — bitmask evaluation (see MaskedRowDqEvaluator):
       // rules compile to long bitmasks (codegen, 8 bytes/row cached);
@@ -550,18 +552,12 @@ final class SparkExpectations(
       }
 
       // stage 4/5: target-side agg/query on the surviving rows
-      if (!streaming && settings.rowDq && settings.targetAggDq) timed("final_agg_dq") {
-        val active = aggRules.filter(_.enableForTargetDqValidation)
-        targetAgg = AggDqEvaluator.run(finalDf, active)
-        if (config.enableDetailedStats) targetDetails ++= aggDetails(finalDf, active)
-        enforceCollected(targetAgg, "final_agg_dq", "target agg_dq")
-      }
-      if (!streaming && settings.rowDq && settings.targetQueryDq) timed("final_query_dq") {
-        val active = queryRules.filter(_.enableForTargetDqValidation)
-        targetQuery = QueryDqEvaluator.run(spark, active)
-        captureQueryOutputs(active, "target_dq")
-        enforceCollected(targetQuery, "final_query_dq", "target query_dq")
-      }
+      if (!streaming && settings.rowDq && settings.targetAggDq)
+        ruleStage("final_agg_dq", "target agg_dq",
+          aggRules.filter(_.enableForTargetDqValidation), finalDf)
+      if (!streaming && settings.rowDq && settings.targetQueryDq)
+        ruleStage("final_query_dq", "target query_dq",
+          queryRules.filter(_.enableForTargetDqValidation), spark.range(1).toDF())
 
       // batch-only sinks: a streaming final frame is written via
       // StreamingWriter by the caller (df.write crashes on streams)
@@ -594,9 +590,7 @@ final class SparkExpectations(
         if (!streaming && inputCount == 0L) inputCount = df.count()
         // stats must still be assembled AND persisted on failure
         // (collect_statistics.py:21-50 wraps success and failure alike)
-        val stats = StatsBuilder.build(ctx, inputCount, errorCount, outputCount,
-          grouped, sourceAgg, sourceQuery, rowSummaries, targetAgg, targetQuery,
-          statuses, timings, config.jobMetadata)
+        val stats = buildStats()
         // the failure notification and the DqRunAbortedException must
         // survive a broken stats sink — log the write failure instead of
         // letting it replace the real abort cause
@@ -616,9 +610,7 @@ final class SparkExpectations(
         throw e
     }
 
-    val stats = StatsBuilder.build(ctx, inputCount, errorCount, outputCount,
-      grouped, sourceAgg, sourceQuery, rowSummaries, targetAgg, targetQuery,
-      statuses, timings, config.jobMetadata)
+    val stats = buildStats()
     config.notifier.foreach(_.onCompletion(stats))
 
     if (config.enableDetailedStats) {
@@ -671,8 +663,9 @@ final class SparkExpectations(
         Some(rep)
       } else None
 
-    DqResult(finalDf, errorDf, stats, sourceAgg, sourceQuery,
-      targetAgg, targetQuery, rowSummaries, statuses, sourceDetails,
+    DqResult(finalDf, errorDf, stats, results("source_agg_dq"),
+      results("source_query_dq"), results("final_agg_dq"),
+      results("final_query_dq"), rowSummaries, statuses, sourceDetails,
       targetDetails, queryOutputs, pipelineCleanup, validationWarnings,
       reportDf)
   }

@@ -258,8 +258,8 @@ object DqQueries {
           "l_returnflag", "CAST(count(distinct l_returnflag) AS DOUBLE) = 3"),
         Rule(P, T, "agg_dq", "max_disc",
           "l_discount", "max(l_discount) <= 0.05"))
-      DetailedAggEvaluator.run(li, detailRules)
-        .map(d => (d.rule.rule, d.actualValue.toString.toDouble, d.status))
+      RuleStageEvaluator.run(li, detailRules, detailed = true)
+        .flatMap(o => o.actual.map(a => (o.rule.rule, a.value.toDouble, o.status)))
         .toDF("rule", "actual_value", "status").orderBy("rule")
     }, Some("""
       SELECT 'avg_qty' AS rule,

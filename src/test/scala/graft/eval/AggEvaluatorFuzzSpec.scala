@@ -5,12 +5,13 @@ import graft.model.Rule
 
 /** Seeded fuzz over the agg stage: random data × random aggregate
   * expectations must produce the SAME pass/fail from
-  *   (a) AggDqEvaluator (whole-expectation Spark eval, the stage gate),
-  *   (b) DetailedAggEvaluator (split agg + in-Spark comparator), and
+  *   (a) AggDqEvaluator (the stage gate's result maps),
+  *   (b) the detailed evaluation (verdicts + actual values, one select),
+  *       and
   *   (c) an independent driver-side evaluation
   * — including null aggregates (empty/all-null columns ⇒ null verdict ⇒
-  * fail) and between forms. Guards the detailed evaluator's
-  * native-type comparator against drifting from the coarse gate.
+  * fail) and between forms — and every actual value must equal the
+  * driver-side aggregate.
   */
 class AggEvaluatorFuzzSpec extends SparkSpec {
   import spark.implicits._
@@ -49,17 +50,19 @@ class AggEvaluatorFuzzSpec extends SparkSpec {
             }}
             (s"$aggSql $cmp $bound", ok)
           }
-        (Rule("p", "t", "agg_dq", s"r$i", "c", expectation, "ignore"), expected)
+        (Rule("p", "t", "agg_dq", s"r$i", "c", expectation, "ignore"), (expected, truth(rows)))
       }
 
       val coarse = AggDqEvaluator.run(df, rules.map(_._1))
         .map(m => m("rule") -> m("status")).toMap
-      val detailed = DetailedAggEvaluator.run(df, rules.map(_._1))
-        .map(d => d.rule.rule -> d.status).toMap
-      rules.foreach { case (r, expected) =>
+      val detailed = RuleStageEvaluator.run(df, rules.map(_._1), detailed = true)
+        .map(o => o.rule.rule -> o).toMap
+      rules.foreach { case (r, (expected, actual)) =>
         withClue(s"trial $trial '${r.expectation}' over $n rows: ") {
           coarse(r.rule) shouldBe (if (expected) "pass" else "fail")
-          detailed(r.rule) shouldBe coarse(r.rule)
+          detailed(r.rule).status shouldBe coarse(r.rule)
+          detailed(r.rule).actual.map(a =>
+            if (a.value == "null") None else Some(a.value.toDouble)) shouldBe Some(actual)
         }
       }
     }

@@ -51,6 +51,27 @@ class ObserveCountsSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("detailed stats add no job to the source and target agg stages") {
+    val withAgg = rules ++ Seq(
+      Rule(P, T, "agg_dq", "sum_pos", "col1", "sum(col1) > 0"),
+      Rule(P, T, "agg_dq", "max_band", "col3", "max(col3) between 5 and 6"))
+    def run(detailed: Boolean) = countingJobs {
+      val r = new SparkExpectations(P, T, withAgg,
+        DqConfig(enableDetailedStats = detailed)).run(input)
+      r.unpersist()
+      r
+    }
+    val (plain, plainJobs) = run(detailed = false)
+    val (detailed, detailedJobs) = run(detailed = true)
+    detailed.sourceDetailedStats.filter(_.ruleType == "agg_dq")
+      .map(d => d.rule -> d.actualValue).toMap shouldBe
+      Map("sum_pos" -> "10", "max_band" -> "7")
+    detailed.targetDetailedStats.map(d => d.rule -> d.actualValue).toMap shouldBe
+      Map("sum_pos" -> "9", "max_band" -> "7")
+    detailed.sourceAggResults shouldBe plain.sourceAggResults
+    detailedJobs shouldBe plainJobs
+  }
+
   test("OnWrite counts match FusedAggregate exactly and skip the count job") {
     val root = java.nio.file.Files.createTempDirectory("graft_obs").toString
     def cfg(mode: CountsMode, sub: String) = DqConfig(

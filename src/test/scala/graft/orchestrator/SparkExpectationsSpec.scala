@@ -126,6 +126,31 @@ class SparkExpectationsSpec extends SparkSpec {
     res.detailedStatsDf(spark).count() shouldBe 2 // gt1 + joined sum_band
   }
 
+  test("detailed stats split agg rules at the first comparator outside parentheses") {
+    val rules = Seq(
+      Rule("p1", "tbl", "row_dq", "gt1", "col1", "col1 > 1", "drop"),
+      Rule("p1", "tbl", "agg_dq", "no_small", "col1",
+        "count(case when col1 < 2 then 1 end) = 0"),
+      Rule("p1", "tbl", "agg_dq", "no_neg", "col1", "min(if(col1<0,1,0)) = 0"))
+    def run(detailed: Boolean) = new SparkExpectations("p1", "tbl", rules,
+      DqConfig(enableDetailedStats = detailed)).run(input)
+    val plain = run(detailed = false)
+    val res = run(detailed = true)
+    res.sourceAggResults shouldBe plain.sourceAggResults
+    res.targetAggResults shouldBe plain.targetAggResults
+    res.statuses shouldBe plain.statuses
+    def byRule(ds: Seq[graft.model.DetailedStat]) =
+      ds.map(d => d.rule -> (d.actualValue, d.expectedValue, d.status)).toMap
+    val src = byRule(res.sourceDetailedStats)
+    src("no_small") shouldBe (("1", "= 0", "fail"))
+    src("no_neg") shouldBe (("0", "= 0", "pass"))
+    val tgt = byRule(res.targetDetailedStats)
+    tgt("no_small") shouldBe (("0", "= 0", "pass")) // row 0 (col1 = 1) dropped
+    tgt("no_neg") shouldBe (("0", "= 0", "pass"))
+    plain.sourceAggResults.map(m => m("rule") -> m("status")).toMap shouldBe
+      Map("no_small" -> "fail", "no_neg" -> "pass")
+  }
+
   test("plan break variants produce identical results") {
     val rules = Seq(Rule("p1", "tbl", "row_dq", "gt1", "col1", "col1 > 1", "drop"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_pb").toString + "/t"
