@@ -77,7 +77,7 @@ object Bench {
 
   /** Class-data-sharing setup for the children (round 13, VERDICT r12
     * item 1): each of the 168 forked children pays ~9 s of fixed JVM +
-    * SparkSession startup, dominated by classloading (SessionProbe at
+    * SparkSession startup, dominated by classloading (measured at
     * local[32]: session-create 4.8 s + first-action 4.1 s), which is
     * harness cost, not query cost — it is what pushed the driver's
     * 32-core run past its wall-clock budget in round 12 (rc 124). A

@@ -22,7 +22,6 @@ object DqSettings {
     "enable_error_table" -> true,
     "enable_detailed_stats" -> false,
     "enable_query_dq_detailed_result" -> false,
-    "persist_row_dq" -> true,
     "error_drop_threshold_default" -> 100,
     "streaming.enable" -> true,
     "streaming.checkpoint_suffix" -> "_checkpoint")

@@ -237,15 +237,21 @@ private[graft] object RuleStageEvaluator {
   }
 
   /** `e` with every character inside parentheses or a quoted literal
-    * replaced by `_` (same length, so match offsets index `e`).
+    * replaced by `_` (same length, so match offsets index `e`). Inside
+    * a '…' or "…" string literal a `\` escapes the next character;
+    * backtick identifiers have no escapes.
     */
   private def topLevelOnly(e: String): String = {
     var depth = 0
     var quote: Option[Char] = None
+    var escaped = false
     e.map { c =>
       val top = depth == 0 && quote.isEmpty
       quote match {
-        case Some(q) => if (c == q) quote = None
+        case Some(_) if escaped => escaped = false
+        case Some(q) =>
+          if (c == q) quote = None
+          else if (c == '\\' && q != '`') escaped = true
         case None =>
           if ("'\"`".contains(c)) quote = Some(c)
           else if (c == '(') depth += 1

@@ -1,6 +1,7 @@
 package graft.notify
 
 import graft.model.{DqStats, Rule, RuleFailureSummary}
+import java.util.Locale
 
 /** Notification fan-out: a trait-based plugin registry replacing the
   * reference's pluggy hook broadcast (notifications/__init__.py:26-50;
@@ -210,7 +211,7 @@ final class Notifier(
         s"product_id: ${stats.productId}\ntable: ${stats.tableName}\n" +
           s"input_count: ${stats.inputCount}\nerror_count: ${stats.errorCount}\n" +
           s"output_count: ${stats.outputCount}\n" +
-          f"success_percentage: ${stats.successPercentage}%.2f"),
+          "success_percentage: %.2f".formatLocal(Locale.ROOT, stats.successPercentage)),
       kind = "completion"))
 
   def onFailure(productId: String, table: String, error: String): Unit = if (enableOnFailure)
@@ -226,7 +227,8 @@ final class Notifier(
       fanOut(Notification(
         s"Error drop threshold breached",
         breached.map(s =>
-          f"rule: ${s.rule} failed ${s.failedRowCount} rows (${s.failedPct(inputCount)}%.2f%% > ${s.errorDropThreshold}%%)")
+          "rule: %s failed %d rows (%.2f%% > %d%%)".formatLocal(Locale.ROOT,
+            s.rule, s.failedRowCount, s.failedPct(inputCount), s.errorDropThreshold))
           .mkString("\n"),
         priority = "high", kind = "threshold"))
 

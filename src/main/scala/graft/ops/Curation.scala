@@ -1001,18 +1001,19 @@ object Curation {
     *     applies the ≤ RewriteEvery pending replaces on the fly. Spark
     *     jobs per merge: ONE narrow delta aggregate; the heavy
     *     full-frame cycle runs once per RewriteEvery merges (16x fewer
-    *     than the old loop, measured in [[graft.tools.BpeDictProbe]]).
+    *     than the old loop, measured on synthetic 2^17/2^19-word
+    *     dictionaries).
     *
     * DRIVER STATE, the documented trade: O(distinct adjacent pairs)
     * ≤ O(Σ|word|) map+heap entries (vs one row per round before).
     * At the 2^20-word `maxVocab` cap with width-20 words that is ≤ 20M
     * entries worst case — bounded by the vocab cap, not the corpus —
-    * and real dictionaries share structure (the probe's 2^19-word
+    * and real dictionaries share structure (synthetic 2^19-word
     * tables seed far under 1M pairs). The WORDS never pass through the
     * driver.
     *
-    * Returns (merge table, rewrite-round count) — the stats tuple feeds
-    * [[graft.tools.BpeDictProbe]]. `rewriteEvery`/`truncateEvery` are
+    * Returns (merge table, rewrite-round count); specs read the count
+    * to check the rewrite cadence. `rewriteEvery`/`truncateEvery` are
     * spec knobs (defaults are the production cadence).
     */
   private[graft] def bpeMergeRoundsDistributedWithStats(
@@ -1090,8 +1091,8 @@ object Curation {
     // ---- speculative batching over the exact table ----------------
     //
     // A delta JOB per merge leaves ~0.5 s of fixed per-job cost as the
-    // floor (measured, BpeDictProbe). So each round SPECULATES a run
-    // of up to `specCap` merges from the current exact table — the
+    // floor (measured). So each round SPECULATES a run of up to
+    // `specCap` merges from the current exact table — the
     // argmax plus the next valid entries that are pairwise
     // symbol-disjoint with it (incl. concat symbols; disjoint pairs'
     // counts cannot change under each other's merges, so their
@@ -1116,13 +1117,13 @@ object Curation {
     //   below, and the sequence stays EXACT in every case.
     // ADAPTIVE width: the staged job's cost grows with the number of
     // speculated stages, so a low-acceptance dictionary (shared top
-    // symbols, count ties — the probe's base-4 table) must not pay a
+    // symbols, count ties — a synthetic base-4 table) must not pay a
     // 16-stage scan to land one merge. Start at 1, double on a fully
     // accepted round, shrink to half the accepted run on a rejection —
     // worst case degrades to exactly the one-merge round, and
-    // well-separated dictionaries climb to the cap (measured in
-    // BpeDictProbe: a fixed 16-wide speculation was 2-3x SLOWER than
-    // no speculation on the probe tables; adaptive recovers the
+    // well-separated dictionaries climb to the cap (measured on
+    // synthetic dictionaries: a fixed 16-wide speculation was 2-3x
+    // SLOWER than no speculation on those tables; adaptive recovers the
     // incremental floor there while keeping the batched ceiling).
     val specCap = math.max(1, rewriteEvery)
     var specWidth = 1

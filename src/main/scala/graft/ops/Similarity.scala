@@ -557,7 +557,7 @@ object Similarity {
     // by `knownCount` — the corpus count the SIZED callers (the auto /
     // rerank audit rows, which size nlist from n) already hold — so no
     // extra job runs anywhere: a dedicated count() here was measured
-    // at +85-190 ms per training at sf0.1 (IvfTrainProbe), the whole
+    // at +85-190 ms per training at sf0.1, the whole
     // Lloyd cost at that scale. Unknown-count callers (fixed small
     // nlist — their training is O(n·16·dim), cheap at every rung) keep
     // the full-corpus path unconditionally.

@@ -201,28 +201,29 @@ final class SparkExpectations(
       config0.copy(enableDetailedStats = true)
     else config0
 
+  /** Every rule, active or not, with its {param}s substituted once. */
+  private val substituted: Seq[Rule] =
+    rules.map(RulesReader.substituteParams(_, config.params))
+
+  // composite query_dq expectations are split at prep time, like the
+  // reference's reader (utils/reader.py:183-259): the stored expectation
+  // becomes the base with {alias} → (sql) substituted
+  private val querySplits: Seq[(Rule, CompositeQuerySplitter.SplitQuery)] =
+    substituted.filter(r => r.ruleType == RuleType.QueryDq.name && r.isActive)
+      .map(r => r -> CompositeQuerySplitter.split(r.expectation, r.queryDqDelimiter))
+
   private val grouped: Map[RuleType, Seq[Rule]] =
     RuleType.all.map { t =>
-      t -> rules.filter(r => r.ruleType == t.name && r.isActive)
-        .map(RulesReader.substituteParams(_, config.params))
-        .map { r =>
-          // composite query_dq expectations are split at prep time, like
-          // the reference's reader (utils/reader.py:183-259): the stored
-          // expectation becomes the base with {alias} → (sql) substituted
-          if (t == RuleType.QueryDq)
-            r.copy(expectation =
-              CompositeQuerySplitter.split(r.expectation, r.queryDqDelimiter).baseExpectation)
-          else r
-        }
+      t -> (if (t == RuleType.QueryDq)
+        querySplits.map { case (r, split) => r.copy(expectation = split.baseExpectation) }
+      else substituted.filter(r => r.ruleType == t.name && r.isActive))
     }.toMap
 
   /** alias → sub-query SQL per composite query_dq rule (pre-split). */
   private val querySubQueries: Map[String, Map[String, String]] =
-    rules.filter(r => r.ruleType == RuleType.QueryDq.name && r.isActive)
-      .map(RulesReader.substituteParams(_, config.params))
-      .map(r => r.rule ->
-        CompositeQuerySplitter.split(r.expectation, r.queryDqDelimiter).subQueries)
-      .filter(_._2.nonEmpty).toMap
+    querySplits.collect {
+      case (r, split) if split.subQueries.nonEmpty => r.rule -> split.subQueries
+    }.toMap
 
   val settings: ExecutionSettings = RulesReader.executionSettings(grouped)
 
@@ -267,7 +268,6 @@ final class SparkExpectations(
     // `df.selectExpr(expectation).limit(1)` check
     // (validate_rules.py:331), done here by analysis only (no job)
     val validationWarnings = scala.util.Try {
-      val substituted = rules.map(RulesReader.substituteParams(_, config.params))
       val static = graft.rules.RuleValidator.validate(spark, substituted)
       val flagged = static.map(_.rule.rule).toSet
       static ++ graft.rules.RuleValidator.probe(df,

@@ -2,6 +2,7 @@ package graft.sink
 
 import graft.model.{Rule, RuleFailureSummary, RunContext}
 import graft.eval.MaskedRowDqEvaluator
+import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +56,7 @@ object ErrorWriter {
         "description"       -> s.description,
         "rule_type"         -> s.ruleType,
         "error_drop_threshold" -> s.errorDropThreshold.toString,
-        "error_drop_percentage" -> f"${s.failedPct(inputCount)}%.2f",
+        "error_drop_percentage" -> "%.2f".formatLocal(Locale.ROOT, s.failedPct(inputCount)),
         "failed_row_count"  -> s.failedRowCount.toString,
         "threshold_breached" -> s.thresholdBreached(inputCount).toString)
     }

@@ -29,6 +29,13 @@ class DetailedEvaluatorSpec extends SparkSpec {
     RuleStageEvaluator.parse("case when sum(x) > 1 then true end") shouldBe None
   }
 
+  test("parse skips backslash-escaped quotes inside string literals") {
+    RuleStageEvaluator.parse("""sum(if(c = 'a\'', 1, 0)) > 2""") shouldBe
+      Some(("""sum(if(c = 'a\'', 1, 0))""", ">", Seq("2")))
+    RuleStageEvaluator.parse("""count(case when name = 'O\'Brien' then 1 end) = 0""") shouldBe
+      Some(("""count(case when name = 'O\'Brien' then 1 end)""", "=", Seq("0")))
+  }
+
   test("run computes actual values and statuses in one job") {
     val rules = Seq(
       Rule("p", "t", "agg_dq", "sum10", "x", "sum(x) = 10"),

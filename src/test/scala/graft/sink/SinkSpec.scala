@@ -2,7 +2,8 @@ package graft.sink
 
 import graft.SparkSpec
 import graft.eval.MaskedRowDqEvaluator
-import graft.model.{Rule, RunContext}
+import graft.model.{Rule, RuleFailureSummary, RunContext}
+import java.util.Locale
 import org.apache.spark.sql.functions._
 
 class SinkSpec extends SparkSpec {
@@ -49,6 +50,16 @@ class SinkSpec extends SparkSpec {
     byRule("gt1")("error_drop_percentage") shouldBe "33.33"
     byRule("gt1")("threshold_breached") shouldBe "true"  // 33% > 10, alert enabled
     byRule("gt9")("threshold_breached") shouldBe "false" // alert not enabled
+  }
+
+  test("thresholds writes error_drop_percentage with a '.' under any default locale") {
+    val failing = RuleFailureSummary("r", "row_dq", "ignore", "", "", "c",
+      failedRowCount = 1, errorDropThreshold = 10, enableErrorDropAlert = true)
+    val saved = Locale.getDefault(Locale.Category.FORMAT)
+    Locale.setDefault(Locale.Category.FORMAT, Locale.GERMANY)
+    try ErrorWriter.thresholds(Seq(failing), inputCount = 3)
+      .head("error_drop_percentage") shouldBe "33.33"
+    finally Locale.setDefault(Locale.Category.FORMAT, saved)
   }
 
   test("stats pct rounds to 2 decimals") {
