@@ -88,17 +88,24 @@ object Bench {
     * median-of-3 protocol, and reps are steady-state after warmup.
     * CDS requires every classpath entry to be a JAR and the dump/use
     * classpaths to match, so directory entries (sbt's target/classes)
-    * are jarred once into temp files shared by all children. Any
-    * failure (jarring, dump child, empty archive) falls back to the
-    * round-12 fork flags unchanged.
+    * are jarred once into temp files in `tmpDir` shared by all
+    * children. Those files are `deleteOnExit`, which a killed bench
+    * never runs, so this first deletes the `graft-bench-cp*.jar` and
+    * `graft-bench-cds*.jsa` files earlier runs left in `tmpDir` (two
+    * benches sharing one temp dir must not overlap). Any failure
+    * (jarring, dump child, empty archive) falls back to the round-12
+    * fork flags unchanged.
     */
-  private def cdsClasspath(): Option[String] = Try {
+  private[graft] def cdsClasspath(tmpDir: java.io.File): Option[String] = Try {
+    Option(tmpDir.listFiles()).toSeq.flatten
+      .filter(_.getName.matches("graft-bench-(cp.*\\.jar|cds.*\\.jsa)"))
+      .foreach(_.delete())
     val sep = java.io.File.pathSeparator
     System.getProperty("java.class.path").split(sep).map { e =>
       val f = new java.io.File(e)
       if (!f.isDirectory) e
       else {
-        val jar = java.io.File.createTempFile("graft-bench-cp", ".jar")
+        val jar = java.io.File.createTempFile("graft-bench-cp", ".jar", tmpDir)
         jar.deleteOnExit()
         val out = new java.util.zip.ZipOutputStream(
           new java.io.BufferedOutputStream(new java.io.FileOutputStream(jar)))
@@ -123,10 +130,11 @@ object Bench {
     * dump run loads the full parquet/SQL/codegen stack) and return the
     * (classpath, archive) pair for the timed children, or None.
     */
-  private def cdsPrepare(sfDir: String): Option[(String, String)] =
-    cdsClasspath().flatMap { cp =>
+  private def cdsPrepare(sfDir: String): Option[(String, String)] = {
+    val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
+    cdsClasspath(tmpDir).flatMap { cp =>
       val archive = Try {
-        val a = java.io.File.createTempFile("graft-bench-cds", ".jsa")
+        val a = java.io.File.createTempFile("graft-bench-cds", ".jsa", tmpDir)
         a.delete(); a.deleteOnExit()
         a.getAbsolutePath
       }.toOption
@@ -136,6 +144,7 @@ object Bench {
           new java.io.File(path).length() > 0
       }.map(cp -> _)
     }
+  }
 
   /** Fork one child JVM for `name`; None if the fork or its output parse
     * fails (caller falls back to in-process). `gc` overrides the child's

@@ -23,9 +23,10 @@ import org.apache.spark.storage.StorageLevel
 object Curation {
 
   /** `summary`: one row per `langCol` value (total_tokens, n_docs,
-    * n_sequences, last_fill). `release()` unpersists the shared subtree
-    * (call after the result is materialized; long-lived apps otherwise
-    * accumulate executor cache — see Decontaminate's persistIndex).
+    * n_sequences, last_fill). `release()` unpersists the pipeline's
+    * caches — the survivor frame and decontamination's two shingle
+    * indexes (call after the result is materialized; long-lived apps
+    * otherwise accumulate executor cache).
     */
   final case class CurationRun(summary: DataFrame, release: () => Unit)
 
@@ -39,7 +40,7 @@ object Curation {
       minTokens: Long = 10L,
       k: Int = 3,
       tau: Double = 0.5,
-      budget: Int = 256): CurationRun = {
+      budget: Int = 256): CurationRun = Caches.owning { c =>
     val bench = docs.filter(col(idCol) % benchMod === 0)
     val train = docs.filter(col(idCol) % benchMod =!= 0)
 
@@ -55,22 +56,23 @@ object Curation {
     // the scoring regexes until the cache fills), and at 100 TB caching
     // surviving corpus TEXT per stage is not an option while the id set
     // is a few longs per survivor.
-    val deduped = TopK.rank(kept, Seq(col("fp")), Seq(col(idCol)), 1, "rn")
-      .select(col(idCol), col(langCol), col("n_tokens"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    deduped.count()
+    val deduped = c.keep(TopK.rank(kept, Seq(col("fp")), Seq(col(idCol)), 1, "rn")
+      .select(col(idCol), col(langCol), col("n_tokens")))
 
     val dedupedText = train.select(col(idCol), col(textCol))
       .join(deduped.select(col(idCol)), Seq(idCol))
-    val bad = Decontaminate.containmentPairs(
-        dedupedText, bench, idCol, textCol, k = k, tau = tau)
+    // the two shingle indexes are pipeline caches too: owned here
+    val bad = Decontaminate.containmentPairsFromIndex(
+        c.keep(Dedup.shingleFpRows(dedupedText, idCol, textCol, k)),
+        c.keep(Dedup.shingleFpRows(bench, idCol, textCol, k)),
+        tau, dfCap = 512)
       .select(col("train_id").as(idCol)).distinct()
     val clean = deduped.join(bad, Seq(idCol), "left_anti")
     val packed = Packing.packByOrder(
       clean.select(col(idCol), col(langCol), col("n_tokens")),
       tokensCol = "n_tokens", orderCol = idCol, partCol = langCol, budget = budget)
     val summary = Packing.packSummary(packed, langCol, budget = budget)
-    CurationRun(summary, () => { deduped.unpersist(); () })
+    CurationRun(summary, c.release)
   }
 
   /** The staged frames of [[pipelineV2]], exposed so each stage's
@@ -115,7 +117,7 @@ object Curation {
       minQuality: Double = 0.5,
       blockSize: Int = 32,
       alpha: Double = 0.5,
-      tokenBudget: Long = 15000L): PipelineV2Stages = {
+      tokenBudget: Long = 15000L): PipelineV2Stages = Caches.owning { c =>
     val minQ = math.floor(minQuality * 1000000.0).toLong
     // `gated` is consumed twice (the dedup kernel and the lang
     // re-attach) inside the ONE action that materializes `deduped` —
@@ -126,18 +128,16 @@ object Curation {
     val gated = docs
       .select(col(idCol), col(langCol), col(textCol))
       .filter(TA.qualityScoreQ(col(textCol)) >= minQ)
-    val deduped = Dedup.blockDedup(gated, idCol, textCol, blockSize)
+    val deduped = c.keep(Dedup.blockDedup(gated, idCol, textCol, blockSize)
       .join(gated.select(col(idCol), col(langCol)), Seq(idCol))
       .select(col(idCol), col(langCol),
         TA.tokenCount(col("text_dedup")).cast("long").as("n_tokens"),
-        TA.qualityScoreQ(col("text_dedup")).as("q2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    deduped.count()
+        TA.qualityScoreQ(col("text_dedup")).as("q2")))
     val mixed = Sampling.temperatureSample(deduped, langCol, idCol, alpha)
     val budgeted = tokenBudgetGate(mixed, "q2", "n_tokens", tokenBudget,
-      persistScored = false, quantized = true)
+      quantized = true)
     PipelineV2Stages(gated.select(col(idCol), col(langCol)), deduped, mixed,
-      budgeted, () => { deduped.unpersist(); () })
+      budgeted, c.release)
   }
 
   /** See [[pipelineV2Stages]] — this is its per-language summary. */
@@ -207,23 +207,20 @@ object Curation {
       bucketWidth: Int = 32,
       batchSize: Int = 8,
       nShards: Int = 4,
-      shardBy: Option[Column] = None): PipelineV3Stages = {
-    val kept0 = classifierGate(docs, idCol, textCol, model,
+      shardBy: Option[Column] = None): PipelineV3Stages = Caches.owning { c =>
+    val kept0 = c.keep(classifierGate(docs, idCol, textCol, model,
         carry = Seq(col(langCol),
           TA.tokenCount(col(textCol)).cast("long").as("n_tokens")))
-      .select(col(idCol), col(langCol), col("n_tokens"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    kept0.count()
+      .select(col(idCol), col(langCol), col("n_tokens")))
     val sv0 = docs.join(kept0.select(col(idCol)), Seq(idCol))
     // cover-free span stats: kept0 IS the id universe, so survivors are
     // its anti-join against the over-threshold ids (no sampled spans ≡
     // absent from the stats frame ≡ kept)
-    val bad1 = Dedup.spanDupStats(sv0, idCol, textCol, k = spanK, sel = spanSel)
+    val bad1 = Dedup.spanDupStatsFromIndex(
+        c.keep(Dedup.spanDupIndex(sv0, idCol, textCol, spanK, spanSel)))
       .filter(col("n_dup").cast("double") / col("n_sampled") > maxDupRatio)
       .select(col("id").as(idCol))
-    val kept1 = kept0.join(bad1, Seq(idCol), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    kept1.count()
+    val kept1 = c.keep(kept0.join(bad1, Seq(idCol), "left_anti"))
     val sv1 = docs.join(kept1.select(col(idCol)), Seq(idCol))
     // attachMissing=false because the OOV gate below KEEPS docs absent
     // from the stats frame (no bigrams ≡ NULL oov_rate ≡ kept),
@@ -241,8 +238,7 @@ object Curation {
         sum(col("n_tokens")).as("total_tokens"),
         countDistinct(struct(col("bucket"), col("shard"), col("batch_id")))
           .as("n_batches"))
-    PipelineV3Stages(kept0, kept1, lm, batched, summary,
-      () => { kept0.unpersist(); kept1.unpersist(); () })
+    PipelineV3Stages(kept0, kept1, lm, batched, summary, c.release)
   }
 
   /** Staged frames of [[pipelineV4Stages]]: `selected` the narrow
@@ -282,7 +278,7 @@ object Curation {
       langCol: String = "lang",
       textCol: String = "text",
       refLang: String = "en",
-      buckets: Int = 65536): PipelineV4Stages = {
+      buckets: Int = 65536): PipelineV4Stages = Caches.owning { c =>
     // the pipeline owns its caches so release() can free them. Only TWO
     // frames persist: the narrow weights (the resample's max aggregate
     // and membership filter both read it, and its lineage — the fused
@@ -291,15 +287,13 @@ object Curation {
     // lineage past the weights cache is a trivial filter + one-row max
     // attach, so each text consumer re-deriving it costs a cache scan,
     // cheaper than another eager materialization barrier.
-    val weights = importanceWeightsSelf(docs, col(langCol) === refLang,
+    val weights = c.keep(importanceWeightsSelf(docs, col(langCol) === refLang,
         idCol, textCol, buckets, attachMissing = false)
       .filter(col("weight").isNotNull)
       // carry the exact count columns: the integer resample gate below
       // decides membership by cross-multiplication on them (two more
       // longs per row — still narrow)
-      .select(col(idCol), col("target_hits"), col("raw_hits"), col("weight"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    weights.count()
+      .select(col(idCol), col("target_hits"), col("raw_hits"), col("weight")))
     val selected = importanceResampleExact(weights, idCol)
       .select(col(idCol))
     val sv = docs.join(selected, Seq(idCol))
@@ -307,21 +301,17 @@ object Curation {
     // rows would be dead weight
     val lm = ngramLmScore(sv.filter(col(langCol) === refLang), sv,
       idCol, textCol, attachMissing = false)
-    // narrow scored frame persisted HERE (not inside ccnetBuckets) so
-    // release() owns it — otherwise the tercile histogram and the
-    // assignment join each recompute the LM explodes
-    val scored = lm.join(docs.select(col(idCol), col(langCol)), Seq(idCol))
-      .select(col(idCol), col(langCol), col("n_bigrams"), col("lm_score"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    scored.count()
-    val bucketed = ccnetBuckets(scored, langCol, "lm_score",
-      persistScored = false)
+    // narrow scored frame kept HERE (ccnetBuckets caches nothing) —
+    // otherwise the tercile histogram and the assignment join each
+    // recompute the LM explodes
+    val scored = c.keep(lm.join(docs.select(col(idCol), col(langCol)), Seq(idCol))
+      .select(col(idCol), col(langCol), col("n_bigrams"), col("lm_score")))
+    val bucketed = ccnetBuckets(scored, langCol, "lm_score")
     val kept = bucketed.filter(col("bucket") =!= "tail")
     val summary = kept.groupBy(col(langCol), col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_bigrams") + lit(1L)).as("total_tokens"))
-    PipelineV4Stages(selected, bucketed, kept, summary,
-      () => { weights.unpersist(); scored.unpersist(); () })
+    PipelineV4Stages(selected, bucketed, kept, summary, c.release)
   }
 
   /** Staged frames of [[pipelineV5Stages]]: `clean` the decontaminated
@@ -365,7 +355,7 @@ object Curation {
         * `benchDf` instead.
         */
       benchMod: Int = 10,
-      benchDf: Option[DataFrame] = None): PipelineV5Stages = {
+      benchDf: Option[DataFrame] = None): PipelineV5Stages = Caches.owning { c =>
     val train = benchDf.map(_ => docs)
       .getOrElse(docs.filter(col(idCol) % benchMod =!= 0))
     val bench = benchDf
@@ -373,18 +363,15 @@ object Curation {
     val unflagged = Decontaminate
       .contaminationScore(train, bench, idCol, textCol, k = 3, tau = tau)
       .filter(!col("flagged")).select(col("train_id").as(idCol))
-    val clean = train.join(unflagged, Seq(idCol))
+    val clean = c.keep(train.join(unflagged, Seq(idCol))
       .select(col(idCol), col(langCol),
-        TA.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    clean.count()
+        TA.tokenCount(col(textCol)).cast("long").as("n_tokens")))
     val mixed = Sampling.mixtureSelect(clean, langCol, idCol, shares,
       weightCol = Some("n_tokens"))
     val summary = mixed.groupBy(col(langCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"))
-    PipelineV5Stages(clean, mixed, summary,
-      () => { clean.unpersist(); () })
+    PipelineV5Stages(clean, mixed, summary, c.release)
   }
 
   /** Stage handles of [[pipelineV6Stages]]: `labeled` the narrow
@@ -419,8 +406,8 @@ object Curation {
     * the cap, and the summary base), and the audit result itself
     * (<= (#splits+1)² rows, three consumers). All id-set sized or
     * smaller, never document text; `release()` owns all three. The
-    * pair tier runs with `persistIndex=false` — its internal shingle
-    * index would be an unowned corpus-scale cache here.
+    * pair tier's shingle index is built here (the FromIndex form),
+    * cached for the pair list's one count and dropped right after.
     *
     * Scale shape: every stage is the already-audited operator — the
     * pair tier is df-capped, the closure is the union-find
@@ -437,44 +424,39 @@ object Curation {
         Seq(("train", 900000L), ("val", 50000L), ("test", 50000L)),
       k: Int = 3,
       tau: Double = 0.8,
-      capPerDomain: Long = 800L): PipelineV6Stages = {
+      capPerDomain: Long = 800L): PipelineV6Stages = Caches.owning { c =>
     // the pair tier's (id, s) shingle index feeds FOUR subtrees (sizes,
     // both self-join sides, the over-cap supplement) — own it HERE via
     // the FromIndex form and drop it the moment the pair list (the
     // durable cache) materializes: the index is scaffolding for one
     // build, never pipeline state (the former persistIndex=false
     // recomputed the shingle explode per consumer — measured ~25% of
-    // the composition at sf0.1)
+    // the composition at sf0.1). It is cached LAZILY: the pair list's
+    // one eager count is the only action that reads it.
     val shingleIx = Dedup.shingleFpRows(docs, idCol, textCol, k)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = Dedup.ngramJaccardPairsFromIndex(shingleIx, tau)
-      .select(col("id_a"), col("id_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    shingleIx.unpersist()
+    val pairs =
+      try c.keep(Dedup.ngramJaccardPairsFromIndex(shingleIx, tau)
+        .select(col("id_a"), col("id_b")))
+      finally shingleIx.unpersist()
     val clusters = Dedup.connectedComponents(pairs)
       .select(col("doc_id").as(idCol), col("cluster_id"))
-    val labeled = Sampling.splitByGroup(
+    val labeled = c.keep(Sampling.splitByGroup(
       docs.select(col(idCol), col(srcCol),
           TA.tokenCount(col(textCol)).cast("long").as("n_tokens"),
           TA.qualityScoreQ(col(textCol)).as("q"))
         .join(clusters, Seq(idCol), "left")
         .withColumn("grp", coalesce(col("cluster_id"), col(idCol)))
         .drop("cluster_id"),
-      "grp", splits)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labeled.count()
+      "grp", splits))
     // the audit is <= (#splits+1)^2 rows but its subtree (two label
     // joins + aggregate) feeds THREE consumers (returned handle + both
     // union branches of the per-split cross counts) — persist the tiny
     // result, owned by release()
-    val audit = Sampling.splitLeakageAudit(pairs, labeled, idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    audit.count()
+    val audit = c.keep(Sampling.splitLeakageAudit(pairs, labeled, idCol))
     val capped = groupTokenCap(
         labeled.withColumn("__ss", concat_ws("|", col("split"), col(srcCol))),
-        "__ss", "q", "n_tokens", capPerDomain,
-        persistScored = false, quantized = true)
+        "__ss", "q", "n_tokens", capPerDomain, quantized = true)
       .drop("__ss")
     val cross = audit.filter(col("split_a") =!= col("split_b"))
     val crossPerSplit = cross
@@ -493,8 +475,7 @@ object Curation {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"),
         coalesce(col("n_cross_pairs"), lit(0L)).as("n_cross_pairs"))
-    PipelineV6Stages(labeled, audit, capped, summary,
-      () => { pairs.unpersist(); labeled.unpersist(); audit.unpersist(); () })
+    PipelineV6Stages(labeled, audit, capped, summary, c.release)
   }
 
   /** Stage handles of [[pipelineV7Stages]]: `keptIds` the narrow gated
@@ -537,13 +518,11 @@ object Curation {
       srcCol: String = "source",
       textCol: String = "text",
       maxTopBigramPpm: Long = 100000L,
-      numMerges: Int = 6): PipelineV7Stages = {
+      numMerges: Int = 6): PipelineV7Stages = Caches.owning { c =>
     val ppm = TA.gopherRepetition(docs, idCol, textCol,
       topNs = Seq(2), dupNs = Seq.empty)
-    val keptIds = ppm.filter(col("top2_ppm") <= maxTopBigramPpm)
-      .select(col(idCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    keptIds.count()
+    val keptIds = c.keep(ppm.filter(col("top2_ppm") <= maxTopBigramPpm)
+      .select(col(idCol)))
     val kept = docs.join(keptIds, Seq(idCol), "left_semi")
     val merges = collectMerges(bpeTrain(kept, numMerges, idCol, textCol))
     val encoded = kept.select(col(idCol), col(srcCol),
@@ -560,8 +539,7 @@ object Curation {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         (col("n_docs") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"),
         coalesce(col("bpe_tokens"), lit(0L)).as("bpe_tokens"))
-    PipelineV7Stages(keptIds, merges, encoded, summary,
-      () => { keptIds.unpersist(); () })
+    PipelineV7Stages(keptIds, merges, encoded, summary, c.release)
   }
 
   /** Stage handles of [[pipelineV8Stages]]: `audit` the per-round
@@ -604,7 +582,7 @@ object Curation {
       initShares: Map[String, Long] =
         Map("en" -> 1L, "de" -> 1L, "es" -> 1L, "fr" -> 1L, "zh" -> 1L),
       rounds: Int = 2,
-      eta: Long = 1L): PipelineV8Stages = {
+      eta: Long = 1L): PipelineV8Stages = Caches.owning { c =>
     val (audit, tuned) = mixtureReweightRun(docs, strataCol, idCol, textCol,
       initShares, rounds, eta)
     val selected = Sampling.mixtureSelect(
@@ -618,7 +596,7 @@ object Curation {
         sum(col(massCol).cast("long")).as("total_chars"))
       .withColumn("weight", weight)
       .select(col(strataCol), col("weight"), col("n_docs"), col("total_chars"))
-    PipelineV8Stages(audit, tuned, selected, summary, () => ())
+    PipelineV8Stages(audit, tuned, selected, summary, c.release)
   }
 
   /** Per-source boilerplate phrases: the distinct k-token n-grams that
@@ -738,20 +716,16 @@ object Curation {
   def docRarity(
       docs: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      persistTokens: Boolean = false): DataFrame = {
-    val toks0 = docs.select(col(idCol).as("id"),
-        explode(split(col(textCol), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+      textCol: String = "text"): DataFrame = {
     // the token frame feeds BOTH the tf aggregation and the re-join, so
     // the explode runs twice — deliberately: the token stream is
     // corpus-sized, so caching it would write ~the whole corpus to
     // memory/disk (and measured SLOWER than the re-scan even at sf0.1);
     // re-reading one parquet string column is the cheaper side of the
-    // trade at every scale. persistTokens=true opts in for small inputs
-    val toks = if (persistTokens)
-      toks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else toks0
+    // trade at every scale
+    val toks = docs.select(col(idCol).as("id"),
+        explode(split(col(textCol), " ")).as("token"))
+      .filter(length(col("token")) > 0)
     val vocab = toks.groupBy(col("token"), col("id")).agg(count(lit(1)).as("c"))
       .groupBy(col("token")).agg(sum(col("c")).as("tf"))
     toks.join(vocab, Seq("token"))
@@ -1023,11 +997,9 @@ object Curation {
     val spark = dictDf.sparkSession
     import spark.implicits._
     import org.apache.spark.unsafe.types.UTF8String
-    var words = dictDf.select(
+    var words = Caches.eager(dictDf.select(
         concat(lit("|"), regexp_replace(col("token"), "(?s)(.)", "$1|")).as("w"),
-        col("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    words.count()
+        col("tf")))
 
     // adjacent-pair aggregate over a (w, tf) frame — the ONE pair-
     // extraction shape, used by both the seed recount and the deltas
@@ -1074,9 +1046,7 @@ object Curation {
 
     def flushRewrite(): Unit = if (pending.nonEmpty) {
       val stacked = words.withColumn("w", chained(col("w"), pending.toSeq))
-      var next = spark.createDataFrame(stacked.rdd, stacked.schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count()
+      var next = Caches.eager(spark.createDataFrame(stacked.rdd, stacked.schema))
       words.unpersist()
       rewrites += 1
       if (rewrites % truncateEvery == 0) {
@@ -1369,30 +1339,19 @@ object Curation {
     * corpus size — the histogram trick), a single-partition window
     * cumsum over that tiny histogram, and a 1-row threshold broadcast
     * back as a cross join. The scored frame feeds the histogram AND the
-    * gate, so it is persisted by default (opt out via `persistScored`
-    * when an upstream persist already covers it). Nothing global-sorts,
-    * nothing big reaches the driver.
+    * gate; the gate caches nothing (a cache it returned no handle for
+    * could never be released), so a caller whose score expression is
+    * too dear to run twice keeps `scored` in its own [[Caches]] owner.
+    * Nothing global-sorts, nothing big reaches the driver.
     */
   def quantileGate(
       scored: DataFrame,
       scoreCol: String,
-      dropFrac: Double,
-      persistScored: Boolean = true): DataFrame = {
+      dropFrac: Double): DataFrame = {
     require(dropFrac >= 0 && dropFrac < 1, "dropFrac out of [0,1)")
     if (dropFrac == 0) return scored
-    // the scored frame is scanned by the histogram AND the gate —
-    // persist by default so the (often expensive) score expression
-    // computes once, and materialize EAGERLY (both consumers sit in the
-    // same final action; racing a lazy cache re-runs the score
-    // expression nondeterministically). Opt out when the caller
-    // persists upstream.
-    val src = if (persistScored) {
-      val p = scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else scored
     val q = floor(col(scoreCol) * lit(1000000.0)).cast("long")
-    val hist = src.select(q.as("__q"))
+    val hist = scored.select(q.as("__q"))
       .groupBy(col("__q")).agg(count(lit(1)).as("__c"))
     // the histogram is tiny (≤1e6 rows): a single-partition running sum
     // is the cheapest correct cumsum, and n rides the same frame
@@ -1404,7 +1363,7 @@ object Curation {
         sum(col("__c")).over(wAll).as("__n"))
       .filter(col("__cum") >= floor(lit(dropFrac) * col("__n")) + lit(1L))
       .agg(min(col("__q")).as("__thr"))
-    src.crossJoin(threshold).filter(q >= col("__thr")).drop("__thr")
+    scored.crossJoin(threshold).filter(q >= col("__thr")).drop("__thr")
   }
 
   /** Per-group percentile normalization: each row's `pct` = fraction of
@@ -1438,28 +1397,22 @@ object Curation {
     * TOKEN-WEIGHTED (`sum(tokens)` per bucket instead of row counts):
     * one corpus aggregate into ≤1e6 buckets, a single-partition
     * descending cumsum over that tiny histogram, a 1-row threshold
-    * cross-joined back. Nothing global-sorts.
+    * cross-joined back. Nothing global-sorts. Caches nothing — see
+    * [[quantileGate]].
     */
   def tokenBudgetGate(
       scored: DataFrame,
       scoreCol: String,
       tokensCol: String,
       budget: Long,
-      persistScored: Boolean = true,
       quantized: Boolean = false): DataFrame = {
     require(budget > 0, "budget must be positive")
-    // eager persist, same rationale as quantileGate's
-    val src = if (persistScored) {
-      val p = scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else scored
     // quantized=true: scoreCol already holds the integer bucket (e.g.
     // TextAnalysis.qualityScoreQ) — skip the double-path floor so the
     // gate is exact end-to-end for integer-scored compositions.
     val q = if (quantized) col(scoreCol).cast("long")
     else floor(col(scoreCol) * lit(1000000.0)).cast("long")
-    val hist = src.select(q.as("__q"), col(tokensCol).cast("long").as("__tk"))
+    val hist = scored.select(q.as("__q"), col(tokensCol).cast("long").as("__tk"))
       .groupBy(col("__q")).agg(sum(col("__tk")).as("__t"))
     val wDesc = Window.orderBy(col("__q").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1468,7 +1421,7 @@ object Curation {
       .filter(col("__cum") <= budget)
       .agg(min(col("__q")).as("__thr"))
     // an over-budget top bucket leaves __thr null: nothing fits
-    src.crossJoin(threshold)
+    scored.crossJoin(threshold)
       .filter(col("__thr").isNotNull && q >= col("__thr"))
       .drop("__thr")
   }
@@ -1497,7 +1450,8 @@ object Curation {
     *
     * Groups whose TOP bucket alone overflows the cap keep nothing
     * (inner join against a threshold-less group drops it), matching
-    * [[tokenBudgetGate]]'s nothing-fits contract.
+    * [[tokenBudgetGate]]'s nothing-fits contract. Caches nothing — see
+    * [[quantileGate]].
     */
   def groupTokenCap(
       scored: DataFrame,
@@ -1505,17 +1459,11 @@ object Curation {
       scoreCol: String,
       tokensCol: String,
       capPerGroup: Long,
-      persistScored: Boolean = true,
       quantized: Boolean = false): DataFrame = {
     require(capPerGroup > 0, "capPerGroup must be positive")
-    val src = if (persistScored) {
-      val p = scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else scored
     val q = if (quantized) col(scoreCol).cast("long")
     else floor(col(scoreCol) * lit(1000000.0)).cast("long")
-    val hist = src.select(col(groupCol), q.as("__q"),
+    val hist = scored.select(col(groupCol), q.as("__q"),
         col(tokensCol).cast("long").as("__tk"))
       .groupBy(col(groupCol), col("__q")).agg(sum(col("__tk")).as("__t"))
     val wDesc = Window.partitionBy(col(groupCol)).orderBy(col("__q").desc)
@@ -1525,7 +1473,7 @@ object Curation {
         sum(col("__t")).over(wDesc).as("__cum"))
       .filter(col("__cum") <= capPerGroup)
       .groupBy(col(groupCol)).agg(min(col("__q")).as("__thr"))
-    src.join(thresholds, Seq(groupCol))
+    scored.join(thresholds, Seq(groupCol))
       .filter(q >= col("__thr"))
       .drop("__thr")
   }
@@ -1588,21 +1536,14 @@ object Curation {
     * nothing engine-variant anywhere ([[pipelineV2Stages]]'s gate
     * discipline). Same scale shape as [[groupQuantiles]]: one corpus
     * aggregate into a tiny per-group histogram, windows over the
-    * histogram only, thresholds join back broadcast-sized.
+    * histogram only, thresholds join back broadcast-sized. The scored
+    * frame feeds the histogram AND the assignment join; caches nothing
+    * — see [[quantileGate]].
     */
   def ccnetBuckets(scored: DataFrame, groupCol: String,
-                   scoreCol: String,
-                   persistScored: Boolean = true): DataFrame = {
+                   scoreCol: String): DataFrame = {
     val q = floor(col(scoreCol) * lit(1000000.0)).cast("long")
-    // the scored frame feeds the histogram AND the assignment join —
-    // persist eagerly by default (same contract/leak trade as
-    // quantileGate); opt out when the caller persists upstream
-    val src0 = scored.filter(col(scoreCol).isNotNull)
-    val src = if (persistScored) {
-      val p = src0.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else src0
+    val src = scored.filter(col(scoreCol).isNotNull)
     val hist = src.select(col(groupCol), q.as("__q"))
       .groupBy(col(groupCol), col("__q")).agg(count(lit(1)).as("__c"))
     val wCum = Window.partitionBy(col(groupCol)).orderBy(col("__q"))
@@ -2310,34 +2251,26 @@ object Curation {
   def importanceResample(raw: DataFrame, target: DataFrame,
                          idCol: String = "doc_id",
                          textCol: String = "text",
-                         buckets: Int = 65536,
-                         persistWeights: Boolean = false): DataFrame =
+                         buckets: Int = 65536): DataFrame =
     importanceResampleFrom(
-      importanceWeights(raw, target, idCol, textCol, buckets),
-      idCol, persistWeights)
+      importanceWeights(raw, target, idCol, textCol, buckets), idCol)
 
   /** The selection step of [[importanceResample]], over any
     * weights-shaped frame (id, ..., weight) — e.g.
     * [[importanceWeightsSelf]]'s output.
     */
-  def importanceResampleFrom(weights: DataFrame, idCol: String = "doc_id",
-                             persistWeights: Boolean = false): DataFrame = {
+  def importanceResampleFrom(weights: DataFrame,
+                             idCol: String = "doc_id"): DataFrame = {
     // the narrow (id, weight) frame feeds the max aggregate AND the
-    // membership filter. No cache by default: the two consumers carry
-    // canonically identical weights subtrees, so within one action
-    // AQE's stage reuse computes the expensive exchanges once (measured
-    // equal to the persisted form) and nothing leaks. Opt in to the
-    // persist only when the SAME weights frame spans multiple actions
-    // and its lineage is not already cached (then the caller owns the
-    // unpersist via its own handle, as [[pipelineV4Stages]] does).
-    val w0 = weights
+    // membership filter, uncached: the two consumers carry canonically
+    // identical weights subtrees, so within one action AQE's stage
+    // reuse computes the expensive exchanges once (measured equal to
+    // the persisted form) and nothing leaks. A caller whose SAME
+    // weights frame spans several actions keeps it in its own
+    // [[Caches]] owner, as [[pipelineV4Stages]] does.
+    val w = weights
       .filter(col("weight").isNotNull)
       .select(col(idCol), col("weight"))
-    val w = if (persistWeights) {
-      val p = w0.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else w0
     val wmax = w.agg(max(col("weight")).as("__wmax"))
     w.crossJoin(wmax)
       // __wmax = 0 (no doc has any target affinity) must select nothing

@@ -40,19 +40,26 @@ object Decontaminate {
       dfCap: Int = 512,
       persistIndex: Boolean = true): DataFrame = {
     require(tau > 0 && tau <= 1, "tau out of (0,1]")
-    // Both shingle frames feed 2-4 consumers: persist by default and
-    // materialize EAGERLY (like Dedup.persisted — consumers racing a
-    // lazy cache recompute the shingle kernel nondeterministically).
-    // persistIndex=false opts out, so repeated calls in a long-lived
-    // application don't accumulate executor cache.
+    // Both shingle frames feed 2-4 consumers: cached by default
+    // (Caches.eager). persistIndex=false opts out, so repeated calls in
+    // a long-lived application don't accumulate executor cache.
     def persisted(df: DataFrame): DataFrame =
-      if (persistIndex) {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      } else df
-    val tEx = persisted(Dedup.shingleFpRows(train, idCol, textCol, k))
-    val bEx = persisted(Dedup.shingleFpRows(bench, idCol, textCol, k))
+      if (persistIndex) Caches.eager(df) else df
+    containmentPairsFromIndex(
+      persisted(Dedup.shingleFpRows(train, idCol, textCol, k)),
+      persisted(Dedup.shingleFpRows(bench, idCol, textCol, k)), tau, dfCap)
+  }
+
+  /** [[containmentPairs]] over (id, s) shingle frames
+    * ([[Dedup.shingleFpRows]]) the caller built — and caches, when it
+    * owns their lifetime (as [[Curation.pipeline]] does).
+    */
+  private[ops] def containmentPairsFromIndex(
+      tEx: DataFrame,
+      bEx: DataFrame,
+      tau: Double,
+      dfCap: Int): DataFrame = {
+    require(tau > 0 && tau <= 1, "tau out of (0,1]")
     val bSizes = bEx.groupBy(col("id")).agg(count(lit(1)).as("nb"))
 
     // train-side df only: the train corpus is the sf-scaling side; bench

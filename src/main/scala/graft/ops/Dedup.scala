@@ -184,26 +184,16 @@ object Dedup {
       .distinct()
   }
 
-  /** Persist AND eagerly materialize the index frame. Every caller
-    * hands it to 2+ subtrees of the pair plan (df counts, sizes,
-    * candidate self-join, exact verify): unpersisted, Spark re-runs the
+  /** The index frame through [[Caches.eager]]. Every caller hands it
+    * to 2+ subtrees of the pair plan (df counts, sizes, candidate
+    * self-join, exact verify): unpersisted, Spark re-runs the
     * scan+kernel+explode per consumer (measured at sf0.1:
-    * dedup_simhash 16-18 s vs 10-12 s persisted); persisted LAZILY,
-    * consumers racing the unfilled cache inside one action re-run the
-    * kernels a nondeterministic number of times (the round-5
-    * curation_pipeline_v3 variance mechanism — it applies to every
-    * multi-consumer persist). The eager count is the same work the
-    * first consumer would do — paid once, deterministically. A few
-    * bytes per shingle, spilling to disk beyond memory; released on
-    * `spark.catalog.clearCache()` or cache eviction (`on = false` opts
-    * out for long-lived applications).
+    * dedup_simhash 16-18 s vs 10-12 s persisted). A few bytes per
+    * shingle; released on `spark.catalog.clearCache()` or cache
+    * eviction (`on = false` opts out for long-lived applications).
     */
   private def persisted(ex: DataFrame, on: Boolean): DataFrame =
-    if (on) {
-      val p = ex.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else ex
+    if (on) Caches.eager(ex) else ex
 
   /** Pair-tier caches keyed by session: the survivor frames
     * [[fusedIntersectionsPruned]] persists under `persistPairs = true`
@@ -1287,11 +1277,21 @@ object Dedup {
     */
   def spanDupStats(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 40, sel: String = "0",
-                   persistIndex: Boolean = true): DataFrame = {
-    val ex = persisted(
-      spanFingerprints(df, idCol, textCol, k, sel)
-        .select(col("id"), xxhash64(col("h")).as("s")),
-      persistIndex)
+                   persistIndex: Boolean = true): DataFrame =
+    spanDupStatsFromIndex(
+      persisted(spanDupIndex(df, idCol, textCol, k, sel), persistIndex))
+
+  /** The (id, s) sampled-span index [[spanDupStats]] reads. */
+  private[ops] def spanDupIndex(df: DataFrame, idCol: String, textCol: String,
+                                k: Int, sel: String): DataFrame =
+    spanFingerprints(df, idCol, textCol, k, sel)
+      .select(col("id"), xxhash64(col("h")).as("s"))
+
+  /** [[spanDupStats]] over a [[spanDupIndex]] the caller built — and
+    * caches, when it owns its lifetime (as [[Curation.pipelineV3Stages]]
+    * does).
+    */
+  private[ops] def spanDupStatsFromIndex(ex: DataFrame): DataFrame = {
     val dfs = ex.groupBy(col("s")).agg(count(lit(1)).as("df_"))
     ex.join(dfs, Seq("s"))
       .groupBy(col("id"))

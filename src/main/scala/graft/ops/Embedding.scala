@@ -188,11 +188,7 @@ object Embedding {
       explode(fromExpr(graft.functions.ShingleBuckets(toExpr(col(textCol)), dim, k)))
         .as("d"))
     val v0 = buckets.groupBy(col("id"), col("d")).agg(count(lit(1)).as("c"))
-    val v = if (persist) {
-      val p = v0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else v0
+    val v = if (persist) Caches.eager(v0) else v0
     val norms = v.groupBy(col("id")).agg(sum(col("c") * col("c")).as("nn"))
     ShingleTfIndex(v, norms, dim, k, () => { if (persist) v.unpersist(); () })
   }

@@ -59,13 +59,7 @@ object Fuzzy {
                    persistIt: Boolean): DataFrame = {
     val d = df.select(col(idCol).cast("long").as("id"), col(textCol).as("t"),
       length(col(textCol)).cast("long").as("l"))
-    if (persistIt) {
-      // eager: 4+ consumers (segs, probes, short residue, verify
-      // re-attach) — racing a lazy cache recomputes the projection
-      val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else d
+    if (persistIt) Caches.eager(d) else d
   }
 
   /** (id_s, ls, i, h) — one row per segment of each long-enough doc. */

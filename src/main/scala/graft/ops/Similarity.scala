@@ -1162,12 +1162,7 @@ object Similarity {
       .crossJoin(b.select(col("id").as("nid"), col("vec").as("nv")))
       .withColumn("cosine", cosine(col("qv"), col("nv")))
       .select(col("qid"), col("nid"), col("cosine"))
-    val scored = if (persistScored) {
-      val p = scored0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else scored0
+    val scored = if (persistScored) Caches.eager(scored0) else scored0
     def ranked(part: Column, order: Column, keyName: String): DataFrame =
       TopK.rank(scored, Seq(part), Seq(col("cosine").desc, order), k)
         .select(part.as(keyName), col("rank"), col("cosine"))

@@ -1940,14 +1940,14 @@ object PipelineExtQueries {
       // NULL-score rows either way
       val lm = graft.ops.Curation.ngramLmScore(
         docs.filter(col("lang") === "en"), docs, attachMissing = false)
-      // own the scored persist HERE (persistScored = false below) so the
-      // summary can materialize and the cache release before returning
+      // own the scored persist HERE so the summary can materialize and
+      // the cache release before returning. It fills lazily, inside the
+      // summary's one collect
       val scored = lm.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("lm_score"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Tables.materializeAndRelease(
-        graft.ops.Curation.ccnetBuckets(scored, "lang", "lm_score",
-            persistScored = false)
+        graft.ops.Curation.ccnetBuckets(scored, "lang", "lm_score")
           .groupBy(col("lang"), col("bucket"))
           .agg(count(lit(1)).as("n_docs"))
           .orderBy("lang", "bucket"),
@@ -2234,11 +2234,10 @@ object PipelineExtQueries {
     // top-N dictionary entries cover — the number that sizes a
     // vocabulary (integer ppm; ties broken tf desc, token asc in both
     // engines). Vocab-bounded aggregates; nothing corpus-sized moves
-    QueryDef("vocab_coverage", (s, dir) => {
+    QueryDef("vocab_coverage", (s, dir) => graft.ops.Caches.owning { c =>
       val docs = Tables.load(s, dir, "documents")
-      val vocab = graft.ops.Curation.vocabulary(docs) // (token, tf, df)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      vocab.count() // eager (three consumers: total agg + two top-k)
+      // (token, tf, df); three consumers: total agg + two top-k
+      val vocab = c.keep(graft.ops.Curation.vocabulary(docs))
       // distributed top-k (orderBy+limit = TakeOrdered, no global
       // window over the vocabulary) — the ranks beyond 25 are never
       // materialized, so this scales to any vocabulary size
@@ -2249,7 +2248,7 @@ object PipelineExtQueries {
         .select(col("n_vocab"), col("total_tf"), col("top10_tf"), col("top25_tf"),
           expr("top10_tf * 1000000L DIV total_tf").as("cov10_ppm"),
           expr("top25_tf * 1000000L DIV total_tf").as("cov25_ppm"))
-      Tables.materializeAndRelease(out, () => { vocab.unpersist(); () })
+      Tables.materializeAndRelease(out, c.release)
     }, Some("""
       WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
       v AS (SELECT token, CAST(count(*) AS BIGINT) AS tf FROM tok
@@ -2342,7 +2341,7 @@ object PipelineExtQueries {
     // The op-level contract is engine-side: PlanContractSpec pins
     // scorecard-vs-dedup_minhash equality, and the dedup_minhash
     // oracle checks the banded candidate semantics directly --
-    QueryDef("dedup_scorecard", (s, dir) => {
+    QueryDef("dedup_scorecard", (s, dir) => graft.ops.Caches.owning { c =>
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("text"))
       import graft.ops.{Dedup, Embedding}
@@ -2365,12 +2364,8 @@ object PipelineExtQueries {
       // three tiers; lazy val init is synchronized, so whichever tier
       // thread gets here first materializes it and the others block on
       // the same cache
-      lazy val shingleIx = {
-        val p = Dedup.shingleFpRowsWithPos(docs, "doc_id", "text", k = 3)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      }
+      lazy val shingleIx =
+        c.keep(Dedup.shingleFpRowsWithPos(docs, "doc_id", "text", k = 3))
       val tiers: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
         "exact" -> (() =>
           pairsOfGroups(Dedup.exactGroups(docs, "doc_id", "text"))),
@@ -2396,13 +2391,11 @@ object PipelineExtQueries {
           dim = Embedding.sizedShingleDimFromIndex(shingleIx,
             targetDf = 4L, minDim = 1 << 10),
           k = 3, tauSqNum = 81L, tauSqDen = 100L, dfCap = 50L))))
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val built = Await.result(
-        Future.sequence(tiers.map { case (name, f) =>
-          Future(f().select(lit(name).as("tier"), col("n_pairs")))
-        }), scala.concurrent.duration.Duration.Inf)
-      built.reduce(_ union _).orderBy("tier")
+      val built = Chains.all(s)(tiers.map { case (name, f) =>
+        () => f().select(lit(name).as("tier"), col("n_pairs"))
+      })
+      Tables.materializeAndRelease(built.reduce(_ union _).orderBy("tier"),
+        c.release)
     }, Some(s"""
       WITH sh3 AS (
         SELECT doc_id, list_distinct(list_transform(

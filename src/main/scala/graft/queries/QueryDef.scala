@@ -52,13 +52,11 @@ object Tables {
     * survives the unpersist without recompute and the QueryDef leaks no
     * executor cache into embedding callers — the collect is bounded by
     * the summary's group count, same class as the other documented
-    * driver-side sites.
+    * driver-side sites. `release` runs even when the collect throws.
     */
   def materializeAndRelease(df: DataFrame, release: () => Unit): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.collect()
-    release()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    val rows = try df.collect() finally release()
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   /** The events table's `ts` precision depends on the testdata

@@ -748,33 +748,26 @@ object TextQueries {
       val nlist = Similarity.sizedIvfNlist(n)
       val nprobe = math.max(4, nlist / 4)
       val (na, of) = Similarity.sizedRerankKnobs(n)
-      // the two geometry audits share NOTHING (separate corpora,
-      // separate trainings, separate truth) and each is a serial chain
-      // of small jobs (sample, Lloyd collects, final aggregate) that
-      // underfills the machine — run them as concurrent driver-thread
-      // jobs (guide §2.6) so one chain's tail back-fills the other's
-      // idle cores; same frames, same results, FIFO-overlapped
-      val fUni = concurrent.Future(annRecallRow(s, dir, minRecall = 0.8)((q, e) =>
-        Similarity.ivfRerankTopK(q, e, k = 5, nlist = nlist,
-          nprobe = nprobe, nassign = na, overFetch = of,
-          knownCount = Some(n))).head())(
-        concurrent.ExecutionContext.global)
       val nc = n * ClusteredVariants // explode is exact: no second count job
       val cnlist = Similarity.sizedIvfNlist(nc)
       val cnprobe = math.max(4, cnlist / 4)
       val (cna, cof) = Similarity.sizedRerankKnobs(nc)
-      // the concurrent chain must be OBSERVED even when this chain
-      // throws (round-13 ADVICE fix): an abandoned Future keeps its
-      // Spark jobs running unsupervised and leaves its persisted frames
-      // cached, polluting the next query's timing
-      val clu = try {
-        val cl = clusteredVectors(s, dir)
-        annRecallRow(s, dir, minRecall = 0.8, vectors = Some(cl))((q, e) =>
+      // the two geometry audits share NOTHING (separate corpora,
+      // separate trainings, separate truth) and each is a serial chain
+      // of small jobs (sample, Lloyd collects, final aggregate) that
+      // underfills the machine — run them as concurrent driver-thread
+      // chains (guide §2.6) so one chain's tail back-fills the other's
+      // idle cores; same frames, same results, FIFO-overlapped
+      val Seq(uni, clu) = Chains.all(s)(Seq(
+        () => annRecallRow(s, dir, minRecall = 0.8)((q, e) =>
+          Similarity.ivfRerankTopK(q, e, k = 5, nlist = nlist,
+            nprobe = nprobe, nassign = na, overFetch = of,
+            knownCount = Some(n))).head(),
+        () => annRecallRow(s, dir, minRecall = 0.8,
+            vectors = Some(clusteredVectors(s, dir)))((q, e) =>
           Similarity.ivfRerankTopK(q, e, k = 5, nlist = cnlist,
             nprobe = cnprobe, nassign = cna, overFetch = cof,
-            knownCount = Some(nc))).head()
-      } finally concurrent.Await.ready(fUni, concurrent.duration.Duration.Inf)
-      val uni = concurrent.Await.result(fUni, concurrent.duration.Duration.Inf)
+            knownCount = Some(nc))).head()))
       Seq((uni.getLong(0), 5L, uni.getBoolean(2), clu.getBoolean(2),
           na.toLong, of.toLong, nlist.toLong, cna.toLong, cnlist.toLong))
         .toDF("n_queries", "k", "recall_ok", "recall_ok_clustered",
@@ -831,22 +824,18 @@ object TextQueries {
       import s.implicits._
       val n = Tables.load(s, dir, "embeddings").count()
       val (na, of) = Similarity.sizedRerankKnobs(n)
+      val (cna, cof) = Similarity.sizedRerankKnobs(n * ClusteredVariants)
       // independent geometry chains overlapped from driver threads —
       // see sim_topk_ivf_rerank_auto
-      val fUni = concurrent.Future(annRecallRow(s, dir, minRecall = 0.8)((q, e) =>
-        Similarity.ivfRerankTopK(q, e, k = 5, nlist = 16, nprobe = 4,
-          nassign = na, overFetch = of, knownCount = Some(n))).head())(
-        concurrent.ExecutionContext.global)
-      val (cna, cof) = Similarity.sizedRerankKnobs(n * ClusteredVariants)
-      // always observe the concurrent chain — see sim_topk_ivf_rerank_auto
-      val clu = try {
-        val cl = clusteredVectors(s, dir)
-        annRecallRow(s, dir, minRecall = 0.8, vectors = Some(cl))((q, e) =>
+      val Seq(uni, clu) = Chains.all(s)(Seq(
+        () => annRecallRow(s, dir, minRecall = 0.8)((q, e) =>
+          Similarity.ivfRerankTopK(q, e, k = 5, nlist = 16, nprobe = 4,
+            nassign = na, overFetch = of, knownCount = Some(n))).head(),
+        () => annRecallRow(s, dir, minRecall = 0.8,
+            vectors = Some(clusteredVectors(s, dir)))((q, e) =>
           Similarity.ivfRerankTopK(q, e, k = 5, nlist = 16, nprobe = 4,
             nassign = cna, overFetch = cof,
-            knownCount = Some(n * ClusteredVariants))).head()
-      } finally concurrent.Await.ready(fUni, concurrent.duration.Duration.Inf)
-      val uni = concurrent.Await.result(fUni, concurrent.duration.Duration.Inf)
+            knownCount = Some(n * ClusteredVariants))).head()))
       Seq((uni.getLong(0), 5L, uni.getBoolean(2), clu.getBoolean(2),
           na.toLong, of.toLong, cna.toLong))
         .toDF("n_queries", "k", "recall_ok", "recall_ok_clustered",

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Decontaminate
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming train/eval decontamination: documents arrive as a stream
@@ -34,14 +34,9 @@ object StreamingDecontaminate {
             queryName: String = "graft_streaming_decontaminate")
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     val gate = Decontaminate.bloomGate(bench, idCol, textCol, k, tau, dfCap, fpp)
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(gate.clean(batch), batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      onBatch(gate.clean(batch), batchId)
+    }
   }
 
   /** The SCORED form: `onBatch` receives every micro-batch row with
@@ -62,13 +57,8 @@ object StreamingDecontaminate {
                   queryName: String = "graft_streaming_contamination_score")
                  (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     val gate = Decontaminate.bloomGate(bench, idCol, textCol, k, tau, fpp = fpp)
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(gate.score(batch), batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      onBatch(gate.score(batch), batchId)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming near-dup detection: continuous ingestion deduped against a
@@ -31,19 +31,14 @@ object StreamingDedup {
             checkpoint: Option[String] = None,
             queryName: String = "graft_streaming_dedup")
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // per-batch frames are micro-batch-sized: skip index persistence
-        // (the corpus-side tables are already materialized in `index`)
-        onBatch(
-          Dedup.minhashLshIncremental(batch, idCol, textCol, index, tau,
-            persistIndex = false),
-          batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      // per-batch frames are micro-batch-sized: skip index persistence
+      // (the corpus-side tables are already materialized in `index`)
+      onBatch(
+        Dedup.minhashLshIncremental(batch, idCol, textCol, index, tau,
+          persistIndex = false),
+        batchId)
+    }
   }
 
   /** [[start]] for the hashed sparse-cosine tier: every micro-batch
@@ -60,20 +55,15 @@ object StreamingDedup {
                          checkpoint: Option[String] = None,
                          queryName: String = "graft_streaming_hashed_neardup")
                         (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // micro-batch-sized frames: no batch-side persist; the batch
-        // shingles with the index's own (dim, k) — see ShingleTfIndex
-        onBatch(
-          graft.ops.Embedding.hashedShingleNearDupIncremental(
-            batch, index, idCol, textCol, tauSqNum, tauSqDen,
-            dfCap, persistBatch = false),
-          batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      // micro-batch-sized frames: no batch-side persist; the batch
+      // shingles with the index's own (dim, k) — see ShingleTfIndex
+      onBatch(
+        graft.ops.Embedding.hashedShingleNearDupIncremental(
+          batch, index, idCol, textCol, tauSqNum, tauSqDen,
+          dfCap, persistBatch = false),
+        batchId)
+    }
   }
 
   /** Running (doc_id, cluster_id) duplicate-cluster assignment maintained
@@ -147,20 +137,15 @@ object StreamingDedup {
                      checkpoint: Option[String] = None,
                      queryName: String = "graft_streaming_span_dedup")
                     (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val matches = Dedup.spanPairsIncremental(batch, idCol, textCol,
-          spark.table(indexTable), k, sel, minShared, dfCap,
-          persistIndex = false)
-        onBatch(matches, batchId)
-        Dedup.saveSpanIndex(batch, idCol, textCol, indexTable, k, sel,
-          append = true)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val matches = Dedup.spanPairsIncremental(batch, idCol, textCol,
+        spark.table(indexTable), k, sel, minShared, dfCap,
+        persistIndex = false)
+      onBatch(matches, batchId)
+      Dedup.saveSpanIndex(batch, idCol, textCol, indexTable, k, sel,
+        append = true)
+    }
   }
 
   def startBlockDedup(stream: DataFrame, idCol: String, textCol: String,
@@ -168,21 +153,16 @@ object StreamingDedup {
                       checkpoint: Option[String] = None,
                       queryName: String = "graft_streaming_block_dedup")
                      (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val seen = spark.table(indexTable)
-        val res = Dedup.blockDedupIncremental(batch, idCol, textCol, seen,
-          blockSize)
-        // deliver BEFORE appending the delta: if the sink fails the
-        // batch replays against the unchanged index (idempotent-first)
-        onBatch(res.deduped, batchId)
-        Dedup.saveBlockIndex(res.newBlocks, indexTable, append = true)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val seen = spark.table(indexTable)
+      val res = Dedup.blockDedupIncremental(batch, idCol, textCol, seen,
+        blockSize)
+      // deliver BEFORE appending the delta: if the sink fails the
+      // batch replays against the unchanged index (idempotent-first)
+      onBatch(res.deduped, batchId)
+      Dedup.saveBlockIndex(res.newBlocks, indexTable, append = true)
+    }
   }
 
   /** Streaming SemDeDup (tier 5, embedding space): every micro-batch of
@@ -202,21 +182,16 @@ object StreamingDedup {
                          checkpoint: Option[String] = None,
                          queryName: String = "graft_streaming_semantic_dedup")
                         (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val res = graft.ops.Clustering.semanticDedupIncremental(
-          batch.toDF(), cents, spark.table(indexTable), tau, clusterCap)
-        onBatch(res, batchId)
-        val kept = batch.toDF().join(
-          res.filter(org.apache.spark.sql.functions.col("kept"))
-            .select("id"), Seq("id"))
-        graft.ops.Clustering.saveSemanticIndex(kept, cents, indexTable,
-          buckets = buckets, append = true)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val res = graft.ops.Clustering.semanticDedupIncremental(
+        batch.toDF(), cents, spark.table(indexTable), tau, clusterCap)
+      onBatch(res, batchId)
+      val kept = batch.toDF().join(
+        res.filter(org.apache.spark.sql.functions.col("kept"))
+          .select("id"), Seq("id"))
+      graft.ops.Clustering.saveSemanticIndex(kept, cents, indexTable,
+        buckets = buckets, append = true)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Curation
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming DSIR importance gating: documents arrive as a stream and
@@ -33,15 +33,10 @@ object StreamingDsirGate {
             checkpoint: Option[String] = None,
             queryName: String = "graft_streaming_dsir_gate")
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val scored = Curation.scoreWithDsirModel(
-          batch.toDF(), modelPrefix, idCol, textCol, buckets)
-        onBatch(batch.toDF().join(scored, Seq(idCol)), batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val scored = Curation.scoreWithDsirModel(
+        batch.toDF(), modelPrefix, idCol, textCol, buckets)
+      onBatch(batch.toDF().join(scored, Seq(idCol)), batchId)
+    }
   }
 }

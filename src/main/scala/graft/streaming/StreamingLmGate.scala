@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Curation
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming n-gram LM quality gating: documents arrive as a stream and
@@ -32,15 +32,10 @@ object StreamingLmGate {
             checkpoint: Option[String] = None,
             queryName: String = "graft_streaming_lm_gate")
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val scored = Curation.scoreWithLmModel(
-          batch.toDF(), modelPrefix, idCol, textCol)
-        onBatch(batch.toDF().join(scored, Seq(idCol)), batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val scored = Curation.scoreWithLmModel(
+        batch.toDF(), modelPrefix, idCol, textCol)
+      onBatch(batch.toDF().join(scored, Seq(idCol)), batchId)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Sampling
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming mixture gating: documents arrive as a stream and every
@@ -29,15 +29,10 @@ object StreamingMixtureGate {
             checkpoint: Option[String] = None,
             queryName: String = "graft_streaming_mixture_gate")
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val recipe = Sampling.mixtureRecipe(batch.sparkSession, prefix)
-        onBatch(Sampling.mixtureGateWith(batch.toDF(), recipe,
-          strataCol, idCol), batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val recipe = Sampling.mixtureRecipe(batch.sparkSession, prefix)
+      onBatch(Sampling.mixtureGateWith(batch.toDF(), recipe,
+        strataCol, idCol), batchId)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.ops.Profile
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import graft.ops.{Caches, Profile}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous data-quality observability: profile every micro-batch
@@ -44,25 +44,19 @@ object StreamingProfile {
     import org.apache.spark.sql.functions.col
     // materialize the comparable slice of the baseline once — it feeds
     // every batch's drift join
-    val base = baseline.filter(col("metric").isin(metrics: _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val n = batch.count()
-        if (n == 0) ()
-        else {
-          val prof = Profile.profile(batch, cols)
-          val comparable = prof.filter(col("metric").isin(metrics: _*))
-          val d =
-            if (n >= minRows) Profile.drift(base, comparable, tolerance)
-            else Profile.drift(base, comparable, tolerance).limit(0)
-          onBatch(prof, d, batchId)
-        }
+    val base = Caches.eager(
+      baseline.filter(col("metric").isin(metrics: _*)))
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val n = batch.count()
+      if (n == 0) ()
+      else {
+        val prof = Profile.profile(batch, cols)
+        val comparable = prof.filter(col("metric").isin(metrics: _*))
+        val d =
+          if (n >= minRows) Profile.drift(base, comparable, tolerance)
+          else Profile.drift(base, comparable, tolerance).limit(0)
+        onBatch(prof, d, batchId)
       }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    }
   }
 }

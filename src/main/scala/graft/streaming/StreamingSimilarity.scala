@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ANN: continuous ingestion probed against a STANDING IVF
@@ -35,19 +35,14 @@ object StreamingSimilarity {
                 checkpoint: Option[String] = None,
                 queryName: String = "graft_streaming_ann")
                (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // micro-batch-sized query side: no batch persist; the index's
-        // corpus frame is the standing side
-        val topk =
-          if (q8) Similarity.ivfTopKIndexedQ8(batch.toDF(), index, k, nprobe)
-          else Similarity.ivfTopKIndexed(batch.toDF(), index, k, nprobe)
-        onBatch(topk, batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      // micro-batch-sized query side: no batch persist; the index's
+      // corpus frame is the standing side
+      val topk =
+        if (q8) Similarity.ivfTopKIndexedQ8(batch.toDF(), index, k, nprobe)
+        else Similarity.ivfTopKIndexed(batch.toDF(), index, k, nprobe)
+      onBatch(topk, batchId)
+    }
   }
 
   /** [[startTopK]] through the RECALL-LIFTED tier: every micro-batch
@@ -80,14 +75,9 @@ object StreamingSimilarity {
                       checkpoint: Option[String] = None,
                       queryName: String = "graft_streaming_ann_rerank")
                      (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(Similarity.ivfTopKIndexedRerank(batch.toDF(), index, k,
-          nprobe, overFetch), batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      onBatch(Similarity.ivfTopKIndexedRerank(batch.toDF(), index, k,
+        nprobe, overFetch), batchId)
+    }
   }
 }

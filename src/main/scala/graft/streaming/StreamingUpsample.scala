@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Sampling
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming UP-sampling: documents arrive as a stream and every
@@ -53,15 +53,10 @@ object StreamingUpsample {
     val recipeRows = java.util.Arrays.asList(standing.collect(): _*)
     Sampling.validateUpsampleRecipe(
       stream.sparkSession.createDataFrame(recipeRows, recipeSchema), strataCol)
-    var w = stream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val recipe = batch.sparkSession.createDataFrame(recipeRows, recipeSchema)
-        onBatch(Sampling.epochRepeatWith(batch.toDF(), recipe,
-          strataCol, idCol, validate = false), batchId)
-      }
-    checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    w.start()
+    MicroBatch.start(stream, queryName, checkpoint) { (batch, batchId) =>
+      val recipe = batch.sparkSession.createDataFrame(recipeRows, recipeSchema)
+      onBatch(Sampling.epochRepeatWith(batch.toDF(), recipe,
+        strataCol, idCol, validate = false), batchId)
+    }
   }
 }

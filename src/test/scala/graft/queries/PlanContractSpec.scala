@@ -159,7 +159,7 @@ class PlanContractSpec extends SparkSpec {
       graft.ops.TextAnalysis.qualityScore(col("text")).as("score"),
       graft.ops.TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
     val df = graft.ops.Curation.groupTokenCap(scored, "source", "score",
-      "n_tokens", capPerGroup = 800L, persistScored = false)
+      "n_tokens", capPerGroup = 800L)
     val plan = unwrapped(df)
     val windows = plan.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
@@ -352,8 +352,7 @@ class PlanContractSpec extends SparkSpec {
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("lang"),
         org.apache.spark.sql.functions.col("lm_score"))
-    val df = graft.ops.Curation.ccnetBuckets(scored, "lang", "lm_score",
-      persistScored = false)
+    val df = graft.ops.Curation.ccnetBuckets(scored, "lang", "lm_score")
     val plan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
