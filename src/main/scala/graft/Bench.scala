@@ -88,25 +88,17 @@ object Bench {
     * median-of-3 protocol, and reps are steady-state after warmup.
     * CDS requires every classpath entry to be a JAR and the dump/use
     * classpaths to match, so directory entries (sbt's target/classes)
-    * are jarred once into temp files in `tmpDir` shared by all
-    * children. Those files are `deleteOnExit`, which a killed bench
-    * never runs, so this first deletes the `graft-bench-cp*.jar` and
-    * `graft-bench-cds*.jsa` files earlier runs left in `tmpDir` (two
-    * benches sharing one temp dir must not overlap). Any failure
-    * (jarring, dump child, empty archive) falls back to the round-12
-    * fork flags unchanged.
+    * are jarred once into `dir` (see [[runDir]]), shared by all
+    * children. Any failure (jarring, dump child, empty archive) falls
+    * back to the round-12 fork flags unchanged.
     */
-  private[graft] def cdsClasspath(tmpDir: java.io.File): Option[String] = Try {
-    Option(tmpDir.listFiles()).toSeq.flatten
-      .filter(_.getName.matches("graft-bench-(cp.*\\.jar|cds.*\\.jsa)"))
-      .foreach(_.delete())
+  private[graft] def cdsClasspath(dir: java.io.File): Option[String] = Try {
     val sep = java.io.File.pathSeparator
     System.getProperty("java.class.path").split(sep).map { e =>
       val f = new java.io.File(e)
       if (!f.isDirectory) e
       else {
-        val jar = java.io.File.createTempFile("graft-bench-cp", ".jar", tmpDir)
-        jar.deleteOnExit()
+        val jar = java.io.File.createTempFile("graft-bench-cp", ".jar", dir)
         val out = new java.util.zip.ZipOutputStream(
           new java.io.BufferedOutputStream(new java.io.FileOutputStream(jar)))
         val base = f.toPath
@@ -126,25 +118,38 @@ object Bench {
     }.mkString(sep)
   }.toOption
 
+  /** This bench run's own directory under `tmpDir`, named
+    * `graft-bench-<pid>-*` after this JVM and deleted when it exits. A
+    * killed bench never runs that hook, so this first deletes every such
+    * directory whose pid is no longer alive; a running bench's is kept.
+    */
+  private[graft] def runDir(tmpDir: java.io.File): java.io.File = {
+    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete() }
+    val Owned = "graft-bench-(\\d{1,18})-.*".r
+    Option(tmpDir.listFiles()).toSeq.flatten.foreach { d =>
+      d.getName match {
+        case Owned(pid) if !ProcessHandle.of(pid.toLong).isPresent => rm(d)
+        case _ => ()
+      }
+    }
+    val dir = java.nio.file.Files.createTempDirectory(tmpDir.toPath,
+      s"graft-bench-${ProcessHandle.current().pid}-").toFile
+    sys.addShutdownHook(rm(dir))
+    dir
+  }
+
   /** Dump the archive from one untimed child (the calib query, so the
     * dump run loads the full parquet/SQL/codegen stack) and return the
     * (classpath, archive) pair for the timed children, or None.
     */
-  private def cdsPrepare(sfDir: String): Option[(String, String)] = {
-    val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
-    cdsClasspath(tmpDir).flatMap { cp =>
-      val archive = Try {
-        val a = java.io.File.createTempFile("graft-bench-cds", ".jsa", tmpDir)
-        a.delete(); a.deleteOnExit()
-        a.getAbsolutePath
-      }.toOption
-      archive.filter { path =>
-        forkOne("dq_stats", sfDir, childReps = Some(1), cpOverride = Some(cp),
-          extraFlags = Seq(s"-XX:ArchiveClassesAtExit=$path")).isDefined &&
-          new java.io.File(path).length() > 0
-      }.map(cp -> _)
-    }
-  }
+  private def cdsPrepare(sfDir: String): Option[(String, String)] = for {
+    dir <- Try(runDir(new java.io.File(System.getProperty("java.io.tmpdir")))).toOption
+    cp <- cdsClasspath(dir)
+    archive = new java.io.File(dir, "graft-bench-cds.jsa").getAbsolutePath
+    if forkOne("dq_stats", sfDir, childReps = Some(1), cpOverride = Some(cp),
+        extraFlags = Seq(s"-XX:ArchiveClassesAtExit=$archive")).isDefined &&
+      new java.io.File(archive).length() > 0
+  } yield cp -> archive
 
   /** Fork one child JVM for `name`; None if the fork or its output parse
     * fails (caller falls back to in-process). `gc` overrides the child's

@@ -65,7 +65,7 @@ object Curation {
     val bad = Decontaminate.containmentPairsFromIndex(
         c.keep(Dedup.shingleFpRows(dedupedText, idCol, textCol, k)),
         c.keep(Dedup.shingleFpRows(bench, idCol, textCol, k)),
-        tau, dfCap = 512)
+        tau)
       .select(col("train_id").as(idCol)).distinct()
     val clean = deduped.join(bad, Seq(idCol), "left_anti")
     val packed = Packing.packByOrder(
@@ -1341,7 +1341,8 @@ object Curation {
     * back as a cross join. The scored frame feeds the histogram AND the
     * gate; the gate caches nothing (a cache it returned no handle for
     * could never be released), so a caller whose score expression is
-    * too dear to run twice keeps `scored` in its own [[Caches]] owner.
+    * too dear to run twice keeps `scored` in its own [[Caches]] owner
+    * or shuffles it once ([[graft.queries.Tables.sharedScan]]).
     * Nothing global-sorts, nothing big reaches the driver.
     */
   def quantileGate(

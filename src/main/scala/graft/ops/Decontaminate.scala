@@ -39,7 +39,6 @@ object Decontaminate {
       tau: Double = 0.5,
       dfCap: Int = 512,
       persistIndex: Boolean = true): DataFrame = {
-    require(tau > 0 && tau <= 1, "tau out of (0,1]")
     // Both shingle frames feed 2-4 consumers: cached by default
     // (Caches.eager). persistIndex=false opts out, so repeated calls in
     // a long-lived application don't accumulate executor cache.
@@ -58,7 +57,7 @@ object Decontaminate {
       tEx: DataFrame,
       bEx: DataFrame,
       tau: Double,
-      dfCap: Int): DataFrame = {
+      dfCap: Int = 512): DataFrame = {
     require(tau > 0 && tau <= 1, "tau out of (0,1]")
     val bSizes = bEx.groupBy(col("id")).agg(count(lit(1)).as("nb"))
 

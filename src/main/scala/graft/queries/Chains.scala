@@ -10,7 +10,7 @@ import scala.util.{Failure, Success}
   * idle. Each chain runs on its own thread (inheriting the caller's
   * Spark local properties) under its own job group, and every wait is
   * bounded: when a chain throws, or the chains outlive [[Limit]], the
-  * other chains' job groups are cancelled, they get `grace` to stop,
+  * other chains' job groups are cancelled, they get [[Grace]] to stop,
   * and the original exception is rethrown.
   */
 private[graft] object Chains {
@@ -20,8 +20,10 @@ private[graft] object Chains {
     */
   val Limit: FiniteDuration = 6.hours
 
-  def all[A](spark: SparkSession, grace: FiniteDuration = 60.seconds)
-            (chains: Seq[() => A]): Seq[A] = {
+  // a chain still running after Grace is left to its daemon thread
+  val Grace: FiniteDuration = 5.seconds
+
+  def all[A](spark: SparkSession)(chains: Seq[() => A]): Seq[A] = {
     implicit val ec: ExecutionContext = ExecutionContext.parasitic
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
@@ -45,7 +47,7 @@ private[graft] object Chains {
     catch {
       case e: Throwable =>
         // cancel every round: a chain may submit a job after a cancel
-        val deadline = grace.fromNow
+        val deadline = Grace.fromNow
         var pending = futures.zip(groups).filterNot(_._1.isCompleted)
         while (pending.nonEmpty && deadline.hasTimeLeft()) {
           pending.foreach { case (_, g) => sc.cancelJobGroup(g) }

@@ -1235,8 +1235,8 @@ object PipelineExtQueries {
     // so no float-percentile boundary flips between engines --
     QueryDef("quality_gate", (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val scored = docs.select(col("doc_id"),
-        TA.qualityScore(col("text")).as("quality"))
+      val scored = Tables.sharedScan(docs.select(col("doc_id"),
+        TA.qualityScore(col("text")).as("quality")))
       graft.ops.Curation.quantileGate(scored, "quality", dropFrac = 0.25)
         .select(col("doc_id"), col("quality"))
         .orderBy("doc_id")
@@ -1530,9 +1530,9 @@ object PipelineExtQueries {
     // histogram + descending cumsum, no global sort) --
     QueryDef("token_budget", (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val scored = docs.select(col("doc_id"),
+      val scored = Tables.sharedScan(docs.select(col("doc_id"),
         TA.qualityScore(col("text")).as("score"),
-        TA.tokenCount(col("text")).cast("long").as("n_tokens"))
+        TA.tokenCount(col("text")).cast("long").as("n_tokens")))
       graft.ops.Curation.tokenBudgetGate(scored, "score", "n_tokens",
           budget = 15000L)
         .orderBy("doc_id")
@@ -1562,9 +1562,9 @@ object PipelineExtQueries {
       val docs = Tables.load(s, dir, "documents")
       // quantized integer score end to end (qualityScoreQ): no double
       // ever reaches the bucket comparison, the pipelineV2 discipline
-      val scored = docs.select(col("doc_id"), col("source"),
+      val scored = Tables.sharedScan(docs.select(col("doc_id"), col("source"),
         TA.qualityScoreQ(col("text")).as("q"),
-        TA.tokenCount(col("text")).cast("long").as("n_tokens"))
+        TA.tokenCount(col("text")).cast("long").as("n_tokens")))
       graft.ops.Curation.groupTokenCap(scored, "source", "q",
           "n_tokens", capPerGroup = 800L, quantized = true)
         .orderBy("doc_id")
@@ -1936,22 +1936,16 @@ object PipelineExtQueries {
     // ceil(k·n/3), so the assignment is engine-stable by construction) --
     QueryDef("ccnet_buckets", (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      // no re-attach — the scored persist + ccnetBuckets drop
-      // NULL-score rows either way
+      // no re-attach — ccnetBuckets drops NULL-score rows either way
       val lm = graft.ops.Curation.ngramLmScore(
         docs.filter(col("lang") === "en"), docs, attachMissing = false)
-      // own the scored persist HERE so the summary can materialize and
-      // the cache release before returning. It fills lazily, inside the
-      // summary's one collect
-      val scored = lm.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("lm_score"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Tables.materializeAndRelease(
-        graft.ops.Curation.ccnetBuckets(scored, "lang", "lm_score")
-          .groupBy(col("lang"), col("bucket"))
-          .agg(count(lit(1)).as("n_docs"))
-          .orderBy("lang", "bucket"),
-        () => { scored.unpersist(); () })
+      val scored = Tables.sharedScan(
+        lm.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+          .select(col("doc_id"), col("lang"), col("lm_score")))
+      graft.ops.Curation.ccnetBuckets(scored, "lang", "lm_score")
+        .groupBy(col("lang"), col("bucket"))
+        .agg(count(lit(1)).as("n_docs"))
+        .orderBy("lang", "bucket")
     }, Some("""
       WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
       bg AS (

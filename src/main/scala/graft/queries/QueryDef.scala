@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 
 /** One verifiable operator query: a Spark implementation plus (when
   * SQL-expressible) an equivalent DuckDB oracle over the same parquet
@@ -45,6 +45,19 @@ object Tables {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
+
+  /** `df` shuffled once by its first column, for a narrow frame that is
+    * dear to compute and that two branches of ONE action read (a
+    * histogram gate's aggregate and its threshold join). Both branches
+    * then hold the same exchange, which Spark runs once and reuses, so
+    * `df`'s expressions run once and no cache outlives the query. The
+    * identity `mapPartitions` stops the optimizer from pushing the
+    * not-null filter it infers for the join side below the exchange,
+    * which would make the two exchanges differ.
+    */
+  def sharedScan(df: DataFrame): DataFrame =
+    df.repartition(df.col(df.columns.head))
+      .mapPartitions((rows: Iterator[Row]) => rows)(Encoders.row(df.schema))
 
   /** Materialize a SMALL (driver-bounded — per-language/per-stage
     * summary rows) frame, then release the pipeline caches backing it.

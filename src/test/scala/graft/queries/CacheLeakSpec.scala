@@ -37,6 +37,26 @@ class CacheLeakSpec extends SparkSpec {
     withClue("queries that left a cached frame: ") { leaked shouldBe empty }
   }
 
+  test("gate queries score each document once, from one reused exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    spark.catalog.clearCache()
+    Seq("quality_gate", "token_budget", "group_token_cap", "ccnet_buckets").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      // the histogram branch and the threshold join read the same
+      // shuffle of the scored frame, so its expressions run once
+      val reused = helper.collect(df.queryExecution.executedPlan) {
+        case r: ReusedExchangeExec => r
+      }
+      withClue(s"$q: ") {
+        reused should not be empty
+        cacheEmpty shouldBe true
+      }
+    }
+  }
+
   test("materializeAndRelease runs release when the collect throws") {
     import org.apache.spark.sql.functions.{col, udf}
     val boom = udf((x: Int) => { if (x > 0) throw new IllegalStateException("boom"); x })
@@ -54,7 +74,7 @@ class CacheLeakSpec extends SparkSpec {
     val gate = new java.util.concurrent.CountDownLatch(1)
     val t0 = System.nanoTime()
     val e = intercept[IllegalStateException] {
-      Chains.all(spark, grace = 5.seconds)(Seq(
+      Chains.all(spark)(Seq(
         // a Spark job that never finishes on its own
         () => { sc.parallelize(Seq(1), 1).foreach(_ => Thread.sleep(Long.MaxValue)); 0 },
         // a chain no job-group cancel can stop
@@ -64,7 +84,8 @@ class CacheLeakSpec extends SparkSpec {
     val waited = (System.nanoTime() - t0) / 1e9
     gate.countDown()
     e.getMessage shouldBe "chain failed"
-    waited should be < 30.0
+    // the thrower fails at 0.5 s; the uncancellable chain costs Grace
+    waited should be < Chains.Grace.toSeconds + 10.0
     // job end events reach the status store asynchronously
     val deadline = 20.seconds.fromNow
     while (sc.statusTracker.getActiveJobIds().nonEmpty && deadline.hasTimeLeft())
