@@ -87,16 +87,3 @@ final case class MinHashSignatureAgg(
     copy(inputAggBufferOffset = newOffset)
   override def prettyName: String = "minhash_signature"
 }
-
-object SketchAggregates {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.classic.GraftExpressionBridge
-
-  /** `minhash_signature(col, n)` as a Column aggregate: array<long> of n
-    * per-hash minima over 64-bit inputs (shingle fingerprints).
-    */
-  def minhashSignature(col: Column, numHashes: Int): Column =
-    GraftExpressionBridge.column(
-      MinHashSignatureAgg(GraftExpressionBridge.expression(col), numHashes)
-        .toAggregateExpression())
-}

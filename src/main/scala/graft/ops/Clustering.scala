@@ -79,15 +79,6 @@ object Clustering {
              seed: Long = 42L): KmeansModel =
     KmeansModel(Similarity.ivfCentroids(vecs, k, iters, seed))
 
-  /** Per-cluster cardinality and mean cosine-to-centroid — the shard
-    * quality report (a collapsed shard shows up as n≈0, an incoherent
-    * one as low mean_cos). One shuffle on the int cluster key.
-    */
-  def clusterStats(vecs: DataFrame, cents: Array[Seq[Double]]): DataFrame =
-    assignScored(vecs, cents)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n"), avg(col("cosine")).as("mean_cos"))
-
   /** Corpus mean cosine-to-assigned-centroid — the (scale-invariant)
     * spherical k-means objective; used to compare centroid sets.
     */
@@ -129,66 +120,6 @@ object Clustering {
       .filter(Similarity.cosine(col("x.vec"), col("y.vec")) >= tau)
       .select(col("y.id").as("id")).distinct()
     a.join(dup.withColumn("__dup", lit(1)), Seq("id"), "left")
-      .select(col("id"), col("cluster"), col("__dup").isNull.as("kept"))
-  }
-
-  /** Persist the KEPT survivor set of a [[semanticDedup]] run (or seed
-    * an empty index from any assigned frame) as a cluster-bucketed
-    * table — the probe side of [[semanticDedupIncremental]], same
-    * index-once contract as [[graft.ops.Dedup.saveSpanIndex]]: later
-    * batches pair against cell-mates through the bucketed layout
-    * without the standing corpus shuffling.
-    */
-  def saveSemanticIndex(vecs: DataFrame, cents: Array[Seq[Double]],
-                        table: String, buckets: Int = 16,
-                        append: Boolean = false): Unit =
-    vecs.select(col("id"),
-        Similarity.nearestCell(col("vec"), cents).as("cluster"), col("vec"))
-      .write.mode(if (append) "append" else "overwrite")
-      .bucketBy(buckets, "cluster").saveAsTable(table)
-
-  /** Incremental SemDeDup: dedup a NEW batch against the persisted
-    * survivor index AND within itself, under FIXED centroids (retrain
-    * when the distribution drifts, exactly like IVF). A batch row is
-    * dropped iff some index row shares its cell within `tau`, or some
-    * LOWER-id batch row does — so with batch ids above all index ids
-    * this equals [[semanticDedup]] over (index ∪ batch) restricted to
-    * the batch (spec-pinned), the same contract every incremental tier
-    * carries. Only the batch assigns and shuffles; survivors append to
-    * the index via [[saveSemanticIndex]] (caller's move, AFTER
-    * consuming the result — idempotent replay).
-    */
-  def semanticDedupIncremental(batch: DataFrame, cents: Array[Seq[Double]],
-                               index: DataFrame, tau: Double,
-                               clusterCap: Int = 65536): DataFrame = {
-    val b = batch.select(col("id"),
-      Similarity.nearestCell(col("vec"), cents).as("cluster"), col("vec"))
-    // the cap counts the INDEX side (the corpus-scaling one); an
-    // over-cap cell skips pairing entirely — batch rows there are kept
-    val capped =
-      if (clusterCap <= 0) index
-      else index.join(
-        index.groupBy(col("cluster")).agg(count(lit(1)).as("m_"))
-          .filter(col("m_") > clusterCap).select(col("cluster")),
-        Seq("cluster"), "left_anti")
-    // id inequality makes crash-replay idempotent: if a run dies AFTER
-    // saveSemanticIndex(append) but BEFORE the sink commit, the
-    // replayed batch joins an index already containing its own
-    // survivors — without the guard every such row self-matches
-    // (cosine = 1 >= tau) and the replay silently drops the kept
-    // corpus. Ids are unique corpus-wide, so the guard is free in
-    // normal operation.
-    val dupVsIndex = b.as("x")
-      .join(capped.as("y"), col("x.cluster") === col("y.cluster") &&
-        col("x.id") =!= col("y.id"))
-      .filter(Similarity.cosine(col("x.vec"), col("y.vec")) >= tau)
-      .select(col("x.id").as("id")).distinct()
-    val dupInBatch = b.as("x").join(b.as("y"),
-        col("x.cluster") === col("y.cluster") && col("x.id") < col("y.id"))
-      .filter(Similarity.cosine(col("x.vec"), col("y.vec")) >= tau)
-      .select(col("y.id").as("id")).distinct()
-    b.join(dupVsIndex.unionByName(dupInBatch).distinct()
-        .withColumn("__dup", lit(1)), Seq("id"), "left")
       .select(col("id"), col("cluster"), col("__dup").isNull.as("kept"))
   }
 }

@@ -255,7 +255,7 @@ object Curation {
 
   /** The round-6 data-SELECTION composition: DSIR importance resampling
     * against the `refLang` slice ([[importanceWeightsSelf]] +
-    * [[importanceResampleFrom]]) → bigram-LM scoring of the survivors
+    * [[importanceResampleExact]]) → bigram-LM scoring of the survivors
     * (model trained on the surviving `refLang` slice, CCNet-style) →
     * per-language head/middle/tail terciles ([[ccnetBuckets]]) → keep
     * head+middle → per-(lang, bucket) summary.
@@ -676,27 +676,6 @@ object Curation {
       .agg(sum(col("c")).as("tf"), count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
 
-  /** Incremental vocabulary maintenance: fold a NEW batch's (token, tf,
-    * df) counts into a standing vocabulary table — the streaming-ingest
-    * dual of [[vocabulary]], same contract as the incremental dedup
-    * index: the standing corpus is never re-scanned; cost scales with
-    * |vocabulary| + |batch|, not corpus history. `union → groupBy sum`
-    * is exactly the partial-aggregate merge Spark would run had both
-    * corpora been aggregated together, so
-    * `updateVocabulary(vocabulary(A), B) == vocabulary(A ∪ B)` for
-    * disjoint doc sets (spec-pinned; a doc split across batches would
-    * double-count its df — ingest whole documents per batch).
-    */
-  def updateVocabulary(
-      existing: DataFrame,
-      batch: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    existing.select(col("token"), col("tf"), col("df"))
-      .unionByName(vocabulary(batch, idCol, textCol, minDf = 1))
-      .groupBy(col("token"))
-      .agg(sum(col("tf")).as("tf"), sum(col("df")).as("df"))
-
   /** Per-document rarity: how common a document's vocabulary is in the
     * corpus, as the mean collection term frequency of its tokens
     * (duplicates count — a doc repeating a rare word is still rare).
@@ -796,15 +775,9 @@ object Curation {
                maxVocab: Int = 1 << 20): DataFrame =
     bpeTrainFromVocab(vocabulary(docs, idCol, textCol), numMerges, maxVocab)
 
-  /** [[bpeTrain]] from a STANDING (token, tf, ...) vocabulary table —
-    * the incremental-ingest form: maintain the dictionary with
-    * [[updateVocabulary]] as batches arrive (corpus history is never
-    * re-scanned), re-derive the merge table from the standing counts
-    * whenever the tokenizer should refresh. Because
-    * `vocabulary(A ∪ B) == updateVocabulary(vocabulary(A), B)` (the
-    * spec-pinned partial-aggregate identity), a refresh trained from
-    * the folded table is EXACTLY the table a from-scratch train over
-    * the full corpus would produce.
+  /** [[bpeTrain]] from a STANDING (token, tf, ...) vocabulary table,
+    * e.g. a [[vocabulary]] result: re-derive the merge table from the
+    * standing counts whenever the tokenizer should refresh.
     */
   def bpeTrainFromVocab(vocab: DataFrame, numMerges: Int,
                         maxVocab: Int = 1 << 20,
@@ -1208,14 +1181,6 @@ object Curation {
     (out.toSeq.toDF("rank", "left_sym", "right_sym", "pair_count"), rewrites)
   }
 
-  /** Persist a trained merge table ([[bpeTrain]] output) as a standing
-    * table — the persisted-model pattern ([[Sampling.saveMixtureRecipe]],
-    * the minhash index): train once on the curated corpus, apply
-    * everywhere (batch or streaming) without retraining.
-    */
-  def saveBpeTable(merges: DataFrame, prefix: String): Unit =
-    merges.write.mode("overwrite").saveAsTable(s"${prefix}_bpe_merges")
-
   /** Collect a merge table into the kernel-ready rank-ordered form —
     * the ONE place that knows [[bpeTrain]]'s output column positions
     * (rank, left_sym, right_sym, pair_count). Bounded by numMerges.
@@ -1223,12 +1188,6 @@ object Curation {
   def collectMerges(merges: DataFrame): Array[Array[String]] =
     merges.orderBy("rank").collect()
       .map(r => Array(r.getString(1), r.getString(2)))
-
-  /** Load a [[saveBpeTable]] merge table into the kernel-ready form
-    * (rank order). */
-  def loadBpeTable(spark: org.apache.spark.sql.SparkSession,
-                   prefix: String): Array[Array[String]] =
-    collectMerges(spark.table(s"${prefix}_bpe_merges"))
 
   /** Top-`topN` characteristic terms per document by idf-weighted term
     * frequency: score = tf × (N / df). The weighting is log-free so the
@@ -1609,67 +1568,23 @@ object Curation {
       wStop: Double,   // feature: en-stopword ratio
       wAlpha: Double)  // feature: [a-z] character ratio
 
-  /** Train the [[QualityModel]] IN Spark by batch gradient descent on
+  /** Train the [[QualityModel]] IN Spark by IRLS (Newton's method) on
     * logistic loss — the training half of the fastText-style quality
-    * classifier, with no ML library: per iteration the gradient is ONE
-    * map-side-combined aggregate (four double sums) over the cached
-    * 4-column feature frame, and the weight vector lives on the driver
-    * (four doubles). Features are the exact serving features of
-    * [[classifierGate]], computed once by the same codegen expressions
-    * — so the trained weights deploy into the shuffle-free serving gate
-    * with zero train/serve skew.
-    *
-    * Scale shape: the feature frame is 4 doubles/row (a tiny fraction
-    * of the text it summarizes) persisted once; each of `iters`
-    * gradient passes is a partial-aggregated scan of it, nothing wider
-    * than four doubles ever reaches the driver. Gradient sums are
-    * floating-point and partition-order dependent, so trained weights
-    * are deterministic only up to summation order — assert QUALITY
-    * (accuracy/loss), not bit-equal weights.
-    *
-    * `labelCol`: 0/1 (castable to double).
-    */
-  def trainQualityModel(docs: DataFrame, textCol: String, labelCol: String,
-                        iters: Int = 50, lr: Double = 1.0,
-                        init: QualityModel = QualityModel(0, 0, 0, 0)): QualityModel = {
-    require(iters > 0 && lr > 0, "iters and learning rate must be positive")
-    val t = col(textCol)
-    val feats = docs.select(
-        col(labelCol).cast("double").as("y"),
-        least(lit(1.0), TA.tokenCount(t).cast("double") / lit(100.0)).as("x1"),
-        TA.stopwordRatio(t).as("x2"),
-        TA.alphaRatio(t).as("x3"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = feats.count().toDouble
-    require(n > 0, "cannot train on an empty corpus")
-    var w = init
-    var it = 0
-    while (it < iters) {
-      val z = lit(w.bias) + lit(w.wTokens) * col("x1") +
-        lit(w.wStop) * col("x2") + lit(w.wAlpha) * col("x3")
-      val g = (lit(1.0) / (lit(1.0) + exp(-z))) - col("y")
-      val row = feats.agg(sum(g), sum(g * col("x1")),
-        sum(g * col("x2")), sum(g * col("x3"))).head()
-      w = QualityModel(
-        w.bias - lr * row.getDouble(0) / n,
-        w.wTokens - lr * row.getDouble(1) / n,
-        w.wStop - lr * row.getDouble(2) / n,
-        w.wAlpha - lr * row.getDouble(3) / n)
-      it += 1
-    }
-    feats.unpersist()
-    w
-  }
-
-  /** [[trainQualityModel]] by IRLS (Newton's method) instead of
-    * gradient descent — the production trainer: at cluster scale the
+    * classifier, with no ML library. Features are the exact serving
+    * features of [[classifierGate]], computed once by the same codegen
+    * expressions, so the trained weights deploy into the shuffle-free
+    * serving gate with zero train/serve skew. At cluster scale the
     * scarce resource is DRIVER ROUND-TRIPS (every iteration is a full
     * job), and IRLS converges in ~6 iterations where first-order
     * descent needs 40-150. Each iteration is ONE aggregate of 14
     * double sums — the 4×4 normal matrix Σ wᵢxxᵀ (10 unique entries,
     * wᵢ = pᵢ(1-pᵢ)) and the working response Σ x·(wᵢ(x·w) + (yᵢ-pᵢ)) —
     * followed by a driver-side 4×4 ridge-regularized Gaussian solve.
-    * Same features, same serving gate, strictly fewer jobs.
+    * Sums are floating-point and partition-order dependent, so trained
+    * weights are deterministic only up to summation order — assert
+    * QUALITY (accuracy/loss), not bit-equal weights.
+    *
+    * `labelCol`: 0/1 (castable to double).
     */
   def trainQualityModelIRLS(docs: DataFrame, textCol: String, labelCol: String,
                             iters: Int = 6, ridge: Double = 1e-8,
@@ -1729,7 +1644,7 @@ object Curation {
   }
 
   /** Fraction of docs the model labels correctly (logit > 0 vs the 0/1
-    * label) — the train/eval metric for [[trainQualityModel]]; one
+    * label) — the train/eval metric for [[trainQualityModelIRLS]]; one
     * aggregate.
     */
   def modelAccuracy(docs: DataFrame, textCol: String, labelCol: String,
@@ -2041,8 +1956,7 @@ object Curation {
     * weight_before, weight_after)` — every update decision an external
     * engine can re-derive bit-for-bit (the oracle unrolls the rounds).
     * Feed the final round's `weight_after` into [[Sampling
-    * .mixtureSelect]] / [[Sampling.saveMixtureRecipe]] to realize the
-    * tuned mix.
+    * .mixtureSelect]] to realize the tuned mix.
     *
     * Scale shape: per round, the corpus sees one strata-mass
     * aggregate, one membership probe, one model-train bigram explode
@@ -2065,9 +1979,8 @@ object Curation {
 
   /** [[mixtureReweight]] returning BOTH the audit frame and the final
     * tuned shares map — the form a pipeline composes: feed the shares
-    * into [[Sampling.mixtureSelect]] (what [[pipelineV8Stages]] does)
-    * or reify them with [[Sampling.saveMixtureRecipe]]. `weightCol`
-    * makes each round's MIXTURE SELECTION token-weighted (strata
+    * into [[Sampling.mixtureSelect]] (what [[pipelineV8Stages]] does).
+    * `weightCol` makes each round's MIXTURE SELECTION token-weighted (strata
     * masses become weight sums, the [[Sampling.mixtureSelect]]
     * contract — training mixes are specified in tokens, not
     * documents); the excess-loss scoring is per-occurrence either way.
@@ -2132,59 +2045,27 @@ object Curation {
   }
 
   /** DSIR-style importance weights (Xie et al. 2023, "Data Selection
-    * for Language Models via Importance Resampling"): score each RAW
-    * document by how much its hashed-bigram profile looks like the
-    * TARGET distribution. Bigrams hash into `buckets` cells (md5-prefix
-    * modular — engine-portable, fixed model size regardless of vocab),
-    * and each doc pools exact long counts over its bigrams:
+    * for Language Models via Importance Resampling") against a TARGET
+    * that is a slice of the corpus (the common case: a labeled
+    * high-quality subset): score each document by how much its
+    * hashed-bigram profile looks like the target distribution. Bigrams
+    * hash into `buckets` cells (md5-prefix modular — engine-portable,
+    * fixed model size regardless of vocab), and each doc pools exact
+    * long counts over its bigrams:
     *
     *   - `target_hits` = Σ c_target(bucket) — occurrences of the doc's
-    *     buckets in the target corpus;
-    *   - `raw_hits`    = Σ c_raw(bucket) — same against the raw corpus;
+    *     buckets in the target slice;
+    *   - `raw_hits`    = Σ c_raw(bucket) — same against the whole corpus;
     *   - `weight`      = target_hits / raw_hits, ONE final IEEE divide.
     *
     * DSIR proper sums log n-gram probability ratios; pooling the counts
     * keeps both sums exact longs (the [[ngramLmScore]] log-free
     * cross-engine trick) while ordering documents the same way in
-    * practice: high = target-like buckets dominate, low = buckets the
-    * target never visits. Docs without bigrams carry a NULL weight.
+    * practice. Docs without bigrams carry a NULL weight.
     *
-    * Scale shape: both count tables are `buckets`-bounded (AQE
-    * broadcasts them under the per-doc stream's joins); the raw corpus
-    * is scanned twice (model + per-doc) rather than caching the
-    * corpus-sized bigram explode — the same trade every LM op here
-    * makes. `raw_hits >= n_bigrams >= 1` by construction (each bigram
-    * counts its own occurrence), so the divide never sees zero.
-    */
-  def importanceWeights(raw: DataFrame, target: DataFrame,
-                        idCol: String = "doc_id",
-                        textCol: String = "text",
-                        buckets: Int = 65536): DataFrame = {
-    require(buckets > 0, "buckets must be positive")
-    val tCounts = dsirBuckets(target, Nil, textCol, buckets).groupBy(col("b"))
-      .agg(count(lit(1)).as("ct"))
-    val rCounts = dsirBuckets(raw, Nil, textCol, buckets).groupBy(col("b"))
-      .agg(count(lit(1)).as("cr"))
-    val perDoc = dsirBuckets(raw, Seq(idCol), textCol, buckets)
-      .join(tCounts, Seq("b"), "left")
-      .join(rCounts, Seq("b"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("nb"),
-        sum(coalesce(col("ct"), lit(0L))).as("th"),
-        sum(col("cr")).as("rh"))
-    raw.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nb"), lit(0L)).as("n_bigrams"),
-        coalesce(col("th"), lit(0L)).as("target_hits"),
-        coalesce(col("rh"), lit(0L)).as("raw_hits"),
-        when(col("rh") > 0, col("th").cast("double") / col("rh").cast("double"))
-          .as("weight"))
-  }
-
-  /** [[importanceWeights]] when the target IS a slice of the corpus
-    * (the common case: a labeled high-quality subset), fused to ONE
-    * bigram explode: the explode aggregates once into per-(doc, bucket)
-    * partial counts `nbb`; the bucket model derives from the partials
+    * Fused to ONE bigram explode: the explode aggregates once into
+    * per-(doc, bucket) partial counts `nbb`; the bucket model derives
+    * from the partials
     * (`cr = Σ nbb`, `ct = Σ nbb·[target]` per bucket — exactly the
     * conditional counts, since `targetCond` is constant per doc), and
     * the per-doc pools re-read the SAME partials joined to the model
@@ -2198,9 +2079,7 @@ object Curation {
     * than left to constraint inference — inference adds it only under
     * the join branch, splitting the canonical form and silently
     * doubling the corpus scan. (Consequence, documented: a null-id doc
-    * contributes to neither the model nor the output.) Identical output
-    * to `importanceWeights(docs, docs.filter(targetCond))` on non-null
-    * ids (spec-pinned).
+    * contributes to neither the model nor the output.)
     */
   def importanceWeightsSelf(docs: DataFrame, targetCond: Column,
                             idCol: String = "doc_id",
@@ -2240,59 +2119,19 @@ object Curation {
         .as("weight"))
   }
 
-  /** Deterministic importance RESAMPLING over [[importanceWeights]]:
-    * keep each weighted doc with probability proportional to
+  /** Deterministic importance RESAMPLING over an
+    * [[importanceWeightsSelf]]-shaped frame (id, target_hits, raw_hits,
+    * weight): keep each weighted doc with probability proportional to
     * `weight / max(weight)`, realized by the portable modular hash
     * (membership replays bit-for-bit on any engine — same mechanism as
-    * [[Sampling.temperatureSample]]). The max is a one-row aggregate
-    * cross-joined back; thresholds quantize to `floor(ratio·1e6)`
-    * longs. Docs with NULL weight (no bigrams) are dropped — no
-    * signal, no selection.
-    */
-  def importanceResample(raw: DataFrame, target: DataFrame,
-                         idCol: String = "doc_id",
-                         textCol: String = "text",
-                         buckets: Int = 65536): DataFrame =
-    importanceResampleFrom(
-      importanceWeights(raw, target, idCol, textCol, buckets), idCol)
-
-  /** The selection step of [[importanceResample]], over any
-    * weights-shaped frame (id, ..., weight) — e.g.
-    * [[importanceWeightsSelf]]'s output.
-    */
-  def importanceResampleFrom(weights: DataFrame,
-                             idCol: String = "doc_id"): DataFrame = {
-    // the narrow (id, weight) frame feeds the max aggregate AND the
-    // membership filter, uncached: the two consumers carry canonically
-    // identical weights subtrees, so within one action AQE's stage
-    // reuse computes the expensive exchanges once (measured equal to
-    // the persisted form) and nothing leaks. A caller whose SAME
-    // weights frame spans several actions keeps it in its own
-    // [[Caches]] owner, as [[pipelineV4Stages]] does.
-    val w = weights
-      .filter(col("weight").isNotNull)
-      .select(col(idCol), col("weight"))
-    val wmax = w.agg(max(col("weight")).as("__wmax"))
-    w.crossJoin(wmax)
-      // __wmax = 0 (no doc has any target affinity) must select nothing
-      // — and must not reach the divide: ANSI mode (the Spark 4
-      // default) raises DIVIDE_BY_ZERO instead of yielding the NaN the
-      // legacy mode floor'd to 0
-      .withColumn("__thr",
-        when(col("__wmax") > 0,
-          floor(col("weight") / col("__wmax") * lit(1000000.0)).cast("long"))
-          .otherwise(lit(0L)))
-      .filter(Sampling.hashBucket(col(idCol)) < col("__thr"))
-      .select(col(idCol), col("weight"))
-  }
-
-  /** [[importanceResampleFrom]] with a fully INTEGER gate — the
-    * preferred form whenever the weights frame still carries its exact
-    * count columns (`target_hits`, `raw_hits`), i.e. anything
-    * [[importanceWeights]]-shaped. The double path quantizes
-    * `floor(1e6·(th/rh)/(th_m/rh_m))` through an IEEE divide chain that
-    * is engine-stable only while both engines mirror the same parse
-    * tree; here the SAME gate is decided without any division:
+    * [[Sampling.temperatureSample]]). Docs with NULL weight (no
+    * bigrams) are dropped — no signal, no selection.
+    *
+    * The gate is fully INTEGER: a ratio threshold
+    * `floor(1e6·(th/rh)/(th_m/rh_m))` would go through an IEEE divide
+    * chain that is engine-stable only while both engines mirror the
+    * same parse tree; here the SAME gate is decided without any
+    * division:
     *
     *   hash < ⌊1e6·(th·rh_m)/(rh·th_m)⌋  ⟺
     *   (hash+1)·rh·th_m ≤ 1e6·th·rh_m
@@ -2303,9 +2142,7 @@ object Curation {
     * doc's, chosen by (weight, th, rh) descending — and if several docs
     * tie on the exact maximal RATIO, any of them yields the equivalent
     * comparison, so the tie-break only has to be deterministic, not
-    * ratio-exact. Same output schema/rows as the double gate except on
-    * last-ulp boundaries (equivalence spec-pinned on non-boundary
-    * data).
+    * ratio-exact.
     */
   def importanceResampleExact(weights: DataFrame,
                               idCol: String = "doc_id"): DataFrame = {
@@ -2330,59 +2167,6 @@ object Curation {
       .select(col(idCol), col("weight"))
   }
 
-  /** Persist the DSIR bucket model ONCE as a bucketed count table
-    * `<prefix>_dsir` (b, ct, cr) — the [[saveLmModel]] index-once shape
-    * applied to importance weighting: later crawl batches score against
-    * the standing target/raw distributions without re-reading either
-    * corpus. Append new raw batches' PARTIAL counts with
-    * `append = true` (ct = 0 rows for raw-only batches);
-    * [[scoreWithDsirModel]] collapses partials at read time.
-    */
-  def saveDsirModel(raw: DataFrame, target: DataFrame, prefix: String,
-                    textCol: String = "text", buckets: Int = 65536,
-                    tableBuckets: Int = 16, append: Boolean = false): Unit = {
-    val ct = dsirBuckets(target, Nil, textCol, buckets)
-      .groupBy(col("b")).agg(count(lit(1)).as("ct"))
-    val cr = dsirBuckets(raw, Nil, textCol, buckets)
-      .groupBy(col("b")).agg(count(lit(1)).as("cr"))
-    ct.join(cr, Seq("b"), "full_outer")
-      .select(col("b"), coalesce(col("ct"), lit(0L)).as("ct"),
-        coalesce(col("cr"), lit(0L)).as("cr"))
-      .write.mode(if (append) "append" else "overwrite")
-      .bucketBy(tableBuckets, "b").saveAsTable(s"${prefix}_dsir")
-  }
-
-  /** Score `docs` against a model persisted by [[saveDsirModel]].
-    * For documents drawn from the model's own raw corpus this equals
-    * [[importanceWeights]] exactly (spec-pinned); NEW documents may
-    * carry buckets the model never saw — those contribute 0 to both
-    * sums (left join), and a doc whose every bucket is unseen gets a
-    * NULL weight (no distribution evidence; caller policy, like the
-    * no-bigram case).
-    */
-  def scoreWithDsirModel(docs: DataFrame, prefix: String,
-                         idCol: String = "doc_id",
-                         textCol: String = "text",
-                         buckets: Int = 65536): DataFrame = {
-    val spark = docs.sparkSession
-    val m = spark.table(s"${prefix}_dsir")
-      .groupBy(col("b"))
-      .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-    val perDoc = dsirBuckets(docs, Seq(idCol), textCol, buckets)
-      .join(m, Seq("b"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("nb"),
-        sum(coalesce(col("ct"), lit(0L))).as("th"),
-        sum(coalesce(col("cr"), lit(0L))).as("rh"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nb"), lit(0L)).as("n_bigrams"),
-        coalesce(col("th"), lit(0L)).as("target_hits"),
-        coalesce(col("rh"), lit(0L)).as("raw_hits"),
-        when(col("rh") > 0, col("th").cast("double") / col("rh").cast("double"))
-          .as("weight"))
-  }
-
   /** (keep-cols..., b) hashed-bigram bucket rows — the shared explode
     * of the DSIR family (md5-prefix modular hash, engine-portable).
     */
@@ -2398,70 +2182,11 @@ object Curation {
     * SECOND full scan + explode of the reference corpus (w1 is the
     * bigram's prefix before the separator space; tokens are space-split
     * so the prefix is unambiguous). Halves the reference-side cost of
-    * [[ngramLmScore]]/[[saveLmModel]].
+    * [[ngramLmScore]].
     */
   private def contextsFromBigrams(c2: DataFrame): DataFrame =
     c2.select(substring_index(col("bigram"), " ", 1).as("w1"), col("c2"))
       .groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-
-  /** Train the bigram model ONCE and persist it as two bucketed count
-    * tables (`<prefix>_bigrams` keyed/bucketed by `bigram`,
-    * `<prefix>_contexts` by `w1`) — the index-once shape of
-    * [[graft.ops.Dedup.saveMinhashIndex]] applied to LM scoring: later
-    * crawl batches score against the standing model without re-reading
-    * the reference corpus. [[appendLmModel]] appends a new reference
-    * batch's PARTIAL counts (append-only, no table rewrite — the
-    * 100 TB-friendly maintenance mode); [[scoreWithLmModel]] collapses
-    * partials at read time with one vocab-bounded aggregate.
-    */
-  def saveLmModel(ref: DataFrame, prefix: String,
-                  textCol: String = "text", buckets: Int = 16): Unit = {
-    val c2 = bigramRows(ref, Nil, textCol)
-      .groupBy(col("bigram")).agg(count(lit(1)).as("c2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      c2.write.mode("overwrite").bucketBy(buckets, "bigram")
-        .saveAsTable(s"${prefix}_bigrams")
-      contextsFromBigrams(c2)
-        .write.mode("overwrite").bucketBy(buckets, "w1")
-        .saveAsTable(s"${prefix}_contexts")
-    } finally c2.unpersist()
-  }
-
-  /** Fold a NEW reference batch into a persisted LM model by appending
-    * its partial counts; only the batch is scanned and aggregated. See
-    * [[saveLmModel]].
-    */
-  def appendLmModel(batch: DataFrame, prefix: String,
-                    textCol: String = "text", buckets: Int = 16): Unit = {
-    val c2 = bigramRows(batch, Nil, textCol)
-      .groupBy(col("bigram")).agg(count(lit(1)).as("c2"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      c2.write.mode("append").bucketBy(buckets, "bigram")
-        .saveAsTable(s"${prefix}_bigrams")
-      contextsFromBigrams(c2)
-        .write.mode("append").bucketBy(buckets, "w1")
-        .saveAsTable(s"${prefix}_contexts")
-    } finally c2.unpersist()
-  }
-
-  /** Score `docs` against a model persisted by [[saveLmModel]] (+ any
-    * [[appendLmModel]] batches). Equals [[ngramLmScore]] trained on the
-    * union of every batch (spec-pinned): `union → groupBy sum` of the
-    * partials is exactly the partial-aggregate merge Spark would have
-    * run over the whole reference at once.
-    */
-  def scoreWithLmModel(docs: DataFrame, prefix: String,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    val c2 = spark.table(s"${prefix}_bigrams")
-      .groupBy(col("bigram")).agg(sum(col("c2")).as("c2"))
-    val c1 = spark.table(s"${prefix}_contexts")
-      .groupBy(col("w1")).agg(sum(col("c1")).as("c1"))
-    scoreAgainstCounts(docs, c2, c1, idCol, textCol)
-  }
 
   private def scoreAgainstCounts(docs: DataFrame, c2: DataFrame, c1: DataFrame,
                                  idCol: String, textCol: String,

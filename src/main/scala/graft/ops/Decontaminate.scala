@@ -93,24 +93,6 @@ object Decontaminate {
       .select(col("train_id"), col("bench_id"), col("containment"))
   }
 
-  /** The clean training set: drop every train document contaminated at
-    * or above `tau` against any benchmark document.
-    */
-  def decontaminate(
-      train: DataFrame,
-      bench: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int = 3,
-      tau: Double = 0.5,
-      dfCap: Int = 512,
-      persistIndex: Boolean = true): DataFrame = {
-    val bad = containmentPairs(train, bench, idCol, textCol, k, tau, dfCap,
-        persistIndex)
-      .select(col("train_id").as(idCol)).distinct()
-    train.join(bad, Seq(idCol), "left_anti")
-  }
-
   /** Per-document contamination SCORE (the GPT-3 appendix-C shape):
     * for every training document, the fraction of its distinct k-gram
     * shingles that appear anywhere in the benchmark union —
@@ -157,9 +139,11 @@ object Decontaminate {
       .withColumn("flagged", col("overlap") >= tau)
   }
 
-  /** [[decontaminate]] behind a Bloom-filter prefilter — the SAME exact
-    * result (spec- and oracle-pinned), reached without ever shuffling
-    * the training corpus on shingles.
+  /** Decontamination — drop every train document contaminated at or
+    * above `tau` against any benchmark document — behind a Bloom-filter
+    * prefilter: the SAME exact result as anti-joining the train ids of
+    * [[containmentPairs]] (spec- and oracle-pinned), reached without
+    * ever shuffling the training corpus on shingles.
     *
     * [[containmentPairs]] shuffles every train shingle once on its
     * 8-byte fingerprint — linear and fine, but at 100 TB that is still
@@ -208,8 +192,7 @@ object Decontaminate {
     * folded once into the driver-held sketch, reusable across many
     * train batches — the build-once/probe-many shape
     * ([[Dedup.MinhashIndex]], [[Similarity.IvfIndex]] are the same
-    * lifecycle). [[graft.streaming.StreamingDecontaminate]] holds one
-    * gate for a whole stream so micro-batches never rebuild the sketch.
+    * lifecycle).
     */
   final class BloomGate private[ops] (
       bench: DataFrame,
@@ -218,7 +201,7 @@ object Decontaminate {
       k: Int, tau: Double, dfCap: Int) extends Serializable {
 
     /** Exact decontaminate of `train` behind the sketch prefilter —
-      * the SAME rows as [[Decontaminate.decontaminate]] (spec-pinned:
+      * the SAME rows as the anti-join over [[containmentPairs]] (spec-pinned:
       * Bloom false positives only cost their exact re-check; no false
       * negatives exist). Per-call cost: one train scan + the exact
       * containment pipeline over the (tiny) hit slice. The bench side

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines.
@@ -75,22 +74,6 @@ object Dedup {
           org.apache.spark.sql.classic.GraftExpressionBridge.expression(col(textCol)), k)))
         .as("s"): _*)
 
-  /** The lead-window formulation of [[shingleRows]] — an independent
-    * implementation kept for the three-way equivalence spec (kernel ==
-    * window == HOF array form).
-    */
-  def shingleRowsWindow(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val toks = df.select(col(idCol).as("id"),
-      posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
-    val byId = Window.partitionBy(col("id")).orderBy(col("pos"))
-    toks.select(col("id"),
-        concat_ws(" ", col("tok") +: (1 until k).map(j => lead(col("tok"), j).over(byId)): _*).as("s"),
-        lead(col("tok"), k - 1).over(byId).as("last_tok"))
-      .filter(col("last_tok").isNotNull)
-      .select(col("id"), col("s"))
-      .distinct()
-  }
-
   /** Tier 1: exact duplicate groups via md5 hash-groupBy. */
   def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.groupBy(md5(col(textCol)).as("fp"))
@@ -118,35 +101,6 @@ object Dedup {
       .select(col("fp"), col("m.i").as("keeper"),
         (-col("m.ns")).as("keeper_score"), col("n_dups"))
 
-  /** Drop shingles whose document frequency exceeds `dfCap` from an
-    * inverted index. A shingle with df=m produces m² hits in a
-    * candidate self-join — one ubiquitous "stop shingle" at web scale
-    * is a quadratic hot-key blowup.
-    *
-    * Recall contract: a pair is lost only when EVERY shared shingle has
-    * df > dfCap. For organically similar documents that never happens
-    * (they share many low-df shingles). The one real loss case is a
-    * cluster duplicated more than dfCap times with small mutations
-    * (mass-replicated boilerplate): all of its shingles exceed the cap
-    * together. Standard pipeline ordering handles this: run
-    * [[exactGroups]] first and near-dup the surviving uniques (the
-    * text_pipeline query shows the composition) — after exact
-    * collapse, df counts measure distinct near-variants, which a
-    * 512-default cap comfortably covers.
-    * df is computed with a groupBy (map-side partial agg — skew-safe,
-    * unlike a count-over-window which would funnel the hot key into one
-    * task); the filter is a left-ANTI join against the shingles OVER
-    * the cap — that set is tiny by construction (few shingles are
-    * ubiquitous), so AQE turns the anti-join into a broadcast probe,
-    * vs a semi-join whose keep-set is nearly the whole index.
-    */
-  private def dfCapped(ex: DataFrame, dfCap: Int): DataFrame =
-    if (dfCap <= 0) ex
-    else ex.join(
-      ex.groupBy(col("s")).agg(count(lit(1)).as("df_"))
-        .filter(col("df_") > dfCap).select(col("s")),
-      Seq("s"), "left_anti")
-
   /** Exact |A∩B| for the candidate pairs only: attach A's full shingle
     * set, inner-join B's matching shingles, count per pair. Scale-safe
     * even with hot shingles present: the join key (id_b, s) is unique in
@@ -171,18 +125,6 @@ object Dedup {
         col("ic").cast("double") / (col("na") + col("nb") - col("ic")))
       .filter(col("jaccard") >= tau)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-
-  /** Candidate pairs from the df-capped inverted index: pairs of docs
-    * sharing at least one kept shingle. Exposed so specs can assert the
-    * candidate volume stays bounded under a planted ubiquitous shingle.
-    */
-  def ngramCandidates(ex: DataFrame, dfCap: Int): DataFrame = {
-    val idx = dfCapped(ex, dfCap)
-    idx.as("a").join(idx.as("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
 
   /** The index frame through [[Caches.eager]]. Every caller hands it
     * to 2+ subtrees of the pair plan (df counts, sizes, candidate
@@ -308,17 +250,6 @@ object Dedup {
       greatest(size(split(col(textCol), " ", -1)) - lit(k - 1), lit(0))
         .cast("long").as("pos"))
 
-  /** The string-pipeline formulation of [[shingleFpRows]]
-    * (shingleRows → xxhash64) — kept for the equivalence spec: the
-    * fused kernel hashes byte SPANS of the input zero-copy where this
-    * form materializes every shingle string through the Generate and
-    * hashes it in a separate projection. Bit-identical output
-    * (spec-pinned), so fingerprints from either form interoperate.
-    */
-  private[graft] def shingleFpRowsUnfused(
-      df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    shingleRows(df, idCol, textCol, k).select(col("id"), xxhash64(col("s")).as("s"))
-
   /** Tier 2: n-gram Jaccard near-dup pairs above `tau`.
     *
     * Candidate generation and intersection counting are FUSED: the
@@ -339,8 +270,13 @@ object Dedup {
     * the over-cap set is small by construction (few shingles are
     * ubiquitous), so the quadratic hot key never materializes while
     * ic = |A∩B| remains the full-set intersection. The cap only bounds
-    * RECALL (pairs sharing exclusively over-cap shingles never surface
-    * — see [[dfCapped]]'s contract), never a surfaced pair's score.
+    * RECALL, never a surfaced pair's score: a pair is lost only when
+    * EVERY shared shingle has df > dfCap. For organically similar
+    * documents that never happens (they share many low-df shingles);
+    * the one real loss case is a cluster duplicated more than dfCap
+    * times with small mutations (mass-replicated boilerplate), which
+    * the standard pipeline ordering handles: run [[exactGroups]] first
+    * and near-dup the surviving uniques.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, tau: Double = 0.8, dfCap: Int = 512,
@@ -588,42 +524,6 @@ object Dedup {
     def unpersist(): Unit = { shingles.unpersist(); () }
   }
 
-  /** Persist a [[MinhashIndex]] as catalog tables BUCKETED BY their join
-    * keys — the deployment shape the incremental/streaming dedup path
-    * assumes: `<prefix>_shingles` bucketed by `s`, `<prefix>_bands`
-    * bucketed by `(band, bh)`, `<prefix>_sizes` by-id, and a one-row
-    * `<prefix>_meta` carrying (k, numHashes, bandSize) so a loaded index
-    * always bands incoming batches identically. Joins against the
-    * loaded tables shuffle ONLY the batch side (bucket pruning keeps the
-    * corpus scan in place — proven by the bucketed-bands spec's plan
-    * assertion); at 100 TB `buckets` scales with the corpus, and the
-    * same tables back every batch, incremental, and streaming run.
-    */
-  def saveMinhashIndex(index: MinhashIndex, prefix: String,
-                       buckets: Int = 64): Unit = {
-    val spark = index.shingles.sparkSession
-    import spark.implicits._
-    index.shingles.write.mode("overwrite")
-      .bucketBy(buckets, "s").saveAsTable(s"${prefix}_shingles")
-    index.bands.write.mode("overwrite")
-      .bucketBy(buckets, "band", "bh").saveAsTable(s"${prefix}_bands")
-    index.sizes.write.mode("overwrite").saveAsTable(s"${prefix}_sizes")
-    Seq((index.k, index.numHashes, index.bandSize))
-      .toDF("k", "num_hashes", "band_size")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_meta")
-  }
-
-  /** Load a [[MinhashIndex]] persisted by [[saveMinhashIndex]]. */
-  def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                       prefix: String): MinhashIndex = {
-    val meta = spark.table(s"${prefix}_meta").head()
-    MinhashIndex(
-      shingles = spark.table(s"${prefix}_shingles"),
-      sizes = spark.table(s"${prefix}_sizes"),
-      bands = spark.table(s"${prefix}_bands"),
-      k = meta.getInt(0), numHashes = meta.getInt(1), bandSize = meta.getInt(2))
-  }
-
   private def bandRows(sigs: DataFrame, numBands: Int, bandSize: Int): DataFrame =
     sigs.select(col("id"),
       explode(array((0 until numBands).map(b =>
@@ -721,7 +621,8 @@ object Dedup {
     * m² join rows, and at web scale one degenerate bucket (e.g. the
     * all-zeros chunk of short/templated docs) is a scale-killer.
     * Buckets with more than `bucketCap` members are dropped from the
-    * candidate join. Recall contract mirrors [[dfCapped]]: a pair is
+    * candidate join. Recall contract mirrors [[ngramJaccardPairs]]'s
+    * df cap: a pair is
     * lost only if EVERY chunk it agrees on is over the cap — true for
     * mass-replicated identical content, which the standard pipeline
     * removes with [[exactGroups]] FIRST; the verify popcount is exact
@@ -895,26 +796,6 @@ object Dedup {
     parent.keySet().asScala.iterator.map(n => (n, find(n)))
   }
 
-  /** Fold a new batch of near-dup pairs into a persisted
-    * (doc_id, cluster_id) assignment — the cluster-side companion of
-    * [[minhashLshIncremental]]: continuous ingestion finds batch-vs-index
-    * pairs, and this closes them into the standing cluster table without
-    * ever re-pairing history. Each existing assignment IS a closed edge
-    * (member — canonical), so `updateComponents(connectedComponents(P1),
-    * P2) == connectedComponents(P1 ∪ P2)` (spec-pinned on random
-    * splits): clusters merged by a bridging batch re-key to the min id
-    * across both generations. Cost scales with |assignment| + |batch
-    * pairs|, not with pair history.
-    */
-  def updateComponents(existing: DataFrame, newPairs: DataFrame,
-                       aCol: String = "id_a", bCol: String = "id_b"): DataFrame =
-    connectedComponents(
-      existing
-        .select(col("doc_id").as("id_a"), col("cluster_id").as("id_b"))
-        .unionByName(
-          newPairs.select(col(aCol).cast("long").as("id_a"),
-            col(bCol).cast("long").as("id_b"))))
-
   /** Keep-list filter over a cluster assignment: drops every row whose
     * id is a NON-canonical member of a duplicate cluster; canonical
     * members (id == cluster_id) and docs absent from `clusters`
@@ -949,21 +830,6 @@ object Dedup {
         count(lit(1)).as("n_members"))
       .select(col("cluster_id"), col("m.i").as("keeper"),
         (-col("m.ns")).as("keeper_score"), col("n_members"))
-
-  /** [[dropDuplicateMembers]] with the quality-aware survivor: every
-    * cluster keeps its [[bestClusterMembers]] winner instead of the
-    * minimum id. Rows outside any cluster pass through untouched.
-    */
-  def dropDuplicateMembersBest(df: DataFrame, idCol: String,
-                               scoreCol: String,
-                               clusters: DataFrame): DataFrame = {
-    val winners = bestClusterMembers(clusters,
-      df.select(col(idCol), col(scoreCol)), idCol, scoreCol)
-    val dupIds = clusters.join(winners, Seq("cluster_id"))
-      .filter(col("doc_id") =!= col("keeper"))
-      .select(col("doc_id"))
-    df.join(dupIds, df(idCol) === dupIds("doc_id"), "left_anti")
-  }
 
   /** Span-level (block) dedup — the C4/RefinedWeb "remove the duplicated
     * PASSAGE, keep the document" operator, complementary to the
@@ -1033,43 +899,6 @@ object Dedup {
         size(col("__arr")).cast("long").as("n_kept"),
         (col("__total") - size(col("__arr"))).as("n_dropped"))
 
-  /** One batch of incremental [[blockDedup]]: dedup a NEW batch's blocks
-    * against a standing seen-block index (one `bh` long column) AND
-    * within the batch itself, returning the deduped batch plus the
-    * index delta to append. When corpus documents precede batch
-    * documents in (doc, pos) order, folding batches in order equals the
-    * one-shot `blockDedup(corpus ∪ batch)` restricted to the batch
-    * (spec-pinned) — the continuous-ingest contract.
-    *
-    * Scale: the standing index is never re-read as text and never
-    * shuffles when persisted bucketed by `bh` ([[saveBlockIndex]]) —
-    * the batch side alone moves through the seen join, exactly the
-    * [[minhashLshIncremental]] deployment shape. The index delta is the
-    * batch's DISTINCT new hashes (8 bytes each), appended bucket-aligned.
-    */
-  final case class BlockBatch(deduped: DataFrame, newBlocks: DataFrame)
-
-  def blockDedupIncremental(batch: DataFrame, idCol: String, textCol: String,
-                            seenBlocks: DataFrame,
-                            blockSize: Int = 64): BlockBatch = {
-    val blocks = blockRows(batch, idCol, textCol, blockSize)
-    val firsts = blocks.groupBy(col("__bh"))
-      .agg(min(struct(col(idCol), col("chunk_id"))).as("__first"),
-        count(lit(1)).as("__df"))
-    val seen = seenBlocks.select(col("bh").as("__bh"), lit(true).as("__seen"))
-    val flagged = blocks.join(firsts, Seq("__bh"))
-      .join(seen, Seq("__bh"), "left")
-      .withColumn("__keep", col("__seen").isNull &&
-        (col("__df") === 1 ||
-          (col(idCol) === col("__first")(idCol) &&
-            col("chunk_id") === col("__first")("chunk_id"))))
-    val delta = blocks.select(col("__bh"))
-      .distinct()
-      .join(seen, Seq("__bh"), "left_anti")
-      .select(col("__bh").as("bh"))
-    BlockBatch(reassemble(idCol, flagged), delta)
-  }
-
   /** Boilerplate-block STRIP: remove every occurrence of any block that
     * appears in >= `minDf` distinct documents — headers, footers, cookie
     * banners, license stubs. The dual of [[blockDedup]]: where dedup
@@ -1103,17 +932,6 @@ object Dedup {
         .withColumn("__keep", col("__docdf") < minDf))
   }
 
-  /** Persist/append a seen-block index bucketed by `bh`, so batch joins
-    * leave the standing side in place (same contract as
-    * [[saveMinhashIndex]]). Append the [[BlockBatch.newBlocks]] delta
-    * after each batch.
-    */
-  def saveBlockIndex(blocks: DataFrame, table: String, buckets: Int = 64,
-                     append: Boolean = false): Unit =
-    blocks.select(col("bh")).write
-      .mode(if (append) "append" else "overwrite")
-      .bucketBy(buckets, "bh").saveAsTable(table)
-
   // -------------------------------------------------------------------
   // Tier 6: substring (span-level) duplication. Whole-doc tiers (2-5)
   // miss the common web-scale failure mode where two otherwise-distinct
@@ -1137,9 +955,9 @@ object Dedup {
     * ~15/16 rejected digests (prefix checked on nibbles), and per-doc
     * dedup in place — so the plan is scan → kernel → Generate with ZERO
     * shuffles (the old relational form paid a distinct exchange and a
-    * Generate row per character; it survives as
-    * [[spanFingerprintsUnfused]] for the equivalence spec, and the
-    * DuckDB oracle still replays selection bit-for-bit from md5). At
+    * Generate row per character; it survives in the specs as the
+    * equivalence oracle, and the DuckDB oracle still replays selection
+    * bit-for-bit from md5). At
     * 100 TB: tune k to the shortest span worth catching (40-100 chars)
     * and |sel| so sampled rows per doc stay O(len/16^|sel|) ~ tens.
     */
@@ -1151,27 +969,6 @@ object Dedup {
           graft.functions.SampledSpanHashes(
             org.apache.spark.sql.classic.GraftExpressionBridge.expression(
               col(textCol)), k, sel))).as("h"))
-
-  /** The explode→substr→md5→startsWith→distinct formulation of
-    * [[spanFingerprints]] — an independent implementation kept ONLY for
-    * the equivalence spec (kernel == relational pipeline): the fused
-    * kernel hashes a sliding byte window with no per-position row and
-    * dedups in place, where this form materializes a Generate row per
-    * character position, hex-encodes every rejected digest, and pays a
-    * full distinct exchange.
-    */
-  private[graft] def spanFingerprintsUnfused(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 40, sel: String = "0"): DataFrame =
-    df.filter(length(col(textCol)) >= k)
-      .select(col(idCol).as("id"), col(textCol).as("__t"))
-      // length >= k keeps the sequence ascending (Spark would otherwise
-      // generate a DESCENDING sequence for stop < start, not an empty one)
-      .select(col("id"), col("__t"),
-        explode(sequence(lit(1), length(col("__t")) - lit(k - 1))).as("__p"))
-      .select(col("id"), md5(col("__t").substr(col("__p"), lit(k))).as("h"))
-      .filter(col("h").startsWith(sel))
-      .distinct()
 
   /** Doc pairs sharing at least `minShared` sampled k-grams — i.e.
     * sharing verbatim spans totalling roughly `minShared * 16^|sel|`
@@ -1198,44 +995,36 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("ic").as("n_shared"))
   }
 
-  /** Persist a tier-6 span-fingerprint index BUCKETED BY the 8-byte
-    * fingerprint — the join key of [[spanPairsIncremental]], so batch
-    * probes leave the corpus side in place (same contract as
-    * [[saveMinhashIndex]]). Append each batch's fingerprints after
-    * processing to keep the index current.
+  /** The batch side of [[spanPairsIncremental]]: (id_new, s), the
+    * batch's span fingerprints as 8-byte keys.
     */
-  def saveSpanIndex(df: DataFrame, idCol: String, textCol: String,
-                    table: String, k: Int = 40, sel: String = "0",
-                    buckets: Int = 64, append: Boolean = false): Unit =
-    spanFingerprints(df, idCol, textCol, k, sel)
-      .select(col("id"), xxhash64(col("h")).as("s"))
-      .write.mode(if (append) "append" else "overwrite")
-      .bucketBy(buckets, "s").saveAsTable(table)
+  def spanBatchFingerprints(newDf: DataFrame, idCol: String, textCol: String,
+                            k: Int = 40, sel: String = "0"): DataFrame =
+    spanFingerprints(newDf, idCol, textCol, k, sel)
+      .select(col("id").as("id_new"), xxhash64(col("h")).as("s"))
 
   /** Incremental tier-6: span pairs of a NEW batch against a persisted
     * corpus index — (id_new, id_corpus, n_shared) with n_shared >=
     * `minShared`, EXACT per surfaced pair (over-cap supplement, as in
-    * [[duplicateSpanPairs]]). Only the batch side is fingerprinted and
-    * shuffled; against a [[saveSpanIndex]] table the sort-merge join
-    * reads corpus buckets in place, and the corpus-side df counts (the
-    * sf-scaling side for the cap) ride that same bucketed layout
-    * shuffle-free. Batch-internal pairs are intentionally not emitted
-    * (run [[duplicateSpanPairs]] on the batch for those).
+    * [[duplicateSpanPairs]]). `batch` is [[spanBatchFingerprints]] of
+    * the new documents and `index` the corpus's (id, s) fingerprints,
+    * built with the same `k`/`sel`. Both feed two consumers each (kept
+    * and over-cap slices); the caller caches them if it wants, and owns
+    * the release. Only the batch side shuffles; against an index table
+    * bucketed by `s` the sort-merge join reads corpus buckets in place,
+    * and the corpus-side df counts (the sf-scaling side for the cap)
+    * ride that same bucketed layout shuffle-free. Batch-internal pairs
+    * are intentionally not emitted (run [[duplicateSpanPairs]] on the
+    * batch for those).
     */
-  def spanPairsIncremental(newDf: DataFrame, idCol: String, textCol: String,
-                           index: DataFrame, k: Int = 40, sel: String = "0",
-                           minShared: Int = 2, dfCap: Int = 256,
-                           persistIndex: Boolean = true): DataFrame = {
-    val b = persisted(
-      spanFingerprints(newDf, idCol, textCol, k, sel)
-        .select(col("id").as("id_new"), xxhash64(col("h")).as("s")),
-      persistIndex)
+  def spanPairsIncremental(batch: DataFrame, index: DataFrame,
+                           minShared: Int = 2, dfCap: Int = 256): DataFrame = {
     val idx = index.select(col("id").as("id_corpus"), col("s"))
     // corpus-side df only: the corpus is the side that scales
     val overS = idx.groupBy(col("s")).agg(count(lit(1)).as("df_"))
       .filter(col("df_") > dfCap).select(col("s"))
     val keptIdx = if (dfCap <= 0) idx else idx.join(overS, Seq("s"), "left_anti")
-    val keptB   = if (dfCap <= 0) b   else b.join(overS, Seq("s"), "left_anti")
+    val keptB   = if (dfCap <= 0) batch else batch.join(overS, Seq("s"), "left_anti")
     val cKept = keptB.join(keptIdx, Seq("s"))
       .groupBy(col("id_new"), col("id_corpus"))
       .agg(count(lit(1)).as("c_kept"))
@@ -1243,7 +1032,7 @@ object Dedup {
       if (dfCap <= 0) cKept.select(col("id_new"), col("id_corpus"), col("c_kept").as("n_shared"))
       else {
         val overIdx = idx.join(overS, Seq("s"), "left_semi")
-        val overB   = b.join(overS, Seq("s"), "left_semi")
+        val overB   = batch.join(overS, Seq("s"), "left_semi")
         val cOver = cKept.select(col("id_new"), col("id_corpus"))
           .join(overB, Seq("id_new"))
           .join(overIdx, Seq("id_corpus", "s"))

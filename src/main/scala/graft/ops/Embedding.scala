@@ -193,44 +193,6 @@ object Embedding {
     ShingleTfIndex(v, norms, dim, k, () => { if (persist) v.unpersist(); () })
   }
 
-  /** Persist a [[ShingleTfIndex]] as a catalog table BUCKETED BY the
-    * shingle bucket `d` — the incremental probe's join key, so a new
-    * batch joins the standing corpus WITHOUT reshuffling it (the
-    * minhash-index contract) — plus a one-row `<prefix>_stf_meta`
-    * carrying (dim, k) so a loaded index always shingles incoming
-    * batches into the bucket space it was built with. Norms re-derive
-    * from the table on load.
-    */
-  def saveShingleTfIndex(index: ShingleTfIndex, prefix: String,
-                         buckets: Int = 16): Unit = {
-    val spark = index.v.sparkSession
-    import spark.implicits._
-    index.v.write.mode("overwrite")
-      .bucketBy(buckets, "d").saveAsTable(s"${prefix}_stf")
-    Seq((index.dim, index.k)).toDF("dim", "k")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_stf_meta")
-  }
-
-  /** Load a [[saveShingleTfIndex]] index (unpersisted — the table scan
-    * IS the cache; release() is a no-op). */
-  def loadShingleTfIndex(spark: org.apache.spark.sql.SparkSession,
-                         prefix: String): ShingleTfIndex = {
-    val v = spark.table(s"${prefix}_stf")
-    val meta = spark.table(s"${prefix}_stf_meta").head()
-    ShingleTfIndex(v,
-      v.groupBy(col("id")).agg(sum(col("c") * col("c")).as("nn")),
-      meta.getInt(0), meta.getInt(1),
-      () => ())
-  }
-
-  /** Incremental [[hashedShingleNearDup]]: near-dup pairs of a NEW
-    * batch against a standing corpus index — corpus history is never
-    * re-shingled, cost scales with |batch| + the touched index slice.
-    * `dfCap` applies to the CORPUS-side document frequency (hot-dim
-    * pruning is a property of the standing index, so a replayed batch
-    * meets the same candidate set). Same integer-exact cosine gate;
-    * output (id_new, id_corpus, dot, norm_new, norm_corpus).
-    */
   /** The integer cosine-≥-τ gate, overflow-safe, with a LONG FAST
     * PATH: when both squared norms are ≤ a bound B chosen so every
     * product fits signed 64-bit, the comparison runs in plain long
@@ -272,6 +234,14 @@ object Embedding {
       .otherwise(slow)
   }
 
+  /** Incremental [[hashedShingleNearDup]]: near-dup pairs of a NEW
+    * batch against a standing corpus index — corpus history is never
+    * re-shingled, cost scales with |batch| + the touched index slice.
+    * `dfCap` applies to the CORPUS-side document frequency (hot-dim
+    * pruning is a property of the standing index, so a replayed batch
+    * meets the same candidate set). Same integer-exact cosine gate;
+    * output (id_new, id_corpus, dot, norm_new, norm_corpus).
+    */
   def hashedShingleNearDupIncremental(batch: DataFrame, index: ShingleTfIndex,
                                       idCol: String, textCol: String,
                                       tauSqNum: Long = 81L, tauSqDen: Long = 100L,

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed partition-wise in batches.
@@ -22,10 +21,6 @@ object Multimodal {
     df.withColumn("payload", col(textCol).cast("binary"))
       .withColumn("media_type", lit("text/plain"))
       .withColumn("byte_len", length(col("payload")))
-
-  val featureSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("features", ArrayType(FloatType, containsNull = false))))
 
   /** STUB decode: a real implementation would hand each batch of payloads
     * to a codec (JPEG decode, mel-spectrogram, frame sampling). The fake
@@ -50,47 +45,6 @@ object Multimodal {
     pairs.mapPartitions { it =>
       it.grouped(batchSize).flatMap(b => decodeBatchStub(b, dim))
     }.toDF("doc_id", "features")
-  }
-
-  // ── real (non-stub) binary metadata: container headers need no codec ──
-
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xFF) << 24) | ((b(off + 1) & 0xFF) << 16) |
-      ((b(off + 2) & 0xFF) << 8) | (b(off + 3) & 0xFF)
-
-  /** Sniff the media type from magic bytes (PNG/JPEG/RIFF-WAV/else). */
-  def sniffMediaType(b: Array[Byte]): String =
-    if (b.length >= 8 && (b(0) & 0xFF) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
-      "image/png"
-    else if (b.length >= 3 && (b(0) & 0xFF) == 0xFF && (b(1) & 0xFF) == 0xD8 && (b(2) & 0xFF) == 0xFF)
-      "image/jpeg"
-    else if (b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-      b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')
-      "audio/wav"
-    else "application/octet-stream"
-
-  /** (width, height) from a PNG IHDR (bytes 16..23 after the 8-byte
-    * signature + IHDR chunk header) or a JPEG SOFn marker scan.
-    */
-  def imageDims(b: Array[Byte]): Option[(Int, Int)] = sniffMediaType(b) match {
-    case "image/png" if b.length >= 24 => Some((be32(b, 16), be32(b, 20)))
-    case "image/jpeg" =>
-      var i = 2
-      while (i + 9 < b.length) {
-        if ((b(i) & 0xFF) != 0xFF) return None
-        val marker = b(i + 1) & 0xFF
-        val len = ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-        // SOF0..SOF15 except DHT(C4)/JPG(C8)/DAC(CC)
-        if (marker >= 0xC0 && marker <= 0xCF &&
-          marker != 0xC4 && marker != 0xC8 && marker != 0xCC) {
-          val h = ((b(i + 5) & 0xFF) << 8) | (b(i + 6) & 0xFF)
-          val w = ((b(i + 7) & 0xFF) << 8) | (b(i + 8) & 0xFF)
-          return Some((w, h))
-        }
-        i += 2 + len
-      }
-      None
-    case _ => None
   }
 
   /** STUB resize: a real implementation hands each batch to an image
@@ -151,21 +105,5 @@ object Multimodal {
     df.select(col(idCol).cast("long"), col(payloadCol)).as[(Long, Array[Byte])]
       .mapPartitions(_.grouped(batchSize).flatMap(frameBatchStub(_, frameBytes, stride)))
       .toDF("doc_id", "frame_idx", "frame")
-  }
-
-  /** Typed media metadata over a binary column, batched partition-wise
-    * like extractFeatures (the mapInPandas-shaped pipeline stage).
-    */
-  def withMediaMetadata(df: DataFrame, idCol: String, payloadCol: String,
-                        batchSize: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol)).as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(batchSize).flatMap(_.map { case (id, bytes) =>
-        val dims = imageDims(bytes)
-        (id, sniffMediaType(bytes), bytes.length.toLong,
-          dims.map(_._1), dims.map(_._2))
-      }))
-      .toDF("doc_id", "media_type", "byte_len", "width", "height")
   }
 }

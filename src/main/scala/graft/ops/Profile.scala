@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Output is long-form `(column_name, metric, value: double)` — the
   * shape a profile store persists per partition/day, which makes drift
-  * checking a self-join (`drift`) and threshold rules a tiny collected
-  * scan (`check`).
+  * checking a self-join (`drift`).
   */
 object Profile {
 
@@ -64,92 +63,6 @@ object Profile {
     aggRow.select(explode(array(entries: _*)).as("e"))
       .select(col("e.column_name"), col("e.metric"), col("e.value"))
   }
-
-  /** A threshold rule over a profile row: `metric(column) op threshold`.
-    * op ∈ > >= < <= == != ; evaluated on the (tiny) collected profile.
-    */
-  final case class ProfileRule(rule: String, columnName: String,
-                               metric: String, op: String, threshold: Double)
-
-  final case class ProfileRuleResult(rule: String, columnName: String,
-                                     metric: String, actual: Option[Double],
-                                     threshold: Double, passed: Boolean)
-
-  /** Evaluate threshold rules against a profile frame. A rule whose
-    * (column, metric) is absent from the profile FAILS (actual=None) —
-    * a misspelled metric must not pass silently.
-    */
-  def check(profileDf: DataFrame, rules: Seq[ProfileRule]): Seq[ProfileRuleResult] = {
-    val prof = profileDf.collect().map(r =>
-      (r.getString(0), r.getString(1)) ->
-        (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-    rules.map { r =>
-      val actual = prof.get((r.columnName, r.metric)).flatten
-      val ok = actual.exists { a =>
-        r.op match {
-          case ">" => a > r.threshold
-          case ">=" => a >= r.threshold
-          case "<" => a < r.threshold
-          case "<=" => a <= r.threshold
-          case "==" => a == r.threshold
-          case "!=" => a != r.threshold
-          case other => throw new IllegalArgumentException(s"unknown op '$other'")
-        }
-      }
-      ProfileRuleResult(r.rule, r.columnName, r.metric, actual, r.threshold, ok)
-    }
-  }
-
-  /** Persist a profile frame into a snapshot-partitioned catalog table
-    * (the profile-store lifecycle, like `saveMinhashIndex` /
-    * `saveIvfIndex` for the dedup/ANN indexes): one partition per
-    * snapshot label (run date, batch id), re-saving a label replaces
-    * only that partition. Profiles are a handful of rows per snapshot,
-    * so the store stays tiny while the 100 TB inputs it summarizes are
-    * long gone — `drift` then runs baseline-vs-current without any
-    * recompute.
-    */
-  def save(profileDf: DataFrame, table: String, snapshot: String): Unit = {
-    val spark = profileDf.sparkSession
-    val df = profileDf.withColumn("snapshot", lit(snapshot))
-    if (!spark.catalog.tableExists(table))
-      df.write.partitionBy("snapshot").saveAsTable(table)
-    else {
-      // dynamic mode scopes the overwrite to the snapshot partitions
-      // actually present in df (insertInto reads the SESSION conf, not
-      // writer options) — other labels are untouched
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try df.write.mode("overwrite").insertInto(table)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  /** Load one snapshot back in the exact `profile()` shape. Partition
-    * pruning makes this a single-partition scan.
-    */
-  def load(spark: org.apache.spark.sql.SparkSession, table: String,
-           snapshot: String): DataFrame =
-    spark.table(table).filter(col("snapshot") === lit(snapshot)).drop("snapshot")
-
-  /** Snapshot labels present in a profile store (partition listing). */
-  def snapshots(spark: org.apache.spark.sql.SparkSession, table: String): Seq[String] =
-    spark.table(table).select("snapshot").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-
-  /** Drift between two STORED snapshots — the lifecycle endgame: profile
-    * today's partition, `save` it, and compare against any historical
-    * label without touching the original data.
-    */
-  def driftFromStore(spark: org.apache.spark.sql.SparkSession, table: String,
-                     baselineSnapshot: String, currentSnapshot: String,
-                     tolerance: Double = 0.1): DataFrame =
-    drift(load(spark, table, baselineSnapshot),
-      load(spark, table, currentSnapshot), tolerance)
 
   /** Drift between a baseline profile and a current one: rows where the
     * relative change exceeds `tolerance` (or a metric exists on one side

@@ -32,12 +32,6 @@ object Sampling {
   def hashBucket(id: Column): Column =
     pmod(pmod(id, lit(FoldPrime)) * lit(Knuth), lit(Buckets))
 
-  /** Keep ~`frac` of rows, deterministically by id hash. */
-  def hashSample(df: DataFrame, idCol: String, frac: Double): DataFrame = {
-    require(frac >= 0 && frac <= 1, "fraction out of [0,1]")
-    df.filter(hashBucket(col(idCol)) < lit((frac * Buckets).toLong))
-  }
-
   /** [[hashBucket]] for STRING keys (domains, authors, URLs):
     * the first 8 hex digits of md5 read as an integer, mod 1e6 —
     * engine-portable because md5 is, unlike `xxhash64` or JVM
@@ -51,13 +45,6 @@ object Sampling {
     */
   def stringBucket(s: Column): Column =
     pmod(conv(substring(md5(s), 1, 8), 16, 10).cast("long"), lit(Buckets))
-
-  /** [[hashSample]] over a STRING key (sample by URL/domain/author
-    * without materializing a numeric id). */
-  def hashSampleStr(df: DataFrame, keyCol: String, frac: Double): DataFrame = {
-    require(frac >= 0 && frac <= 1, "fraction out of [0,1]")
-    df.filter(stringBucket(col(keyCol)) < lit((frac * Buckets).toLong))
-  }
 
   /** Per-stratum fractions: keep ~`fractions(stratum)` of each stratum
     * (`default` for strata not in the map). One scan, no shuffle, no
@@ -137,56 +124,13 @@ object Sampling {
       .withColumn("pos", row_number().over(w))
   }
 
-  /** Sampling fractions that reweight strata toward a target mix: given
-    * each stratum's current weight (e.g. token counts) and a target
-    * share, return the per-stratum keep-fraction that gets closest to
-    * the target distribution without upsampling (the largest achievable
-    * scale is used: the most over-target stratum is kept in full ratio).
-    * Driver-side arithmetic over a handful of strata — the actual
-    * sampling stays a distributed scan via [[stratifiedSample]].
-    */
-  def mixFractions(current: Map[String, Long], target: Map[String, Double]): Map[String, Double] = {
-    require(current.nonEmpty && current.keySet == target.keySet, "strata sets must match")
-    val tSum = target.values.sum
-    require(target.values.forall(_ >= 0) && tSum > 0, "bad target shares")
-    val share = target.view.mapValues(_ / tSum).toMap
-    // scale = total tokens of the mixed corpus; bounded so no stratum
-    // needs more rows than it has: scale <= current(s)/share(s) for all s
-    val scale = current.collect { case (s, c) if share(s) > 0 => c / share(s) }.min
-    current.map { case (s, c) =>
-      s -> (if (c == 0) 0.0 else math.min(1.0, scale * share(s) / c))
-    }
-  }
-
-  /** Temperature-flattened mixture sampling, the multilingual-training
-    * rebalance (cf. mBERT/XLM-R exponential smoothing): target share of
-    * stratum `s` ∝ count(s)^alpha, realized by deterministic
-    * downsampling only (no upsampling — the most over-target stratum is
-    * kept whole). alpha = 1 keeps the natural mix; alpha → 0 approaches
-    * uniform; 0.5 is the common "flatten the head, keep the tail" point.
-    *
-    * Fully distributed, unlike [[mixFractions]]' driver-side map: the
-    * stratum counts, the scale bound, and the per-stratum thresholds are
-    * three TINY aggregates (≤ #strata rows) joined back to the corpus —
-    * AQE broadcasts them — so the corpus itself is ONE scan with a
-    * pushed filter and no shuffle, and nothing ever collects.
-    *
-    * Engine-portable determinism: membership is `hashBucket(id) <
-    * floor(frac·1e6)`, and for alpha = 0.5 the weight is computed with
-    * `sqrt` (correctly-rounded in IEEE-754, bit-identical across
-    * engines) — min/mul/div are likewise correctly rounded, so the
-    * thresholds and therefore the sampled SET are reproducible
-    * bit-for-bit in any engine (oracle-checked). Other alphas go
-    * through `pow`, which is only ~1-ulp across libms — documented, not
-    * oracle-pinned.
-    */
   /** Per-stratum repeat factors that hit `target` shares by REPETITION
     * (upsampling) only: the most over-target stratum gets factor 1.0
     * (its data is never dropped), every other stratum repeats
-    * `scale·share/count ≥ 1` times. The dual of [[mixFractions]], which
-    * reaches the same mix by downsampling; use this form when the
-    * corpus is the bottleneck and training wants more epochs of the
-    * small sources (the standard multilingual/code-mix recipe).
+    * `scale·share/count ≥ 1` times. The dual of downsampling
+    * ([[mixtureSelect]]); use this form when the corpus is the
+    * bottleneck and training wants more epochs of the small sources
+    * (the standard multilingual/code-mix recipe).
     */
   def repeatFactors(current: Map[String, Long], target: Map[String, Double]): Map[String, Double] = {
     require(current.nonEmpty && current.keySet == target.keySet, "strata sets must match")
@@ -232,6 +176,28 @@ object Sampling {
       .drop("__n")
   }
 
+  /** Temperature-flattened mixture sampling, the multilingual-training
+    * rebalance (cf. mBERT/XLM-R exponential smoothing): target share of
+    * stratum `s` ∝ count(s)^alpha, realized by deterministic
+    * downsampling only (no upsampling — the most over-target stratum is
+    * kept whole). alpha = 1 keeps the natural mix; alpha → 0 approaches
+    * uniform; 0.5 is the common "flatten the head, keep the tail" point.
+    *
+    * Fully distributed: the stratum counts, the scale bound, and the
+    * per-stratum thresholds are three TINY aggregates (≤ #strata rows)
+    * joined back to the corpus —
+    * AQE broadcasts them — so the corpus itself is ONE scan with a
+    * pushed filter and no shuffle, and nothing ever collects.
+    *
+    * Engine-portable determinism: membership is `hashBucket(id) <
+    * floor(frac·1e6)`, and for alpha = 0.5 the weight is computed with
+    * `sqrt` (correctly-rounded in IEEE-754, bit-identical across
+    * engines) — min/mul/div are likewise correctly rounded, so the
+    * thresholds and therefore the sampled SET are reproducible
+    * bit-for-bit in any engine (oracle-checked). Other alphas go
+    * through `pow`, which is only ~1-ulp across libms — documented, not
+    * oracle-pinned.
+    */
   def temperatureSample(df: DataFrame, strataCol: String, idCol: String,
                         alpha: Double): DataFrame = {
     require(alpha > 0 && alpha <= 1, "alpha out of (0,1]")
@@ -282,9 +248,8 @@ object Sampling {
   }
 
   /** EXPLICIT-target mixture sampling — the "30% code / 50% web / 20%
-    * books" recipe — as one distributed integer-exact gate (the fully
-    * declarative sibling of [[mixFractions]], whose driver-side map
-    * needs the counts collected first). `shares` gives each stratum's
+    * books" recipe — as one distributed integer-exact gate; nothing is
+    * collected to the driver. `shares` gives each stratum's
     * target weight as an integer (shares normalize, so (3,5,2) ≡
     * (30,50,20)); the mix is reached by downsampling only — the
     * BINDING stratum (minimal n_s/share_s, the one that runs out
@@ -320,9 +285,7 @@ object Sampling {
     * twice (the strata-mass aggregate and the membership join probe —
     * different exchange shapes, so AQE cannot dedupe them): persist a
     * narrow projection first when the lineage above it is expensive
-    * (what [[graft.ops.Curation.pipelineV5Stages]] does), or
-    * precompute the recipe once with [[mixtureThresholds]] and apply
-    * it in one pass via [[mixtureGateWith]].
+    * (what [[graft.ops.Curation.pipelineV5Stages]] does).
     *
     * Weight hygiene: a NULL or negative `weightCol` value would
     * silently skew (or vanish) its stratum's mass, so both fail the
@@ -345,11 +308,8 @@ object Sampling {
       .drop("__n", "__num", "__nb", "__numb")
   }
 
-  /** The strata-mass table and binding-stratum election shared by
-    * [[mixtureSelect]] and [[mixtureThresholds]] — ONE implementation
-    * so the persisted recipe can never diverge from the direct gate
-    * (their bit-exact equality is the recipe's whole contract,
-    * spec-pinned). Returns (counts(strata, __n, __num),
+  /** The strata-mass table and binding-stratum election of
+    * [[mixtureSelect]]. Returns (counts(strata, __n, __num),
     * binding(__nb, __numb)); both are ≤ #strata-row frames.
     */
   private def mixtureCountsAndBinding(
@@ -559,41 +519,6 @@ object Sampling {
       .drop("__stride")
   }
 
-  /** [[mixtureSelect]]'s gate reified as a standing RECIPE: the
-    * (strata, thr) table with `thr = min(1e6, ⌊1e6·n_b·share_s /
-    * (share_b·n_s)⌋)` — `hashBucket(id) < thr` then reproduces the
-    * selection exactly (the division-free membership identity run in
-    * reverse; `div` on decimal(38,0) products keeps the floor exact).
-    * ≤ #strata rows: persist it once per training run
-    * ([[saveMixtureRecipe]]) and apply statelessly to any later slice
-    * or stream of the same corpus — the mixture analogue of the DSIR
-    * bucket model.
-    */
-  def mixtureThresholds(df: DataFrame, strataCol: String,
-                        shares: Map[String, Long],
-                        weightCol: Option[String] = None): DataFrame = {
-    val dec = "decimal(38,0)"
-    val (counts, binding) =
-      mixtureCountsAndBinding(df, strataCol, shares, weightCol)
-    counts.crossJoin(binding)
-      .withColumn("thr", least(lit(Buckets), expr(
-        s"""CAST((CAST($Buckets AS $dec) * CAST(__nb AS $dec) * CAST(__num AS $dec))
-            div (CAST(__numb AS $dec) * CAST(__n AS $dec)) AS BIGINT)""")))
-      .select(col(strataCol), col("thr"))
-  }
-
-  /** Apply a [[mixtureThresholds]] recipe: stateless per row (an
-    * equi-join against the ≤ #strata-row recipe plus a hash compare),
-    * so it composes with Structured Streaming micro-batches and with
-    * any later corpus slice without recomputing strata masses. Strata
-    * absent from the recipe drop (share 0 / not in the mix).
-    */
-  def mixtureGateWith(df: DataFrame, thresholds: DataFrame,
-                      strataCol: String, idCol: String): DataFrame =
-    df.join(thresholds, Seq(strataCol))
-      .filter(hashBucket(col(idCol)) < col("thr"))
-      .drop("thr")
-
   /** Repeat each stratum's rows a RATIONAL number of times — the
     * up-sampling primitive behind epoch-weighted training mixes
     * ("repeat the small high-quality corpus 3.2x per epoch of web",
@@ -675,11 +600,7 @@ object Sampling {
     * epoch factors (num, den) that realize `shares` over `df`'s strata
     * masses by pure repetition — the most over-represented stratum
     * (argmax of n/share, smallest among ties) gets factor 1 and every
-    * other stratum `(share_s·n_b)/(share_b·n_s)` ≥ 1. Reify the map
-    * with [[saveUpsampleRecipe]] to replay the SAME factors over later
-    * slices or streams of the corpus (the recipe's masses come from
-    * the training run's reference corpus; a crawl batch is not that
-    * corpus, so factors must NOT be recomputed per batch).
+    * other stratum `(share_s·n_b)/(share_b·n_s)` ≥ 1.
     */
   def upsampleFactors(df: DataFrame, strataCol: String,
                       shares: Map[String, Long]): Map[String, (Long, Long)] = {
@@ -713,92 +634,6 @@ object Sampling {
       s -> (rn.toLong, rd.toLong)
     }.toMap
   }
-
-  /** Apply a PERSISTED up-sampling recipe (a (strata, num, den) frame
-    * from [[saveUpsampleRecipe]]): the [[epochRepeat]] kernel with the
-    * factor map replaced by an equi-join against the ≤ #strata-row
-    * recipe (AQE broadcasts it) — bit-identical output (the gate and
-    * floor identities are invariant in num/den), but fully declarative
-    * over a frame, so it composes with Structured Streaming
-    * micro-batches: repetition is per-document against FIXED factors,
-    * no state crosses batches, and replay is idempotent (the same
-    * document emits the same copies in any batch). Strata absent from
-    * the recipe drop (not in the mix). The same `copy`-column
-    * composability contract as [[epochRepeat]] applies.
-    */
-  /** Validate an upsample-recipe FRAME against [[epochRepeat]]'s
-    * per-factor requires — LOUD apply-time guard for recipes that
-    * arrive as tables (saveUpsampleRecipe validates at save time, but
-    * a table is just a table: a hand-edited or externally written row
-    * with den = 0 makes `num div den` NULL under non-ANSI semantics,
-    * which the __k > 0 filter would swallow as a silently-dropped
-    * stratum). The frame is ≤ #strata rows (broadcast-sized), so the
-    * collect is bounded. Streaming callers validate ONCE at stream
-    * start, then pass validate = false per micro-batch.
-    */
-  def validateUpsampleRecipe(recipe: DataFrame, strataCol: String,
-                             maxEpochs: Long = 100L): Unit =
-    recipe.select(col(strataCol), col("num").cast("long"), col("den").cast("long"))
-      .collect().foreach { r =>
-        val s = r.get(0)
-        // a missing cell — or a non-numeric string the long cast nulls
-        // out under non-ANSI semantics — must raise the SAME diagnosable
-        // message, not a bare NPE from getLong on a null
-        require(!r.isNullAt(1) && !r.isNullAt(2),
-          s"upsample recipe for '$s' has NULL num/den " +
-            "(missing or non-numeric factor cell)")
-        val (num, den) = (r.getLong(1), r.getLong(2))
-        require(num > 0 && den > 0,
-          s"upsample recipe for '$s' has non-positive factor $num/$den")
-        require(BigInt(num) <= BigInt(maxEpochs) * den,
-          s"upsample recipe for '$s' is $num/$den > maxEpochs=$maxEpochs")
-      }
-
-  def epochRepeatWith(df: DataFrame, recipe: DataFrame,
-                      strataCol: String, idCol: String,
-                      maxEpochs: Long = 100L,
-                      validate: Boolean = true): DataFrame = {
-    require(!df.columns.contains("copy"), "input already has a 'copy' column")
-    if (validate) validateUpsampleRecipe(recipe, strataCol, maxEpochs)
-    val dec = "decimal(38,0)"
-    val extra = when(
-      hashBucket(col(idCol)).cast(dec) * col("den").cast(dec) <
-        lit(Buckets).cast(dec) * (col("num") % col("den")).cast(dec),
-      1L).otherwise(0L)
-    df.join(recipe, Seq(strataCol))
-      // `div`, not `/`: IEEE division + cast loses exact floors past 2^53
-      .withColumn("__k", expr("num div den") + extra)
-      .filter(col("__k") > 0)
-      .withColumn("copy", explode(sequence(lit(1L), col("__k"))))
-      .drop("__k", "num", "den")
-  }
-
-  /** Persist an up-sampling recipe as the standing table
-    * `${prefix}_upsample` — the [[saveMixtureRecipe]] convention for
-    * the repetition direction (≤ #strata rows, no bucketing). Factors
-    * are elected ONCE from the training run's reference corpus
-    * ([[upsampleFactors]]) and validated against `maxEpochs` here, at
-    * save time, so replays can't smuggle an unbounded blow-up.
-    */
-  def saveUpsampleRecipe(df: DataFrame, strataCol: String,
-                         shares: Map[String, Long], prefix: String,
-                         maxEpochs: Long = 100L): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val factors = upsampleFactors(df, strataCol, shares)
-    factors.foreach { case (s, (num, den)) =>
-      require(BigInt(num) <= BigInt(maxEpochs) * den,
-        s"upsample factor for '$s' is ${num}/${den} > maxEpochs=$maxEpochs")
-    }
-    factors.toSeq.map { case (s, (num, den)) => (s, num, den) }
-      .toDF(strataCol, "num", "den")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_upsample")
-  }
-
-  /** Load a [[saveUpsampleRecipe]] recipe. */
-  def upsampleRecipe(spark: org.apache.spark.sql.SparkSession,
-                     prefix: String): DataFrame =
-    spark.table(s"${prefix}_upsample")
 
   /** One multiplicative-weights round over the strata shares — the
     * integer-exact update rule under DoReMi-style iterative mixture
@@ -854,19 +689,4 @@ object Sampling {
       k -> next.toLong
     }
   }
-
-  /** Persist a mixture recipe as the standing table `${prefix}_mixture`
-    * (the [[graft.ops.Curation.saveDsirModel]] convention — tiny, so no
-    * bucketing). Recompute per training run, not per batch.
-    */
-  def saveMixtureRecipe(df: DataFrame, strataCol: String,
-                        shares: Map[String, Long], prefix: String,
-                        weightCol: Option[String] = None): Unit =
-    mixtureThresholds(df, strataCol, shares, weightCol)
-      .write.mode("overwrite").saveAsTable(s"${prefix}_mixture")
-
-  /** Load a [[saveMixtureRecipe]] recipe. */
-  def mixtureRecipe(spark: org.apache.spark.sql.SparkSession,
-                    prefix: String): DataFrame =
-    spark.table(s"${prefix}_mixture")
 }

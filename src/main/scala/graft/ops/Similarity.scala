@@ -31,14 +31,6 @@ object Similarity {
     */
   def toDoubleVec(c: Column): Column = c.cast("array<double>")
 
-  /** Sequential left-fold dot product — matches an oracle computing
-    * `fold(+, map(*, zip(a,b)))` element-by-element. Codegen kernel
-    * (graft.functions.VecDot), bit-identical to the HOF fold it
-    * replaces but without the interpreted per-element closures.
-    */
-  def dot(a: Column, b: Column): Column =
-    fromExpr(graft.functions.VecDot(toExpr(a), toExpr(b)))
-
   def cosine(a: Column, b: Column): Column =
     fromExpr(graft.functions.VecCosine(toExpr(a), toExpr(b)))
 
@@ -231,26 +223,6 @@ object Similarity {
     require(k > 0, "k must be positive")
     majorityVote(scoreTopK(labelledProbe(queries, corpus, "true_label", nlist, nprobe,
       iters, notSelf), fp64, k))
-  }
-
-  /** Vote a prediction from ANY (query_id, neighbor_id) top-k stream —
-    * the composition point that turns every retrieval tier into a
-    * classifier: feed it [[bruteForceTopK]] (== [[knnClassify]],
-    * spec-pinned), [[ivfTopKIndexed]]/[[ivfTopKIndexedQ8]] over a
-    * PERSISTED index (classification without re-embedding or
-    * re-training — the production serving shape), or [[srpLshTopK]].
-    * Labels attach by equi-join on the ids both sides are already
-    * keyed by; the vote itself is the [[knnClassify]] contract
-    * (votes DESC, label ASC).
-    */
-  def knnClassifyFrom(neighbors: DataFrame, queryLabels: DataFrame,
-                      corpusLabels: DataFrame): DataFrame = {
-    val nn = neighbors
-      .join(corpusLabels.select(col("id").as("neighbor_id"),
-        col("label").as("cl")), Seq("neighbor_id"))
-      .join(queryLabels.select(col("id").as("query_id"),
-        col("label").as("true_label")), Seq("query_id"))
-    majorityVote(nn)
   }
 
   /** Collapse ranked (query_id, true_label, cl) neighbor rows into one
@@ -726,9 +698,8 @@ object Similarity {
     * rides into executors inside the NearestCentroid / ProbeCentroids
     * codegen expressions) plus the cell-assigned corpus. Like
     * [[graft.ops.Dedup.MinhashIndex]], this is the index-once shape:
-    * persist with [[saveIvfIndex]] (corpus bucketed by `cell`), reload
-    * with [[loadIvfIndex]], and every later query batch probes without
-    * re-training or re-assigning the corpus.
+    * every later query batch probes without re-training or re-assigning
+    * the corpus.
     */
   final case class IvfIndex(
       centroids: Array[Seq[Double]],
@@ -764,75 +735,7 @@ object Similarity {
       nearestCell(col("vec"), cents).as("cell"),
       quantizeCol(col("vec")).as("qcv"))
 
-  /** Write the centroid matrix as the one-row-per-cell `<prefix>_centroids`. */
-  private def saveCentroids(cents: Array[Seq[Double]], spark: org.apache.spark.sql.SparkSession,
-                            prefix: String): Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_centroids")
-  }
-
-  /** Read back a matrix written by [[saveCentroids]], in cell order. */
-  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                            prefix: String): Array[Seq[Double]] = {
-    import spark.implicits._
-    spark.table(s"${prefix}_centroids")
-      .orderBy("cell").as[(Int, Seq[Double])].collect().map(_._2)
-  }
-
-  /** Persist an [[IvfIndex]] as catalog tables: `<prefix>_corpus`
-    * BUCKETED BY `cell` (the probe join's key — bucket pruning keeps
-    * the corpus scan in place, only the query side shuffles; at 100 TB
-    * `buckets` scales with the corpus) and a tiny `<prefix>_centroids`
-    * (one row per cell) that reloads into the driver-held matrix.
-    */
-  def saveIvfIndex(index: IvfIndex, prefix: String, buckets: Int = 16): Unit = {
-    index.corpus.write.mode("overwrite")
-      .bucketBy(buckets, "cell").saveAsTable(s"${prefix}_corpus")
-    saveCentroids(index.centroids, index.corpus.sparkSession, prefix)
-  }
-
-  /** Load an [[IvfIndex]] persisted by [[saveIvfIndex]]. */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                   prefix: String): IvfIndex = {
-    val cents = loadCentroids(spark, prefix)
-    val corpus = spark.table(s"${prefix}_corpus")
-    // indexes persisted before the q8 tier lack qcv — derive it in the
-    // scan projection (keeps the bucketed layout; no extra pass)
-    val withQ = if (corpus.columns.contains("qcv")) corpus
-                else corpus.withColumn("qcv", quantizeCol(col("cv")))
-    IvfIndex(cents, withQ, cents.length)
-  }
-
-  /** Append a new vector batch to a PERSISTED IVF index without
-    * retraining: each new vector is assigned to its nearest EXISTING
-    * centroid (and pre-quantized) and appended into the cell-bucketed
-    * corpus table — standard IVF maintenance, the vector-side companion
-    * of [[graft.ops.Dedup.saveBlockIndex]]'s append mode. Only the
-    * batch shuffles (into the bucket layout); the standing corpus rows
-    * are untouched, and later probes see old + new rows through the
-    * same bucket-pruned scan. Probing the appended index equals probing
-    * an index whose corpus was assigned wholesale under the SAME
-    * centroids (spec-pinned) — recall drifts only as the data
-    * distribution drifts from the training sample; rebuild with
-    * [[buildIvfIndex]]/[[saveIvfIndex]] when cell occupancy skews.
-    */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                       batch: DataFrame, prefix: String,
-                       buckets: Int = 16): IvfIndex = {
-    val idx = loadIvfIndex(spark, prefix)
-    val assigned = assignCells(batch, idx.centroids)
-    // an index persisted before the q8 tier has no qcv column — match
-    // the standing schema rather than failing the append
-    val out = if (spark.table(s"${prefix}_corpus").columns.contains("qcv"))
-      assigned else assigned.drop("qcv")
-    out.write.mode("append").bucketBy(buckets, "cell")
-      .saveAsTable(s"${prefix}_corpus")
-    loadIvfIndex(spark, prefix)
-  }
-
-  /** Probe a prebuilt/loaded index: queries explode over their `nprobe`
+  /** Probe a prebuilt index: queries explode over their `nprobe`
     * nearest cells and equi-join the cell-keyed corpus. No broadcast
     * hint — a small query batch broadcasts via AQE anyway, and a LARGE
     * batch must not be forced onto the driver; against a bucketed
@@ -865,8 +768,7 @@ object Similarity {
     Seq(col("id").as("query_id"), quantizeCol(col("vec")).as("qqv"))
 
   /** Train-and-probe convenience for the q8 IVF tier (the index-once
-    * deployment path is [[buildIvfIndex]]/[[saveIvfIndex]] +
-    * [[ivfTopKIndexedQ8]]).
+    * deployment path is [[buildIvfIndex]] + [[ivfTopKIndexedQ8]]).
     */
   def ivfTopKQ8(queries: DataFrame, corpus: DataFrame, k: Int,
                 nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
@@ -927,12 +829,9 @@ object Similarity {
     * table (what stage-1 probes scan — `nassign` narrow rows per
     * vector, no full-precision columns) and the full-precision vector
     * table (what stage-2 point-lookups — ONE row per vector), split
-    * because they have different join keys and therefore different
-    * bucketing: [[saveIvfRerankIndex]] buckets `cells` by `cell` (the
-    * probe equi-join) and `vectors` by `neighbor_id` (the re-rank
-    * lookup), so a standing index serves both joins with only the
-    * (small) candidate side shuffling. The [[IvfIndex]] analogue for
-    * [[ivfTopKIndexedRerank]].
+    * because they have different join keys: `cell` (the probe
+    * equi-join) and `neighbor_id` (the re-rank lookup). The [[IvfIndex]]
+    * analogue for [[ivfTopKIndexedRerank]].
     */
   final case class IvfRerankIndex(
       centroids: Array[Seq[Double]],
@@ -958,88 +857,10 @@ object Similarity {
       cents.length, nassign)
   }
 
-  /** Persist an [[IvfRerankIndex]] as catalog tables:
-    * `<prefix>_cells` bucketed by `cell`, `<prefix>_vectors` bucketed
-    * by `neighbor_id`, `<prefix>_centroids` (one row per cell) plus a
-    * 1-row `<prefix>_meta` carrying `nassign` so a loaded index always
-    * reports the geometry it was built with.
-    */
-  def saveIvfRerankIndex(index: IvfRerankIndex, prefix: String,
-                         buckets: Int = 16): Unit = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    index.cells.write.mode("overwrite")
-      .bucketBy(buckets, "cell").saveAsTable(s"${prefix}_cells")
-    index.vectors.write.mode("overwrite")
-      .bucketBy(buckets, "neighbor_id").saveAsTable(s"${prefix}_vectors")
-    saveCentroids(index.centroids, spark, prefix)
-    Seq(index.nassign).toDF("nassign")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_meta")
-  }
-
-  /** PRODUCTIZED versioned publish of an [[IvfRerankIndex]] (round 12,
-    * VERDICT r11 item 5 — the versioned-prefix refresh contract with
-    * the pointer built in, so a deployment doesn't invent one): writes
-    * the index under `<basePrefix>_v<N>` (N = one past the manifest's
-    * max, 1 for a fresh base) and THEN appends one `(version, prefix)`
-    * row to `<basePrefix>_manifest`. The pointer append is LAST and
-    * atomic at the row level, so a crash anywhere during the four
-    * index-table writes leaves the manifest untouched — still
-    * resolving the previous complete version — and a half-written
-    * `_v<N>` is simply superseded by the next publish. Returns the
-    * versioned prefix it wrote.
-    *
-    * Refresh is then: retrain → `saveIvfRerankIndexVersioned` → new
-    * streams [[loadLatestIvfRerankIndex]] the new version; running
-    * streams keep their loaded version untouched (the spec-pinned
-    * versioned-prefix semantics — see `StreamingSimilarity`'s INDEX
-    * REFRESH note).
-    */
-  def saveIvfRerankIndexVersioned(index: IvfRerankIndex, basePrefix: String,
-                                  buckets: Int = 16): String = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    val manifest = s"${basePrefix}_manifest"
-    val next: Long =
-      if (spark.catalog.tableExists(manifest)) {
-        val m = spark.table(manifest).agg(max(col("version"))).head()
-        if (m.isNullAt(0)) 1L else m.getLong(0) + 1L
-      } else 1L
-    val prefix = s"${basePrefix}_v$next"
-    saveIvfRerankIndex(index, prefix, buckets)
-    Seq((next, prefix)).toDF("version", "prefix")
-      .write.mode("append").saveAsTable(manifest)
-    prefix
-  }
-
-  /** Resolve `<basePrefix>_manifest`'s highest version and load it —
-    * the read side of [[saveIvfRerankIndexVersioned]].
-    */
-  def loadLatestIvfRerankIndex(spark: org.apache.spark.sql.SparkSession,
-                               basePrefix: String): IvfRerankIndex = {
-    val latest = spark.table(s"${basePrefix}_manifest")
-      .orderBy(col("version").desc).head()
-    loadIvfRerankIndex(spark, latest.getString(1))
-  }
-
-  /** Load an [[IvfRerankIndex]] persisted by [[saveIvfRerankIndex]]. */
-  def loadIvfRerankIndex(spark: org.apache.spark.sql.SparkSession,
-                         prefix: String): IvfRerankIndex = {
-    val cents = loadCentroids(spark, prefix)
-    IvfRerankIndex(cents,
-      spark.table(s"${prefix}_cells"),
-      spark.table(s"${prefix}_vectors"),
-      cents.length,
-      spark.table(s"${prefix}_meta").head().getInt(0))
-  }
-
-  /** Probe a prebuilt/loaded [[IvfRerankIndex]]: stage-1 int8 scan of
+  /** Probe a prebuilt [[IvfRerankIndex]]: stage-1 int8 scan of
     * the probed cells with the narrow pair dedup, stage-2 exact re-rank
-    * of the `k·overFetch` survivors against the vectors table. Against
-    * a saved index both heavy sides stay in place (cells bucketed by
-    * the probe key, vectors by the lookup key) — only query rows and
-    * the survivor frame shuffle. Same no-broadcast-hint contract as
-    * [[ivfTopKIndexed]].
+    * of the `k·overFetch` survivors against the vectors table. Same
+    * no-broadcast-hint contract as [[ivfTopKIndexed]].
     */
   def ivfTopKIndexedRerank(queries: DataFrame, index: IvfRerankIndex,
                            k: Int, nprobe: Int = 4,
@@ -1111,6 +932,13 @@ object Similarity {
       .dropDuplicates("id_a", "id_b")
   }
 
+  /** A [[marginPairsRun]] result with ownership of its
+    * scored-cross-product cache: callers materialize `pairs` (one
+    * best-partner row per query — far smaller than the cache backing
+    * it), then `release()`.
+    */
+  final case class MarginRun(pairs: DataFrame, release: () => Unit)
+
   /** Margin-based cross-set pair mining (Artetxe & Schwenk 2019, the
     * LASER bitext-mining score): a candidate pair (x ∈ A, y ∈ B) is
     * scored by its cosine RELATIVE to each side's local neighborhood
@@ -1126,34 +954,12 @@ object Similarity {
     * [[bruteForceTopK]] contract (ties break to the lower neighbor id).
     *
     * This is the exact all-pairs baseline (the oracle role); at scale,
-    * over-fetch candidates from [[ivfTopKIndexed]] per direction and
-    * feed the same margin arithmetic — the scored pair stream and the
-    * two mean tables compose from any top-k source. Requires
-    * `|A| >= k` and `|B| >= k` (the mining score is undefined on
-    * thinner sides). The scored cross product feeds three consumers, so
-    * it persists eagerly — at the oracle scale that is the point; the
-    * IVF composition replaces it outright.
+    * [[marginPairsIvf]] feeds the same margin arithmetic from IVF
+    * probes. Requires `|A| >= k` and `|B| >= k` (the mining score is
+    * undefined on thinner sides). The scored cross product feeds three
+    * consumers, so with `persistScored` it persists eagerly and
+    * `release()` drops it.
     */
-  def marginPairs(a: DataFrame, b: DataFrame, k: Int = 4,
-                  minMargin: Double = 1.0,
-                  /** the handle-less wrapper defaults to NO cache — a
-                    * cross-product-sized persist with no release is the
-                    * leak class the QueryDefs shed this round, and the
-                    * scored frame's consumers dedupe their shared
-                    * exchanges under AQE stage reuse within one action.
-                    * Callers spanning multiple actions opt in via
-                    * [[marginPairsRun]], which owns the unpersist.
-                    */
-                  persistScored: Boolean = false): DataFrame =
-    marginPairsRun(a, b, k, minMargin, persistScored).pairs
-
-  /** [[marginPairs]] with ownership of its scored-cross-product cache:
-    * embedding callers materialize `pairs` (one best-partner row per
-    * query — far smaller than the cache backing it), then `release()`.
-    */
-  final case class MarginRun(pairs: DataFrame, release: () => Unit)
-
-  /** See [[marginPairs]]. */
   def marginPairsRun(a: DataFrame, b: DataFrame, k: Int = 4,
                      minMargin: Double = 1.0,
                      persistScored: Boolean = true): MarginRun = {
@@ -1172,16 +978,16 @@ object Similarity {
     MarginRun(pairs, () => { if (persistScored) scored.unpersist(); () })
   }
 
-  /** The IVF scale tier of [[marginPairs]]: identical rank-ordered
+  /** The IVF scale tier of [[marginPairsRun]]: identical rank-ordered
     * margin arithmetic, but the candidate pair stream and both k-NN
     * neighborhood means come from [[ivfTopKIndexed]] probes instead of
     * the |A|x|B| cross product — each direction over-fetches
     * `k + overfetch` neighbors (the margin re-orders candidates by
     * neighborhood density, so the best-margin partner is not always the
     * best-cosine one; the over-fetch buys back that reordering). Output
-    * schema matches [[marginPairs]]; the result is approximate exactly
-    * where the IVF probe is (cell-local candidates, recall bounded by
-    * the `margin_pairs_ivf` oracle row).
+    * schema matches [[marginPairsRun]]'s pairs; the result is
+    * approximate exactly where the IVF probe is (cell-local candidates,
+    * recall bounded by the `margin_pairs_ivf` oracle row).
     *
     * Scale shape: two cell-keyed equi-joins (no cross join, no
     * broadcast hint — [[ivfTopKIndexed]]'s contract), per-query windows
@@ -1236,7 +1042,7 @@ object Similarity {
     * (`keyName`, rank, cosine), folded in RANK order — one
     * `sum(when(rank = r))` term per r in fixed textual order, never
     * `avg`, so the double is engine- and partition-order-identical
-    * (the [[marginPairs]] determinism contract). A key with fewer than
+    * (the [[marginPairsRun]] determinism contract). A key with fewer than
     * `k` ranked rows folds a null term and yields a NULL mean.
     */
   private def rankedMean(cand: DataFrame, k: Int, keyName: String,
@@ -1248,7 +1054,7 @@ object Similarity {
       .agg((foldSum / lit(k.toDouble)).as(meanName))
   }
 
-  /** The shared mining tail of [[marginPairs]]/[[marginPairsIvf]]:
+  /** The shared mining tail of [[marginPairsRun]]/[[marginPairsIvf]]:
     * attach both neighborhood means to the candidate (qid, nid, cosine)
     * stream, score the ratio margin, and keep each query's best partner
     * above `minMargin`. NULL margins (a side without a full-k

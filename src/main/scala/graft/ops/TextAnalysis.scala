@@ -24,12 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Whitespace tokenizer as an ARRAY column — kept for composability
-    * (tests, ad-hoc use); the operators below deliberately avoid
-    * materializing it.
-    */
-  def tokens(text: Column): Column = split(text, " ")
-
   /** length(text) with all spaces removed = exact sum of token lengths. */
   private def lenNoSpaces(text: Column): Column =
     length(regexp_replace(text, " ", ""))

@@ -198,7 +198,7 @@ object PipelineExtQueries {
   /** Shared CTEs of the DSIR oracles: hashed-bigram buckets (md5-prefix
     * modular, engine-portable), target (en) and raw count tables, and
     * the per-doc pooled sums — mirrors
-    * [[graft.ops.Curation.importanceWeights]] step for step.
+    * [[graft.ops.Curation.importanceWeightsSelf]] step for step.
     */
   private lazy val dsirCtesSql: String = """
       WITH bg AS (
@@ -1771,19 +1771,23 @@ object PipelineExtQueries {
     // against the standing corpus index (even doc_ids) — only the
     // batch is fingerprinted/shuffled (Dedup.spanPairsIncremental;
     // the bucketed-table path is spec-pinned) --
-    QueryDef("span_incremental", (s, dir) => {
+    QueryDef("span_incremental", (s, dir) => graft.ops.Caches.owning { c =>
       val docs = Tables.load(s, dir, "documents")
-      // production holds the index as a materialized bucketed table
-      // (saveSpanIndex); the inline frame feeds 4 consumers (df counts,
-      // kept, over slice, supplement) — persist stands in for the table
-      val idx = graft.ops.Dedup.spanFingerprints(
-          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", k = 40, sel = "0")
-        .select(col("id"), xxhash64(col("h")).as("s"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.Dedup.spanPairsIncremental(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", idx,
-          k = 40, sel = "0", minShared = 2)
-        .orderBy("id_new", "id_corpus")
+      // production holds the index as a materialized bucketed table;
+      // the inline frame feeds 4 consumers (df counts, kept, over
+      // slice, supplement) — the cache stands in for the table. The
+      // batch fingerprints feed 2 (kept, over slice). The two caches
+      // fill as concurrent chains, so neither scan leaves cores idle.
+      val Seq(idx, batch) = Chains.all(s)(Seq(
+        () => c.keep(graft.ops.Dedup.spanFingerprints(
+            docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", k = 40, sel = "0")
+          .select(col("id"), xxhash64(col("h")).as("s"))),
+        () => c.keep(graft.ops.Dedup.spanBatchFingerprints(
+          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", k = 40, sel = "0"))))
+      Tables.materializeAndRelease(
+        graft.ops.Dedup.spanPairsIncremental(batch, idx, minShared = 2)
+          .orderBy("id_new", "id_corpus"),
+        c.release)
     }, Some("""
       WITH g AS (SELECT DISTINCT doc_id, md5(substr(text, CAST(i AS INT), 40)) AS h
                  FROM documents, UNNEST(range(1, len(text)-40+2)) AS t(i)),
@@ -2071,7 +2075,7 @@ object PipelineExtQueries {
 
     // -- DSIR-style importance weights: pooled hashed-bigram counts of
     // each doc against the target (en) vs raw distributions — exact
-    // long sums, one final divide (Curation.importanceWeights; md5-
+    // long sums, one final divide (Curation.importanceWeightsSelf; md5-
     // prefix bucket hash is engine-portable) --
     QueryDef("dsir_weights", (s, dir) => {
       val docs = Tables.load(s, dir, "documents")

@@ -491,7 +491,7 @@ object TextQueries {
     // LASER bitext shape): best cross-set partner per query, scored
     // relative to both sides' k-NN neighborhood density; k-NN means
     // fold in RANK order so the doubles are engine-identical
-    // (Similarity.marginPairs) --
+    // (Similarity.marginPairsRun) --
     QueryDef("margin_pairs", (s, dir) => {
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id").as("id"),
@@ -630,7 +630,7 @@ object TextQueries {
     // is centroid-seed dependent (no SQL oracle), so — like the
     // sim_topk_* rows — emit the exactly-checkable query count plus a
     // thresholded recall flag (measured 0.72-0.83 across SFs vs the
-    // exact marginPairs best partners; 0.5 leaves safe margin) --
+    // exact marginPairsRun best partners; 0.5 leaves safe margin) --
     QueryDef("margin_pairs_ivf", (s, dir) => {
       import s.implicits._
       val e = Tables.load(s, dir, "embeddings")

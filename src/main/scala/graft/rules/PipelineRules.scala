@@ -73,13 +73,13 @@ object PipelineRules {
       s"approx_count_distinct($column) >= $minDistinct", action,
       description = s"$column must carry >= $minDistinct distinct values")
 
-  /** Corpus-level OOV gate against a persisted bigram LM
-    * ([[graft.ops.Curation.saveLmModel]] tables, referenced from SQL by
-    * catalog name): the fraction of the corpus's token transitions the
-    * model never saw must stay ≤ `maxOovRate`. Pure Spark SQL (split /
-    * transform / sequence — no kernel needed); the model-side subquery
-    * collapses append-mode partial counts exactly like
-    * [[graft.ops.Curation.scoreWithLmModel]].
+  /** Corpus-level OOV gate against a persisted bigram LM: a catalog
+    * table `<modelPrefix>_bigrams(bigram, c2)` of bigram counts,
+    * referenced from SQL by name. The fraction of the corpus's token
+    * transitions the model never saw must stay ≤ `maxOovRate`. Pure
+    * Spark SQL (split / transform / sequence — no kernel needed); the
+    * model-side subquery sums the counts per bigram, so a table that
+    * several appended batches wrote reads as one model.
     */
   def lmOovRule(productId: String, table: String, textCol: String,
                 modelPrefix: String, maxOovRate: Double,

@@ -1,32 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Session assembly over an event stream — gap-based session windows.
-  *
-  * Two equivalent implementations:
-  *   - batch: lag/running-sum window (one shuffle by user, one sort) —
-  *     also the oracle-checkable form;
-  *   - streaming: `flatMapGroupsWithState` with event-time timeout —
-  *     the custom-state Structured Streaming surface.
+/** Session assembly over an event table — gap-based session windows:
+  * a lag/running-sum window (one shuffle by user, one sort), the
+  * oracle-checkable form.
   *
   * Output: one row per (user, session): start, end, n_events,
   * total_value (exact decimal sum surfaced as double).
   */
 object Sessionize {
-
-  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionState(
-      start: Long, last: Long, n: Long, total: BigDecimal)
-  final case class Session(
-      user_id: Long,
-      session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp,
-      n_events: Long,
-      total_value: Double)
 
   /** Batch sessionization: new session when the gap to the previous
     * event of the same user exceeds `gapMinutes`.
@@ -51,72 +36,4 @@ object Sessionize {
         sum(col("value").cast("decimal(38,2)")).cast("double").as("total_value"))
       .drop("session_idx")
   }
-
-  /** Streaming sessionization via flatMapGroupsWithState: state carries
-    * the open session per user; an event past the gap closes it and
-    * emits; event-time timeout flushes idle sessions past the watermark.
-    */
-  def streaming(events: Dataset[SessionEvent], gapMinutes: Int = 30)
-      : Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapMinutes * 60L * 1000L
-
-    def flush(userId: Long, st: SessionState): Session =
-      Session(userId, new java.sql.Timestamp(st.start), new java.sql.Timestamp(st.last),
-        st.n, st.total.setScale(2).toDouble)
-
-    events
-      .withWatermark("ts", s"$gapMinutes minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(flush(userId, _)).toSeq
-            state.remove()
-            out.iterator
-          } else {
-            var closed = Seq.empty[Session]
-            var cur = state.getOption
-            it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(st) if t - st.last <= gapMs =>
-                  cur = Some(SessionState(st.start, math.max(st.last, t),
-                    st.n + 1, st.total + BigDecimal(e.value)))
-                case Some(st) =>
-                  closed :+= flush(userId, st)
-                  cur = Some(SessionState(t, t, 1, BigDecimal(e.value)))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, BigDecimal(e.value)))
-              }
-            }
-            cur.foreach { st =>
-              state.update(st)
-              // flatMapGroupsWithState does NOT auto-drop late rows, and
-              // setTimeoutTimestamp throws if the value is not strictly
-              // later than the watermark — one late event (ts + gap <=
-              // watermark) would kill the whole query. Clamp to wm+1 so
-              // the stale session times out on the next trigger instead.
-              val wm = state.getCurrentWatermarkMs()
-              state.setTimeoutTimestamp(math.max(st.last + gapMs, wm + 1))
-            }
-            closed.iterator
-          }
-      }
-  }
-
-  /** Streaming windowed aggregation with watermark — the streaming twin
-    * of the batch hourly rollup (readStream → withWatermark → window →
-    * agg), reference-free but part of the Structured Streaming surface.
-    */
-  def hourlyRollup(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(38,2)")).cast("double").as("total_value"))
-      .select(col("w.start").as("hour_start"), col("event_type"),
-        col("n"), col("total_value"))
 }

@@ -61,27 +61,6 @@ class BlockDedupSpec extends SparkSpec {
     repart shouldBe base
   }
 
-  test("blockDedupIncremental folded in order equals one-shot blockDedup") {
-    val all = graft.queries.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .select(col("doc_id"), col("text"))
-    val corpus = all.filter(col("doc_id") < 250)
-    val batch = all.filter(col("doc_id") >= 250)
-    // standing index = every block hash the corpus has (kept or not —
-    // seen-ness is what matters for first-wins)
-    val seen = Packing.chunkTokens(corpus, "doc_id", "text", 32, 0)
-      .select(xxhash64(col("chunk_text")).as("bh")).distinct()
-    val inc = Dedup.blockDedupIncremental(batch, "doc_id", "text", seen, 32)
-    val got = inc.deduped.orderBy("doc_id").collect().toSeq
-    val want = Dedup.blockDedup(all, "doc_id", "text", 32)
-      .filter(col("doc_id") >= 250).orderBy("doc_id").collect().toSeq
-    got shouldBe want
-    // the delta holds exactly the batch's unseen distinct hashes
-    val batchHashes = Packing.chunkTokens(batch, "doc_id", "text", 32, 0)
-      .select(xxhash64(col("chunk_text")).as("bh")).distinct()
-    inc.newBlocks.count() shouldBe
-      batchHashes.join(seen, Seq("bh"), "left_anti").count()
-  }
-
   test("fuzz: reassembly always equals the original text minus dropped blocks, in order") {
     val rnd = new scala.util.Random(42)
     val vocab = Vector("aa", "bb", "cc", "dd", "ee")

@@ -58,7 +58,7 @@ class BloomSpec extends SparkSpec {
     val docs = graft.queries.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val train = docs.filter(col("doc_id") % 10 =!= 0)
     val bench = docs.filter(col("doc_id") % 10 === 0)
-    val exact = Decontaminate.decontaminate(train, bench, "doc_id", "text")
+    val exact = Oracles.decontaminate(train, bench, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).sorted
     val bloom = Decontaminate.decontaminateBloom(train, bench, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).sorted

@@ -80,16 +80,6 @@ class ClusteringSpec extends SparkSpec {
     model.k shouldBe model.centroids.length
   }
 
-  test("clusterStats reports cardinality and mean cosine per shard") {
-    val cents = Array(Seq(1.0, 0.0), Seq(0.0, 1.0))
-    val st = Clustering.clusterStats(vecs, cents)
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    st(0)._1 shouldBe 3L
-    st(1)._1 shouldBe 3L
-    st(0)._2 should be > 0.98
-    st(1)._2 should be > 0.98
-  }
-
   test("kmeans is deterministic across runs (fixed seed)") {
     val a = Clustering.kmeans(vecs, 2, iters = 2).centroids
     val b = Clustering.kmeans(vecs, 2, iters = 2).centroids
@@ -113,55 +103,6 @@ class ClusteringSpec extends SparkSpec {
     val all = Clustering.semanticDedup(vecs, k = 2, tau = 1.01, cents = cents)
       .collect().map(_.getBoolean(2))
     all.forall(identity) shouldBe true
-  }
-
-  test("semanticDedupIncremental equals batch semanticDedup over index ∪ batch") {
-    val cents = Array(Seq(1.0, 0.0), Seq(0.0, 1.0))
-    // standing corpus = the six base vectors; batch ids are all higher,
-    // with one near-dup of the corpus (+x), one internal batch dup pair
-    // (+y), and one genuinely new direction
-    val batch = Seq(
-      (10L, Seq(0.95, 0.05)),  // near corpus +x cluster members
-      (11L, Seq(0.04, 1.0)),   // near corpus +y members AND id 12
-      (12L, Seq(0.05, 1.0)),
-      (13L, Seq(0.7, 0.7))     // boundary vector, far from everything? no:
-    ).toDF("id", "vec")         // assigns to a cell; cosine decides
-
-    Clustering.saveSemanticIndex(vecs, cents, "sem_idx_spec", buckets = 2)
-    val inc = Clustering.semanticDedupIncremental(
-        batch, cents, spark.table("sem_idx_spec"), tau = 0.995)
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).toMap
-
-    val union = vecs.unionByName(batch)
-    val full = Clustering.semanticDedup(union, k = 2, tau = 0.995,
-        cents = Some(cents))
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).toMap
-    inc shouldBe full.filter(_._1 >= 10L)
-
-    // appending the batch survivors makes them visible to a later batch
-    val kept = batch.join(
-      Clustering.semanticDedupIncremental(batch, cents,
-        spark.table("sem_idx_spec"), tau = 0.995)
-        .filter(col("kept")).select("id"), Seq("id"))
-    Clustering.saveSemanticIndex(kept, cents, "sem_idx_spec",
-      buckets = 2, append = true)
-    val batch2 = Seq((20L, Seq(0.7, 0.7))).toDF("id", "vec") // dup of 13
-    val inc2 = Clustering.semanticDedupIncremental(
-        batch2, cents, spark.table("sem_idx_spec"), tau = 0.995)
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).toMap
-    // 13 must have survived batch 1 (nothing near (0.7, 0.7) yet), so
-    // its appended copy now drops the identical-direction 20
-    inc(13L) shouldBe true
-    inc2(20L) shouldBe false
-
-    // crash-replay idempotence: a failure AFTER the index append but
-    // BEFORE the sink commit replays the same batch against an index
-    // that already holds its own survivors — the id guard must keep
-    // every previously-kept row kept (no self-match at cosine 1)
-    val replay = Clustering.semanticDedupIncremental(
-        batch, cents, spark.table("sem_idx_spec"), tau = 0.995)
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).toMap
-    replay.filter(_._2).keySet shouldBe inc.filter(_._2).keySet
   }
 
   test("semanticDedup clusterCap skips pairing in over-cap clusters (all kept)") {

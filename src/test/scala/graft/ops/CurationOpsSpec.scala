@@ -159,17 +159,6 @@ class CurationOpsSpec extends SparkSpec {
     plan should include("NestedLoopJoin")
   }
 
-  test("updateVocabulary(vocab(A), B) equals vocabulary(A union B)") {
-    val docs = graft.queries.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val a = docs.filter(col("doc_id") % 3 =!= 0)
-    val b = docs.filter(col("doc_id") % 3 === 0)
-    val incremental = Curation.updateVocabulary(Curation.vocabulary(a), b)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val full = Curation.vocabulary(docs)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    incremental shouldBe full
-  }
-
   test("groupQuantiles returns the exact order statistic per group") {
     val rows = (1 to 100).map(i => (s"g${i % 2}", i.toDouble / 100.0))
     val scored = rows.toDF("grp", "score")
@@ -316,27 +305,6 @@ class CurationOpsSpec extends SparkSpec {
     out(4L).isNullAt(6) shouldBe true
   }
 
-  test("trainQualityModel separates stopword-rich English from gibberish") {
-    // two clearly separable populations on the stopword-ratio feature
-    val en = (0L until 40L).map(i =>
-      (i, s"the quick fox and the dog are in the yard with a ball $i", 1))
-    val junk = (100L until 140L).map(i =>
-      (i, s"zzz qqq xxx kkk vvv www jjj ppp mmm nnn $i", 0))
-    val docs = (en ++ junk).toDF("doc_id", "text", "label")
-    val w = Curation.trainQualityModel(docs, "text", "label",
-      iters = 80, lr = 4.0)
-    val acc = Curation.modelAccuracy(docs, "text", "label", w)
-    acc should be >= 0.95
-    // the trained weights serve through the codegen gate: accepted set
-    // is (approximately) the English side
-    val kept = Curation.classifierGate(docs, "doc_id", "text", w)
-      .collect().map(_.getLong(0)).toSet
-    (kept.count(_ < 100L).toDouble / 40.0) should be >= 0.9
-    (kept.count(_ >= 100L).toDouble / 40.0) should be <= 0.1
-    // stopword ratio should carry positive learned weight
-    w.wStop should be > 0.0
-  }
-
   test("binaryMetrics: confusion counts and tie-aware AUC on a hand case") {
     import spark.implicits._
     // scores: pos at 3,3,5 / neg at 1,3,4 -> with ties at 3:
@@ -381,6 +349,12 @@ class CurationOpsSpec extends SparkSpec {
     val w = Curation.trainQualityModelIRLS(docs, "text", "label", iters = 6)
     Curation.modelAccuracy(docs, "text", "label", w) should be >= 0.95
     w.wStop should be > 0.0
+    // the trained weights serve through the codegen gate: accepted set
+    // is (approximately) the English side
+    val kept = Curation.classifierGate(docs, "doc_id", "text", w)
+      .collect().map(_.getLong(0)).toSet
+    (kept.count(_ < 100L).toDouble / 40.0) should be >= 0.9
+    (kept.count(_ >= 100L).toDouble / 40.0) should be <= 0.1
   }
 
   test("IRLS survives degenerate inputs (single class, constant features)") {
@@ -397,39 +371,27 @@ class CurationOpsSpec extends SparkSpec {
     Curation.modelAccuracy(docs, "text", "label", w) shouldBe 1.0
   }
 
-  test("persisted LM model: save + append batches == training on the union") {
-    val refA = Seq((100L, "a b c"), (101L, "a b c")).toDF("doc_id", "text")
-    val refB = Seq((102L, "a c b"), (103L, "b c a")).toDF("doc_id", "text")
-    val cand = Seq((1L, "a b c a"), (2L, "c a b"), (3L, "x y")).toDF("doc_id", "text")
-    Curation.saveLmModel(refA, "lm_spec", buckets = 2)
-    Curation.appendLmModel(refB, "lm_spec", buckets = 2)
-    val viaModel = Curation.scoreWithLmModel(cand, "lm_spec")
-      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-    val direct = Curation.ngramLmScore(refA.unionByName(refB), cand)
-      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-    viaModel shouldBe direct
-    // and the model actually saw batch B: "c a" exists only there
-    viaModel(2L)(2) shouldBe 2L // n_hits: "c a" (from B) + "a b" (from A)
-  }
-
   test("importanceWeights: exact pooled counts against a hand-built bucket model") {
+    import org.apache.spark.sql.functions.col
     // buckets large enough that no two distinct bigrams collide here,
     // so counts are per-bigram-exact
-    val raw = Seq(
+    val docs = Seq(
       (1L, "a b a b"),   // bigrams: "a b","b a","a b"
       (2L, "x y"),       // bigram: "x y" — never in target
       (3L, "a b"),       // bigram: "a b"
-      (4L, "solo")       // no bigrams -> NULL weight
+      (4L, "solo"),      // no bigrams -> NULL weight
+      (10L, "a b a")     // the target slice: "a b","b a"
     ).toDF("doc_id", "text")
-    val target = Seq((10L, "a b a")).toDF("doc_id", "text") // "a b","b a"
-    val out = Curation.importanceWeights(raw, target, buckets = 1 << 20)
+    val out = Curation.importanceWeightsSelf(docs, col("doc_id") === 10L,
+        buckets = 1 << 20)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), Option(r.get(4))))).toMap
-    // raw counts: "a b"=3, "b a"=1, "x y"=1; target: "a b"=1, "b a"=1
-    out(1L) shouldBe ((3L, 1L + 1L + 1L, 3L + 1L + 3L, Some(3.0 / 7.0)))
+    // corpus counts: "a b"=4, "b a"=2, "x y"=1; target: "a b"=1, "b a"=1
+    out(1L) shouldBe ((3L, 1L + 1L + 1L, 4L + 2L + 4L, Some(3.0 / 10.0)))
     out(2L) shouldBe ((1L, 0L, 1L, Some(0.0)))
-    out(3L) shouldBe ((1L, 1L, 3L, Some(1.0 / 3.0)))
+    out(3L) shouldBe ((1L, 1L, 4L, Some(1.0 / 4.0)))
     out(4L) shouldBe ((0L, 0L, 0L, None))
+    out(10L) shouldBe ((2L, 2L, 6L, Some(2.0 / 6.0)))
     // target-like docs outrank the out-of-distribution one
     out(1L)._4.get.asInstanceOf[Double] should be >
       out(2L)._4.get.asInstanceOf[Double]
@@ -452,21 +414,6 @@ class CurationOpsSpec extends SparkSpec {
     (6L to 7L).foreach(i => out(i) shouldBe "head")
     (11L to 14L).foreach(i => out(i) shouldBe "tail")
     out.contains(21L) shouldBe false
-  }
-
-  test("importanceWeightsSelf (one-pass conditional counts) equals the two-corpus form") {
-    import org.apache.spark.sql.functions.col
-    val docs = Seq(
-      (1L, "a b a b", "en"), (2L, "x y", "de"), (3L, "a b", "en"),
-      (4L, "solo", "de"), (5L, "b a x y b a", "fr")
-    ).toDF("doc_id", "text", "lang")
-    val generic = Curation.importanceWeights(
-        docs, docs.filter(col("lang") === "en"), buckets = 4096)
-      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-    val self = Curation.importanceWeightsSelf(
-        docs, col("lang") === "en", buckets = 4096)
-      .collect().map(r => r.getLong(0) -> r.toSeq).toMap
-    self shouldBe generic
   }
 
   test("pipelineV4Stages: stage flow invariants hold on a mixed corpus") {
@@ -564,27 +511,6 @@ class CurationOpsSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 
-  test("importanceResample keeps target-like docs, drops no-signal docs, replays deterministically") {
-    import org.apache.spark.sql.functions.col
-    val raw = (1L to 60L).map { i =>
-      val text = if (i % 3 == 0) "the cat sat on the mat" else "zz qq ww rr"
-      (i, text)
-    }.toDF("doc_id", "text")
-    val target = Seq((100L, "the cat sat on the mat again")).toDF("doc_id", "text")
-    val a = Curation.importanceResample(raw, target)
-      .collect().map(_.getLong(0)).sorted
-    val b = Curation.importanceResample(raw, target)
-      .collect().map(_.getLong(0)).sorted
-    a shouldBe b // portable-hash membership replays exactly
-    // every target-like doc has weight == wmax -> threshold 1e6 -> all
-    // kept; the OOD docs have weight 0 -> threshold 0 -> none kept
-    a.toSet shouldBe (1L to 60L).filter(_ % 3 == 0).toSet
-    // docs without bigrams never surface
-    val withSolo = raw.unionByName(Seq((999L, "solo")).toDF("doc_id", "text"))
-    Curation.importanceResample(withSolo, target)
-      .filter(col("doc_id") === 999L).count() shouldBe 0L
-  }
-
   test("importanceResampleExact: a corpus with zero target affinity selects nothing") {
     import org.apache.spark.sql.functions.col
     // every doc is OOD vs the target condition -> all target_hits = 0
@@ -594,7 +520,7 @@ class CurationOpsSpec extends SparkSpec {
     val docs = (1L to 40L).map(i => (i, "zz qq ww rr tt yy")).toDF("doc_id", "text")
     val w = Curation.importanceWeightsSelf(docs, col("doc_id") < 0, buckets = 256)
     Curation.importanceResampleExact(w).count() shouldBe 0L
-    Curation.importanceResampleFrom(w).count() shouldBe 0L // double gate agrees
+    Oracles.importanceResampleFrom(w).count() shouldBe 0L // double gate agrees
   }
 
   test("importanceResampleExact equals the double gate on off-boundary weights") {
@@ -615,7 +541,7 @@ class CurationOpsSpec extends SparkSpec {
       col("doc_id") % 3 === 0, buckets = 1024)
     val exact = Curation.importanceResampleExact(w)
       .collect().map(_.getLong(0)).sorted
-    val dbl = Curation.importanceResampleFrom(w)
+    val dbl = Oracles.importanceResampleFrom(w)
       .collect().map(_.getLong(0)).sorted
     exact shouldBe dbl
     exact should not be empty
@@ -820,30 +746,6 @@ class CurationOpsSpec extends SparkSpec {
     } finally st.release()
   }
 
-  test("bpeTrainFromVocab: incremental fold == from-scratch train; save/load round-trips") {
-    val a = Seq((1L, (Seq.fill(5)("low") ++ Seq.fill(2)("lower")).mkString(" ")))
-      .toDF("doc_id", "text")
-    val b = Seq((2L, (Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")))
-      .toDF("doc_id", "text")
-    val scratch = Curation.bpeTrain(a.union(b), numMerges = 4)
-      .orderBy("rank").collect().map(_.toSeq)
-    // standing vocabulary folded batch by batch, merges re-derived from it
-    val folded = Curation.bpeTrainFromVocab(
-        Curation.updateVocabulary(Curation.vocabulary(a), b), numMerges = 4)
-      .orderBy("rank").collect().map(_.toSeq)
-    folded shouldBe scratch
-    // persisted-model round trip
-    val merges = Curation.bpeTrain(a.union(b), numMerges = 4)
-    Curation.saveBpeTable(merges, "bpespec")
-    try {
-      val loaded = Curation.loadBpeTable(spark, "bpespec")
-      loaded.map(m => (m(0), m(1))).toSeq shouldBe
-        Seq(("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w"))
-      graft.functions.TextKernel.bpeSegmentWord("lowest", loaded).toSeq shouldBe
-        Seq("low", "est")
-    } finally spark.sql("DROP TABLE IF EXISTS bpespec_bpe_merges")
-  }
-
   test("mixtureReweight converges toward the hard stratum on a skewed corpus") {
     // 'hard': 100 docs with doc-unique bigrams (only SELECTED docs'
     // bigrams enter the proxy model, so its miss rate ≈ unselected
@@ -908,23 +810,6 @@ class CurationOpsSpec extends SparkSpec {
       r.getLong(2) should be > 0L
     }
     st.release() // no-op by contract
-  }
-
-  test("tuned DoReMi shares compose with the standing mixture recipe") {
-    // the pipeline's direct selection == thresholds-recipe replay of
-    // the same tuned shares (the recipe contract, now spanning the
-    // reweighting stack): a stream/batch gated by the saved recipe
-    // reproduces pipelineV8's mix bit-for-bit
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val st = Curation.pipelineV8Stages(docs)
-    val direct = st.selected.select(col("doc_id"))
-      .collect().map(_.getLong(0)).sorted
-    val thr = Sampling.mixtureThresholds(
-      docs.select(col("doc_id"), col("lang")), "lang", st.shares)
-    val replay = Sampling.mixtureGateWith(
-        docs.select(col("doc_id"), col("lang")), thr, "lang", "doc_id")
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted
-    replay shouldBe direct
   }
 
   test("mixtureReweight: gcd renormalization lifts the old round-6 ceiling") {

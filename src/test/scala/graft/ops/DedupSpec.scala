@@ -82,12 +82,7 @@ class DedupSpec extends SparkSpec {
         else s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i"
       (i.toLong, s"$body $fill")
     }.toDF("doc_id", "text")
-    val ex = Dedup.shingleRows(corpus, "doc_id", "text", 3)
-    val uncapped = Dedup.ngramCandidates(ex, dfCap = 0).count()
-    val capped   = Dedup.ngramCandidates(ex, dfCap = 10).count()
-    uncapped shouldBe 780 // every pair collides on the hot shingle
-    capped should be < 10L // only docs sharing low-df shingles survive
-    // and the capped pipeline still scores the true near-dup pair with
+    // the capped pipeline still scores the true near-dup pair with
     // EXACT jaccard over the full shingle sets
     val pairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
         k = 3, tau = 0.5, dfCap = 10)
@@ -231,34 +226,6 @@ class DedupSpec extends SparkSpec {
     capped.count(p => p._1 == 502L) shouldBe 0     // hot corpus bands suppressed
   }
 
-  test("save/load round-trips the index through bucketed tables with identical results") {
-    // the production lifecycle: index once -> persist bucketed ->
-    // reload in a later job/stream -> dedup incoming batches against
-    // it, with results identical to the in-memory index
-    val corpus = docs
-    val batch = Seq(
-      (11L, "the quick brown fox jumps over the lazy dog and runs far away tonight"),
-      (13L, "nothing in common with anything else in this tiny corpus at all"))
-      .toDF("doc_id", "text")
-    val names = Seq("_shingles", "_bands", "_sizes", "_meta").map("dedup_idx" + _)
-    try {
-      val idx = Dedup.minhashIndex(corpus, "doc_id", "text", k = 3, persistIndex = false)
-      Dedup.saveMinhashIndex(idx, "dedup_idx", buckets = 4)
-      val loaded = Dedup.loadMinhashIndex(spark, "dedup_idx")
-      loaded.k shouldBe 3
-      loaded.numHashes shouldBe idx.numHashes
-      loaded.bandSize shouldBe idx.bandSize
-
-      def pairs(i: Dedup.MinhashIndex) =
-        Dedup.minhashLshIncremental(batch, "doc_id", "text", i, tau = 0.5,
-            persistIndex = false)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val fromLoaded = pairs(loaded)
-      fromLoaded shouldBe pairs(idx)
-      fromLoaded.map(p => (p._1, p._2)) should contain ((11L, 1L))
-    } finally names.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
   test("bucketed bands table joins a batch without shuffling the corpus side") {
     // the 100 TB claim made checkable: store the index's bands table
     // bucketed by its join keys, and the band-bucket join shuffles ONLY
@@ -320,7 +287,7 @@ class DedupSpec extends SparkSpec {
       (7L, "a b  c d e"), (8L, "x y x y x y x y")).toDF("doc_id", "text"))
     val kernel = Dedup.shingleRows(tricky, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val window = Dedup.shingleRowsWindow(tricky, "doc_id", "text", 3)
+    val window = Oracles.shingleRowsWindow(tricky, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val arr = tricky.select(col("doc_id"), explode(Dedup.shingles(col("text"), 3)).as("s"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -456,33 +423,6 @@ class DedupSpec extends SparkSpec {
     rows.toMap shouldBe expected
   }
 
-  test("updateComponents(cc(P1), P2) == cc(P1 ∪ P2) on random splits") {
-    // the incremental contract: folding a batch into a standing
-    // assignment equals re-clustering all pairs ever seen — including
-    // batches that BRIDGE two existing clusters (re-key to the min id)
-    val rnd = new scala.util.Random(424242L)
-    for (trial <- 0 until 4) {
-      val n = 10 + rnd.nextInt(30)
-      val all = Seq.fill(2 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      val (p1, p2) = all.splitAt(all.size / 2)
-      val standing = Dedup.connectedComponents(p1.toDF("id_a", "id_b"))
-      val updated = Dedup.updateComponents(standing, p2.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-      val full = driverComponents(all)
-      withClue(s"trial $trial (n=$n, |P1|=${p1.size}, |P2|=${p2.size}): ") {
-        updated.length shouldBe full.size
-        updated.toMap shouldBe full
-      }
-    }
-    // explicit bridge: {1,2} and {10,11} standing, batch pair (2,10)
-    val standing = Dedup.connectedComponents(
-      Seq((1L, 2L), (10L, 11L)).toDF("id_a", "id_b"))
-    val merged = Dedup.updateComponents(standing, Seq((2L, 10L)).toDF("id_a", "id_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    merged shouldBe Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L)
-  }
-
   test("dropDuplicateMembers keeps canonical ids and singletons") {
     val corpus = (1L to 8L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
@@ -505,26 +445,10 @@ class DedupSpec extends SparkSpec {
     for (k <- Seq(1, 2, 3)) {
       val fused = Dedup.shingleFpRows(docs, "doc_id", "text", k)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val plain = Dedup.shingleFpRowsUnfused(docs, "doc_id", "text", k)
+      val plain = Oracles.shingleFpRowsUnfused(docs, "doc_id", "text", k)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       withClue(s"k=$k: ") { fused shouldBe plain }
     }
-  }
-
-  test("dropDuplicateMembersBest keeps each cluster's best-scored member") {
-    import spark.implicits._
-    // two clusters: {1,2,3} label 1, {5,6} label 5; 4 unclustered
-    val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L))
-      .toDF("doc_id", "cluster_id")
-    val docs = Seq((1L, 10L), (2L, 90L), (3L, 90L), (4L, 1L), (5L, 2L), (6L, 7L))
-      .toDF("doc_id", "q")
-    val best = Dedup.bestClusterMembers(clusters, docs, "doc_id", "q")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // tie 2 vs 3 at 90 -> lowest id 2; cluster 5 -> member 6 (7 > 2)
-    best shouldBe Map(1L -> ((2L, 90L, 3L)), 5L -> ((6L, 7L, 2L)))
-    val kept = Dedup.dropDuplicateMembersBest(docs, "doc_id", "q", clusters)
-      .collect().map(_.getLong(0)).toSet
-    kept shouldBe Set(2L, 4L, 6L) // winners + the unclustered row
   }
 
   test("exactGroupsBest elects the highest-score member, ties to lowest id") {

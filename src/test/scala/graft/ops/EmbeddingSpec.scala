@@ -154,38 +154,6 @@ class EmbeddingSpec extends SparkSpec {
     } finally idx.release()
   }
 
-  test("shingleTf index save/load round-trips and serves the incremental probe") {
-    val docs = Seq(
-      (0L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "totally different corpus document right here"),
-      (1L, "alpha beta gamma delta epsilon zeta eta iota"))
-      .toDF("doc_id", "text")
-    val corpus = docs.filter(col("doc_id") % 2 === 0)
-    val batch = docs.filter(col("doc_id") === 1L)
-    val built = Embedding.buildShingleTfIndex(corpus, "doc_id", "text",
-      dim = 16384, k = 3)
-    try {
-      Embedding.saveShingleTfIndex(built, "stfspec")
-      val loaded = Embedding.loadShingleTfIndex(spark, "stfspec")
-      // the hashing geometry rides the saved index: a loaded probe
-      // shingles into the SAME bucket space the corpus was built with
-      loaded.dim shouldBe 16384
-      loaded.k shouldBe 3
-      val viaBuilt = Embedding.hashedShingleNearDupIncremental(batch, built,
-        "doc_id", "text", tauSqNum = 25L, tauSqDen = 100L)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-      val viaLoaded = Embedding.hashedShingleNearDupIncremental(batch, loaded,
-        "doc_id", "text", tauSqNum = 25L, tauSqDen = 100L)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-      viaLoaded shouldBe viaBuilt
-      viaBuilt should not be empty
-    } finally {
-      built.release()
-      spark.sql("DROP TABLE IF EXISTS stfspec_stf")
-      spark.sql("DROP TABLE IF EXISTS stfspec_stf_meta")
-    }
-  }
-
   test("incremental near-dup: replayed ids already in the index yield no self-pair") {
     val docs = Seq(
       (0L, "alpha beta gamma delta epsilon zeta eta theta"),

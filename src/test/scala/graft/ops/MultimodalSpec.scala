@@ -26,36 +26,6 @@ class MultimodalSpec extends SparkSpec {
     feats(1).getSeq[Float](1).toList.drop(1) shouldBe List(0.0f, 0.0f, 0.0f)
   }
 
-  test("header sniffing identifies PNG/JPEG/WAV and extracts dimensions") {
-    // minimal PNG: signature + IHDR len/type + 640x480 big-endian dims
-    val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A,
-      0, 0, 0, 13, 'I', 'H', 'D', 'R',
-      0, 0, 0x02, 0x80.toByte, /* 640 */ 0, 0, 0x01, 0xE0.toByte /* 480 */)
-    Multimodal.sniffMediaType(png) shouldBe "image/png"
-    Multimodal.imageDims(png) shouldBe Some((640, 480))
-    // minimal JPEG: SOI + SOF0 with 100x200
-    val jpg = Array[Byte](0xFF.toByte, 0xD8.toByte,
-      0xFF.toByte, 0xC0.toByte, 0x00, 0x0B, 8,
-      0x00, 0x64, /* h=100 */ 0x00, 0xC8.toByte, /* w=200 */ 1, 1, 0x11, 0)
-    Multimodal.sniffMediaType(jpg) shouldBe "image/jpeg"
-    Multimodal.imageDims(jpg) shouldBe Some((200, 100))
-    val wav = "RIFF1234WAVE".getBytes("US-ASCII")
-    Multimodal.sniffMediaType(wav) shouldBe "audio/wav"
-    Multimodal.sniffMediaType("plain".getBytes) shouldBe "application/octet-stream"
-  }
-
-  test("withMediaMetadata runs the batched metadata stage end-to-end") {
-    import org.apache.spark.sql.functions.lit
-    val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A,
-      0, 0, 0, 13, 'I', 'H', 'D', 'R',
-      0, 0, 0x02, 0x80.toByte, 0, 0, 0x01, 0xE0.toByte)
-    val df = Seq(1L).toDF("doc_id").withColumn("payload", lit(png))
-    val out = Multimodal.withMediaMetadata(df, "doc_id", "payload").head()
-    out.getAs[String]("media_type") shouldBe "image/png"
-    out.getAs[Int]("width") shouldBe 640
-    out.getAs[Int]("height") shouldBe 480
-  }
-
   test("resizeImages emits the header + w*h-sized payload per doc") {
     val withBin = Multimodal.withBinaryPayload(docs, "text")
     val out = Multimodal.resizeImages(withBin, "doc_id", "payload", w = 4, h = 2)

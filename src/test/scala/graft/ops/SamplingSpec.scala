@@ -17,15 +17,6 @@ class SamplingSpec extends SparkSpec {
     got.foreach { case (id, b) => b shouldBe bucket(id) }
   }
 
-  test("hashSample: deterministic membership, ~frac of rows kept") {
-    val kept = Sampling.hashSample(ids, "id", 0.3).select("id")
-      .collect().map(_.getLong(0)).toSet
-    kept shouldBe (0L until 10000L).filter(bucket(_) < 300000L).toSet
-    kept.size.toDouble / 10000 shouldBe 0.3 +- 0.05
-    val again = Sampling.hashSample(ids, "id", 0.3).count()
-    again shouldBe kept.size.toLong
-  }
-
   test("stratifiedSample applies per-stratum thresholds with a default") {
     val kept = Sampling.stratifiedSample(ids, "source", "id",
         fractions = Map("src0" -> 0.5, "src1" -> 0.1), default = 0.0)
@@ -70,7 +61,9 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("sampling ops add no shuffle (fixedN adds exactly the window's one)") {
-    val p1 = Sampling.hashSample(ids, "id", 0.3).queryExecution.executedPlan.toString
+    val p1 = Sampling.stratifiedSample(ids, "source", "id",
+        fractions = Map("src0" -> 0.5), default = 0.3)
+      .queryExecution.executedPlan.toString
     "Exchange".r.findAllMatchIn(p1).size shouldBe 0
     val p2 = Sampling.stratifiedFixedN(ids, "source", "id", 5)
       .queryExecution.executedPlan.toString
@@ -94,28 +87,6 @@ class SamplingSpec extends SparkSpec {
     val plan = Sampling.shardShuffle(ids, "id", 8)
       .queryExecution.executedPlan.toString
     "Exchange".r.findAllMatchIn(plan).size shouldBe 1
-  }
-
-  test("mixFractions hits the target mix without upsampling") {
-    val current = Map("web" -> 8000L, "code" -> 1000L, "books" -> 1000L)
-    val target = Map("web" -> 0.5, "code" -> 0.25, "books" -> 0.25)
-    val f = Sampling.mixFractions(current, target)
-    f.values.foreach { v => v should be >= 0.0; v should be <= 1.0 }
-    // most-constraining strata (code, books at 4x under-representation)
-    // are kept in full; web downsamples to balance
-    f("code") shouldBe 1.0
-    f("books") shouldBe 1.0
-    val mixed = current.map { case (k, v) => k -> v * f(k) }
-    val tot = mixed.values.sum
-    target.foreach { case (k, share) =>
-      mixed(k) / tot shouldBe share +- 1e-9
-    }
-  }
-
-  test("mixFractions: already-balanced corpus is kept whole") {
-    val current = Map("a" -> 500L, "b" -> 500L)
-    val f = Sampling.mixFractions(current, Map("a" -> 1.0, "b" -> 1.0))
-    f shouldBe Map("a" -> 1.0, "b" -> 1.0)
   }
 
   test("temperatureSample(alpha=0.5) flattens the mix toward sqrt shares") {
@@ -384,28 +355,6 @@ class SamplingSpec extends SparkSpec {
         Map("x" -> (2L, 1L)))
   }
 
-  test("mixtureThresholds + mixtureGateWith reproduce mixtureSelect exactly") {
-    val df = (0L until 3000L).map { i =>
-      (i, s"s${i % 3}", 1L + i % 7)
-    }.toDF("id", "lang", "toks")
-    val shares = Map("s0" -> 4L, "s1" -> 2L, "s2" -> 1L)
-    for (w <- Seq(None, Some("toks"))) {
-      val direct = Sampling.mixtureSelect(df, "lang", "id", shares, w)
-        .select("id").collect().map(_.getLong(0)).sorted.toSeq
-      val thr = Sampling.mixtureThresholds(df, "lang", shares, w)
-      val gated = Sampling.mixtureGateWith(df, thr, "lang", "id")
-        .select("id").collect().map(_.getLong(0)).sorted.toSeq
-      gated shouldBe direct // hash < floor(A/B) <=> (hash+1)*B <= A
-    }
-    // the binding stratum's threshold is the full bucket range
-    val t = Sampling.mixtureThresholds(df, "lang", shares)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // equal masses -> the LARGEST share runs out first: s0 is binding
-    t("s0") shouldBe 1000000L
-    t("s1") shouldBe 500000L  // 1e6 * (1000*2) / (4*1000)
-    t("s2") shouldBe 250000L
-  }
-
   test("splitByGroup: whole groups share a label, bands hit their ppm, remainder to last") {
     val df = (0L until 9000L).map(i => (i, i / 3)).toDF("id", "grp")
     val out = Sampling.splitByGroup(df, "grp",
@@ -470,17 +419,6 @@ class SamplingSpec extends SparkSpec {
     val sizes = out.groupBy(_._3).view.mapValues(_.size).toMap
     sizes.keySet shouldBe Set(0, 1, 2, 3)
     sizes.values.foreach(_.toDouble / 5000 shouldBe 0.25 +- 0.05)
-  }
-
-  test("hashSampleStr: deterministic membership by the md5-prefix bucket") {
-    val df = (0L until 2000L).map(i => (i, s"user${i % 97}")).toDF("id", "author")
-    val kept = Sampling.hashSampleStr(df, "author", 0.5)
-      .select("author").distinct().collect().map(_.getString(0)).toSet
-    // membership is per-KEY: an author is fully in or fully out
-    val again = Sampling.hashSampleStr(df, "author", 0.5)
-      .select("author").distinct().collect().map(_.getString(0)).toSet
-    again shouldBe kept
-    kept.size.toDouble / 97 shouldBe 0.5 +- 0.15
   }
 
   test("stringBucket matches the documented md5-prefix formula; splitByGroupStr groups hold") {

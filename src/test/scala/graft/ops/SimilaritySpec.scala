@@ -9,11 +9,23 @@ class SimilaritySpec extends SparkSpec {
   private def vecDf(rows: Seq[(Long, Seq[Double])]) =
     rows.toDF("id", "vec")
 
+  /** `index` with its corpus stored as a table bucketed by `cell`, the
+    * standing-index layout the probe join is shaped for.
+    */
+  private def bucketed(index: Similarity.IvfIndex, table: String,
+                       buckets: Int): Similarity.IvfIndex = {
+    index.corpus.write.mode("overwrite").bucketBy(buckets, "cell").saveAsTable(table)
+    index.copy(corpus = spark.table(table))
+  }
+
   test("dot and cosine fold deterministically") {
     val df = vecDf(Seq((1L, Seq(1.0, 2.0, 3.0)), (2L, Seq(4.0, 5.0, 6.0))))
     val a = df.filter($"id" === 1).select($"vec".as("a"))
     val b = df.filter($"id" === 2).select($"vec".as("b"))
-    val d = a.crossJoin(b).select(Similarity.dot(col("a"), col("b"))).head().getDouble(0)
+    val dot = org.apache.spark.sql.classic.GraftExpressionBridge.column(graft.functions.VecDot(
+      org.apache.spark.sql.classic.GraftExpressionBridge.expression(col("a")),
+      org.apache.spark.sql.classic.GraftExpressionBridge.expression(col("b"))))
+    val d = a.crossJoin(b).select(dot).head().getDouble(0)
     d shouldBe 32.0
   }
 
@@ -112,35 +124,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("IvfRerankIndex save/load round-trips with identical top-k results") {
-    val rnd = new scala.util.Random(17)
-    val corpus = vecDf((0L until 120L).map(i =>
-      (i, Seq.fill(12)(rnd.nextGaussian()))))
-    val queries = corpus.filter($"id" < 6)
-    try {
-      val idx = Similarity.buildIvfRerankIndex(corpus, nlist = 8,
-        nassign = 2, iters = 2)
-      val direct = Similarity.ivfTopKIndexedRerank(queries, idx, k = 4,
-          nprobe = 3, overFetch = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      Similarity.saveIvfRerankIndex(idx, "rrx_spec", buckets = 4)
-      val loaded = Similarity.loadIvfRerankIndex(spark, "rrx_spec")
-      loaded.nlist shouldBe idx.nlist
-      loaded.nassign shouldBe 2
-      loaded.centroids.toSeq shouldBe idx.centroids.toSeq
-      val replay = Similarity.ivfTopKIndexedRerank(queries, loaded, k = 4,
-          nprobe = 3, overFetch = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      replay shouldBe direct
-      // the train-and-probe convenience is exactly build + probe
-      val conv = Similarity.ivfRerankTopK(queries, corpus, k = 4,
-          nlist = 8, nprobe = 3, nassign = 2, overFetch = 4, iters = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      conv shouldBe direct
-    } finally Seq("rrx_spec_cells", "rrx_spec_vectors", "rrx_spec_centroids",
-      "rrx_spec_meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
   test("saved rerank index: probe scans both heavy sides in place (bucketed joins)") {
     // the standing-index contract made checkable: cells bucketed by the
     // probe key, vectors by the lookup key — the only exchanges on
@@ -156,8 +139,11 @@ class SimilaritySpec extends SparkSpec {
         (i, Seq.fill(12)(rnd.nextGaussian()))))
       val idx = Similarity.buildIvfRerankIndex(corpus, nlist = 4,
         nassign = 2, iters = 1)
-      Similarity.saveIvfRerankIndex(idx, "rrx_plan", buckets = 4)
-      val loaded = Similarity.loadIvfRerankIndex(spark, "rrx_plan")
+      idx.cells.write.mode("overwrite").bucketBy(4, "cell").saveAsTable("rrx_plan_cells")
+      idx.vectors.write.mode("overwrite").bucketBy(4, "neighbor_id")
+        .saveAsTable("rrx_plan_vectors")
+      val loaded = idx.copy(cells = spark.table("rrx_plan_cells"),
+        vectors = spark.table("rrx_plan_vectors"))
       val probed = Similarity.ivfTopKIndexedRerank(
         corpus.filter($"id" < 3), loaded, k = 3, nprobe = 2)
       val plan = probed.queryExecution.executedPlan.toString
@@ -170,8 +156,8 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
       conf.set("spark.sql.adaptive.enabled", oldAqe)
-      Seq("rrx_plan_cells", "rrx_plan_vectors", "rrx_plan_centroids",
-        "rrx_plan_meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq("rrx_plan_cells", "rrx_plan_vectors")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
@@ -304,76 +290,11 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("IVF index save/load round-trips with identical top-k results") {
-    // index-once lifecycle: train+assign -> persist bucketed by cell ->
-    // reload in a later job -> probe batches with no re-training
-    val rnd = new scala.util.Random(23)
-    val corpus = vecDf((0L until 150L).map(i =>
-      (i, Seq.fill(16)(rnd.nextGaussian()))))
-    val queries = corpus.filter($"id" < 6)
-    val names = Seq("_corpus", "_centroids").map("ivf_idx" + _)
-    try {
-      val idx = Similarity.buildIvfIndex(corpus, nlist = 8, iters = 2)
-      Similarity.saveIvfIndex(idx, "ivf_idx", buckets = 4)
-      val loaded = Similarity.loadIvfIndex(spark, "ivf_idx")
-      loaded.nlist shouldBe 8
-      loaded.centroids.map(_.toList).toList shouldBe idx.centroids.map(_.toList).toList
-
-      def topk(i: Similarity.IvfIndex) =
-        Similarity.ivfTopKIndexed(queries, i, k = 4, nprobe = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      topk(loaded) shouldBe topk(idx)
-      topk(loaded) shouldBe
-        Similarity.ivfTopK(queries, corpus, k = 4, nlist = 8, nprobe = 3, iters = 2)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    } finally names.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  test("appendToIvfIndex folds a batch in without retraining; probes equal wholesale assignment") {
-    val rnd = new scala.util.Random(41)
-    val all = (0L until 160L).map(i => (i, Seq.fill(16)(rnd.nextGaussian())))
-    val first = vecDf(all.take(100))
-    val batch = vecDf(all.drop(100))
-    val queries = vecDf(all.take(5))
-    val names = Seq("_corpus", "_centroids").map("ivf_app" + _)
-    try {
-      val idx = Similarity.buildIvfIndex(first, nlist = 8, iters = 2)
-      Similarity.saveIvfIndex(idx, "ivf_app", buckets = 4)
-      val appended = Similarity.appendToIvfIndex(spark, batch, "ivf_app", buckets = 4)
-      // centroids unchanged; corpus grew by the batch
-      appended.centroids.map(_.toList).toList shouldBe idx.centroids.map(_.toList).toList
-      appended.corpus.count() shouldBe 160L
-      // probing the appended index == probing an index whose corpus was
-      // assigned wholesale under the SAME centroids
-      val wholesale = Similarity.IvfIndex(idx.centroids,
-        vecDf(all).select(col("id").as("neighbor_id"), col("vec").as("cv"),
-          Similarity.nearestCell(col("vec"), idx.centroids).as("cell"),
-          Similarity.quantizeCol(col("vec")).as("qcv")),
-        idx.nlist)
-      def topk(i: Similarity.IvfIndex) =
-        Similarity.ivfTopKIndexed(queries, i, k = 4, nprobe = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      topk(appended) shouldBe topk(wholesale)
-      // the q8 probe path sees the appended rows' pre-quantized vectors too
-      def topkQ8(i: Similarity.IvfIndex) =
-        Similarity.ivfTopKIndexedQ8(queries, i, k = 4, nprobe = 3)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      topkQ8(appended) shouldBe topkQ8(wholesale)
-    } finally names.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  test("IVF index on a corpus smaller than nlist round-trips consistently") {
+  test("IVF index on a corpus smaller than nlist records the actual centroid count") {
     val rnd = new scala.util.Random(31)
     val tiny = vecDf((0L until 6L).map(i => (i, Seq.fill(8)(rnd.nextGaussian()))))
-    val names = Seq("_corpus", "_centroids").map("ivf_tiny" + _)
-    try {
-      val idx = Similarity.buildIvfIndex(tiny, nlist = 16, iters = 1)
-      idx.nlist shouldBe idx.centroids.length // actual count, not the request
-      Similarity.saveIvfIndex(idx, "ivf_tiny", buckets = 2)
-      val loaded = Similarity.loadIvfIndex(spark, "ivf_tiny")
-      loaded.nlist shouldBe idx.nlist
-      loaded.centroids.length shouldBe idx.centroids.length
-    } finally names.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val idx = Similarity.buildIvfIndex(tiny, nlist = 16, iters = 1)
+    idx.nlist shouldBe idx.centroids.length // actual count, not the request
   }
 
   test("bucketed IVF corpus table joins a query batch without shuffling the corpus side") {
@@ -391,8 +312,7 @@ class SimilaritySpec extends SparkSpec {
         (i, Seq.fill(16)(rnd.nextGaussian()))))
       spark.sql("DROP TABLE IF EXISTS ivf_bucketed_corpus")
       val idx = Similarity.buildIvfIndex(corpus, nlist = 4, iters = 1)
-      Similarity.saveIvfIndex(idx, "ivf_bucketed", buckets = 4)
-      val loaded = Similarity.loadIvfIndex(spark, "ivf_bucketed")
+      val loaded = bucketed(idx, "ivf_bucketed_corpus", buckets = 4)
 
       val joined = Similarity.ivfTopKIndexed(
         corpus.filter($"id" < 3), loaded, k = 3, nprobe = 2)
@@ -403,8 +323,7 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
       conf.set("spark.sql.adaptive.enabled", oldAqe)
-      Seq("ivf_bucketed_corpus", "ivf_bucketed_centroids")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.sql("DROP TABLE IF EXISTS ivf_bucketed_corpus")
     }
   }
 
@@ -441,8 +360,7 @@ class SimilaritySpec extends SparkSpec {
       val corpus = vecDf((0L until 100L).map(i =>
         (i, Seq.fill(16)(rnd.nextGaussian()))))
       val idx = Similarity.buildIvfIndex(corpus, nlist = 4, iters = 1)
-      Similarity.saveIvfIndex(idx, "ivf_q8", buckets = 4)
-      val loaded = Similarity.loadIvfIndex(spark, "ivf_q8")
+      val loaded = bucketed(idx, "ivf_q8_corpus", buckets = 4)
 
       val joined = Similarity.ivfTopKIndexedQ8(
         corpus.filter($"id" < 3), loaded, k = 3, nprobe = 2)
@@ -459,32 +377,8 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
       conf.set("spark.sql.adaptive.enabled", oldAqe)
-      Seq("ivf_q8_corpus", "ivf_q8_centroids")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.sql("DROP TABLE IF EXISTS ivf_q8_corpus")
     }
-  }
-
-  test("loadIvfIndex derives qcv for a pre-q8 index table") {
-    val rnd = new scala.util.Random(41)
-    val corpus = vecDf((0L until 40L).map(i =>
-      (i, Seq.fill(8)(rnd.nextGaussian()))))
-    try {
-      val idx = Similarity.buildIvfIndex(corpus, nlist = 4, iters = 1)
-      // persist the OLD index shape (no qcv), as a pre-q8 build wrote it
-      idx.corpus.drop("qcv").write.mode("overwrite")
-        .bucketBy(2, "cell").saveAsTable("ivf_old_corpus")
-      import spark.implicits._
-      idx.centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-        .toDF("cell", "centroid")
-        .write.mode("overwrite").saveAsTable("ivf_old_centroids")
-      val loaded = Similarity.loadIvfIndex(spark, "ivf_old")
-      loaded.corpus.columns should contain ("qcv")
-      def topk(i: Similarity.IvfIndex) =
-        Similarity.ivfTopKIndexedQ8(corpus.filter($"id" < 4), i, k = 3, nprobe = 2)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      topk(loaded) shouldBe topk(idx)
-    } finally Seq("ivf_old_corpus", "ivf_old_centroids")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("embeddingNearDupPairs finds planted identical vectors") {
@@ -617,7 +511,8 @@ class SimilaritySpec extends SparkSpec {
       }.sortBy { case (nb, _, m) => (-m, nb) }.head
       qa -> best
     }.toMap
-    val got = Similarity.marginPairs(a, b, k = k, minMargin = 1.0)
+    val got = Similarity.marginPairsRun(a, b, k = k, minMargin = 1.0,
+        persistScored = false).pairs
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
     got.keySet shouldBe model.filter(_._2._3 >= 1.0).keySet
@@ -636,7 +531,8 @@ class SimilaritySpec extends SparkSpec {
       (0 until 6).map(j => (((seed * 31 + j * 2654435761L) % 1009L).toDouble / 1009.0) * 2.0 - 1.0)
     val a = (0L until 24L by 2).map(i => (i, vec(i))).toDF("id", "vec")
     val b = (1L until 24L by 2).map(i => (i, vec(i * 7))).toDF("id", "vec")
-    val exact = Similarity.marginPairs(a, b, k = 4, minMargin = 0.0)
+    val exact = Similarity.marginPairsRun(a, b, k = 4, minMargin = 0.0,
+        persistScored = false).pairs
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
     // probe every cell and over-fetch the whole other side: the IVF
@@ -701,30 +597,6 @@ class SimilaritySpec extends SparkSpec {
     val ivf = Similarity.knnClassifyIvf(q, corpus, k = 5, nlist = 4, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).sortBy(_._1)
     ivf shouldBe exact
-  }
-
-  test("knnClassifyFrom composes any top-k source into the same vote") {
-    def vec(seed: Long): Seq[Double] =
-      (0 until 6).map(j => (((seed * 31 + j * 2654435761L) % 1009L).toDouble / 1009.0) * 2.0 - 1.0)
-    val corpus = (0L until 50L).map(i => (i, vec(i), i % 4)).toDF("id", "vec", "label")
-    val labels = corpus.select("id", "label")
-    val q = corpus.filter(col("id") < 10)
-    val direct = Similarity.knnClassify(q, corpus, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).sortBy(_._1)
-    // over the exact top-k stream
-    val viaBrute = Similarity.knnClassifyFrom(
-        Similarity.bruteForceTopK(q, corpus, k = 5), labels, labels)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).sortBy(_._1)
-    viaBrute shouldBe direct
-    // over a persisted-and-reloaded index with exhaustive probes: the
-    // production serving path reproduces the exact classifier
-    val idx = Similarity.buildIvfIndex(corpus, nlist = 4)
-    Similarity.saveIvfIndex(idx, "knn_from_spec", buckets = 2)
-    val loaded = Similarity.loadIvfIndex(spark, "knn_from_spec")
-    val viaIndex = Similarity.knnClassifyFrom(
-        Similarity.ivfTopKIndexed(q, loaded, k = 5, nprobe = 4), labels, labels)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).sortBy(_._1)
-    viaIndex shouldBe direct
   }
 
   test("knnClassifyIvf plan: no cross join, no broadcast hint") {

@@ -106,8 +106,9 @@ class SpanDedupSpec extends SparkSpec {
     val batch = wide.filter($"doc_id" % 2 === 1)
     val idx = Dedup.spanFingerprints(corpus, "doc_id", "text", k = 8, sel = "")
       .select($"id", xxhash64($"h").as("s"))
-    val inc = Dedup.spanPairsIncremental(batch, "doc_id", "text", idx,
-        k = 8, sel = "", minShared = 2, dfCap = 0)
+    val inc = Dedup.spanPairsIncremental(
+        Dedup.spanBatchFingerprints(batch, "doc_id", "text", k = 8, sel = ""), idx,
+        minShared = 2, dfCap = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val full = Dedup.duplicateSpanPairs(wide, "doc_id", "text",
         k = 8, sel = "", minShared = 2, dfCap = 0)
@@ -122,24 +123,23 @@ class SpanDedupSpec extends SparkSpec {
   test("span index round-trips through a bucketed table; batch probe keeps corpus in place") {
     val name = "span_idx_rt"
     try {
-      Dedup.saveSpanIndex(docs, "doc_id", "text", name, k = 8, sel = "", buckets = 4)
-      val loaded = spark.table(name)
       val direct = Dedup.spanFingerprints(docs, "doc_id", "text", k = 8, sel = "")
         .select($"id", xxhash64($"h").as("s"))
+      // the standing index: fingerprints bucketed by the probe's join key
+      direct.write.bucketBy(4, "s").saveAsTable(name)
+      val loaded = spark.table(name)
       loaded.count() shouldBe direct.count()
       val batch = Seq((100L, s"fresh doc embedding $span once more")).toDF("doc_id", "text")
-      val viaTable = Dedup.spanPairsIncremental(batch, "doc_id", "text", loaded,
-          k = 8, sel = "", minShared = 2, dfCap = 0)
+      val batchFp = Dedup.spanBatchFingerprints(batch, "doc_id", "text", k = 8, sel = "")
+      val viaTable = Dedup.spanPairsIncremental(batchFp, loaded, minShared = 2, dfCap = 0)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val viaFrame = Dedup.spanPairsIncremental(batch, "doc_id", "text", direct,
-          k = 8, sel = "", minShared = 2, dfCap = 0)
+      val viaFrame = Dedup.spanPairsIncremental(batchFp, direct, minShared = 2, dfCap = 0)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       viaTable shouldBe viaFrame
       viaTable.keySet shouldBe Set((100L, 1L), (100L, 2L)) // both span hosts
       // bucketed layout: the probe join plans with NO exchange on the
       // corpus side (only the batch shuffles to the stored bucketing)
-      val plan = Dedup.spanPairsIncremental(batch, "doc_id", "text", loaded,
-        k = 8, sel = "", minShared = 2, dfCap = 0)
+      val plan = Dedup.spanPairsIncremental(batchFp, loaded, minShared = 2, dfCap = 0)
         .queryExecution.executedPlan.toString
       plan should not include "CartesianProduct"
     } finally spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -167,7 +167,7 @@ class SpanDedupSpec extends SparkSpec {
     for (sel <- Seq("", "0", "ab"); k <- Seq(4, 8)) {
       val fused = Dedup.spanFingerprints(mixed, "doc_id", "text", k, sel)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      val plain = Dedup.spanFingerprintsUnfused(mixed, "doc_id", "text", k, sel)
+      val plain = Oracles.spanFingerprintsUnfused(mixed, "doc_id", "text", k, sel)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       withClue(s"k=$k sel='$sel': ") { fused shouldBe plain }
     }
@@ -192,7 +192,7 @@ class SpanDedupSpec extends SparkSpec {
     for (sel <- Seq("", "0"); k <- Seq(3, 6)) {
       val fused = Dedup.spanFingerprints(rdocs, "doc_id", "text", k, sel)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      val plain = Dedup.spanFingerprintsUnfused(rdocs, "doc_id", "text", k, sel)
+      val plain = Oracles.spanFingerprintsUnfused(rdocs, "doc_id", "text", k, sel)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       withClue(s"k=$k sel='$sel': ") { fused shouldBe plain }
     }

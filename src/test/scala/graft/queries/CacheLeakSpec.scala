@@ -23,7 +23,8 @@ class CacheLeakSpec extends SparkSpec {
   private val owned = Seq("quality_gate", "token_budget", "group_token_cap",
     "ccnet_buckets", "v2_stage_counts", "curation_pipeline",
     "curation_pipeline_v2", "curation_pipeline_v3", "curation_pipeline_v4",
-    "curation_pipeline_v5", "curation_pipeline_v7", "curation_pipeline_v8")
+    "curation_pipeline_v5", "curation_pipeline_v7", "curation_pipeline_v8",
+    "span_incremental")
 
   test("curation and gate queries leave the cache manager empty") {
     spark.catalog.clearCache() // drop what earlier suites left

@@ -2,7 +2,6 @@ package graft.rules
 
 import graft.SparkSpec
 import graft.functions.GraftExtensions
-import graft.ops.Curation
 import graft.orchestrator.{DqConfig, DqRunAbortedException, SparkExpectations}
 import org.apache.spark.sql.SparkSession
 
@@ -91,7 +90,14 @@ class PipelineRulesSpec extends SparkSpec {
       (100L, "spark shuffles exchange aggregate join plans"),
       (101L, "spark plans aggregate exchange shuffles join")
     ).toDF("doc_id", "text")
-    Curation.saveLmModel(ref, "lm_rule_spec", buckets = 2)
+    // the model table: bigram counts over the reference, written in
+    // two appended halves so the rule's per-bigram sum is exercised
+    val bigrams = ref.selectExpr("split(text, ' ') as tk")
+      .selectExpr("explode(transform(sequence(1, size(tk) - 1), " +
+        "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))) as bigram")
+      .groupBy("bigram").count().withColumnRenamed("count", "c2")
+    bigrams.filter("bigram < 'p'").write.mode("overwrite").saveAsTable("lm_rule_spec_bigrams")
+    bigrams.filter("bigram >= 'p'").write.mode("append").saveAsTable("lm_rule_spec_bigrams")
 
     // in-model corpus: transitions the model has seen -> low OOV
     val inModel = Seq((1L, "spark shuffles exchange aggregate")).toDF("doc_id", "text")

@@ -20,7 +20,7 @@ class StreamingCurationSpec extends SparkSpec {
         "the quick brown fox jumps over the lazy dog near the river bank " * 3)
     }
     def curate(df: org.apache.spark.sql.DataFrame) =
-      Sampling.hashSample(df, "doc_id", 0.4)
+      df.filter(Sampling.hashBucket(col("doc_id")) < lit((0.4 * Sampling.Buckets).toLong))
         .withColumn("n_tokens", TA.tokenCount(col("text")).cast("long"))
         .withColumn("quality", TA.qualityScore(col("text")))
         .filter(col("quality") >= 0.5 && col("n_tokens") >= 10L)

@@ -21,65 +21,16 @@ class StreamingSpec extends SparkSpec {
       "/cp/db/tbl_checkpoint"
   }
 
-  test("streaming sessionization matches the batch window form") {
-    implicit val sqlCtx = spark.sqlContext
+  test("sessionization splits a user's events at the gap") {
     import spark.implicits._
-    import graft.streaming.Sessionize
     def ts(min: Int) = new java.sql.Timestamp(3600_000L * 24 + min * 60_000L)
     // user 1: two sessions (gap 40min > 30); user 2: one session
-    val evs = Seq(
-      Sessionize.SessionEvent(1L, ts(0), 10.0),
-      Sessionize.SessionEvent(1L, ts(10), 5.0),
-      Sessionize.SessionEvent(1L, ts(50), 2.0),
-      Sessionize.SessionEvent(2L, ts(5), 7.0))
-
-    // batch reference
-    val batchOut = Sessionize.batch(evs.toDF(), gapMinutes = 30)
+    val evs = Seq((1L, ts(0), 10.0), (1L, ts(10), 5.0), (1L, ts(50), 2.0), (2L, ts(5), 7.0))
+      .toDF("user_id", "ts", "value")
+    Sessionize.batch(evs, gapMinutes = 30)
       .orderBy("user_id", "session_start").collect()
-      .map(r => (r.getLong(0), r.getLong(3), r.getDouble(4)))
-    batchOut shouldBe Array((1L, 2L, 15.0), (1L, 1L, 2.0), (2L, 1L, 7.0))
-
-    // streaming: feed events, then far-future event to advance watermark
-    val mem = MemoryStream[Sessionize.SessionEvent]
-    mem.addData(evs: _*)
-    val out = Sessionize.streaming(mem.toDS(), gapMinutes = 30)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
-    val q = out.writeStream.format("memory").queryName("sess_out")
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/cp").start()
-    try {
-      q.processAllAvailable()
-      mem.addData(Sessionize.SessionEvent(99L, ts(10000), 0.0)) // advance watermark
-      q.processAllAvailable()
-      mem.addData(Sessionize.SessionEvent(99L, ts(20000), 0.0)) // flush timeouts
-      q.processAllAvailable()
-      val got = spark.table("sess_out")
-        .filter($"user_id" < 99)
-        .orderBy("user_id", "session_start").collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getDouble(4)))
-      got shouldBe batchOut
-    } finally q.stop()
-  }
-
-  test("streaming hourly rollup with watermark aggregates by window") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    def ts(h: Int, min: Int) = new java.sql.Timestamp(3600_000L * (100 + h) + min * 60_000L)
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    mem.addData((ts(0, 5), "click", 1.0), (ts(0, 20), "click", 2.0), (ts(1, 5), "view", 3.0))
-    val rolled = graft.streaming.Sessionize.hourlyRollup(
-      mem.toDF().toDF("ts", "event_type", "value"))
-    val q = rolled.writeStream.format("memory").queryName("roll_out")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      mem.addData((ts(10, 0), "late", 0.0)) // advance watermark to close windows
-      q.processAllAvailable()
-      val got = spark.table("roll_out").filter($"event_type" =!= "late")
-        .orderBy("hour_start").collect()
-        .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n"), r.getAs[Double]("total_value")))
-      got shouldBe Array(("click", 2L, 3.0), ("view", 1L, 3.0))
-    } finally q.stop()
+      .map(r => (r.getLong(0), r.getLong(3), r.getDouble(4))) shouldBe
+      Array((1L, 2L, 15.0), (1L, 1L, 2.0), (2L, 1L, 7.0))
   }
 
   test("streaming row_dq enforces drop-only through a full micro-batch run") {
@@ -370,420 +321,6 @@ class StreamingSpec extends SparkSpec {
       q.stop()
       spark.streams.removeListener(listener)
     }
-  }
-
-  test("streaming dedup against a persisted index equals the batch incremental run") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Dedup
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and runs far away today"),
-      (4L, "completely different content about spark engines and data quality checks"))
-      .toDF("doc_id", "text")
-    val b1 = Seq(
-      (11L, "the quick brown fox jumps over the lazy dog and runs far away tonight"))
-    val b2 = Seq(
-      (12L, "completely different content about spark engines and data quality checks"),
-      (13L, "nothing in common with anything else in this tiny corpus at all"))
-
-    val idx = Dedup.minhashIndex(corpus, "doc_id", "text", k = 3, persistIndex = false)
-    val collected = scala.collection.mutable.Set.empty[(Long, Long, Double)]
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("doc_id", "text")
-    val q = StreamingDedup.start(stream, "doc_id", "text", idx, tau = 0.5) {
-      (matches, _) =>
-        collected ++= matches.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    }
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    // ground truth: the batch-mode incremental run over all arrived docs
-    val expected = Dedup.minhashLshIncremental(
-        (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text", idx, tau = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    collected.toSet shouldBe expected
-    collected.map(p => (p._1, p._2)) should contain allOf ((11L, 1L), (12L, 4L))
-  }
-
-  test("streaming hashed near-dup against a standing index equals the batch run") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Embedding
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and runs far away today"),
-      (4L, "completely different content about spark engines and data quality checks"))
-      .toDF("doc_id", "text")
-    val b1 = Seq(
-      (11L, "the quick brown fox jumps over the lazy dog and runs far away tonight"))
-    val b2 = Seq(
-      (12L, "completely different content about spark engines and data quality checks"),
-      (13L, "nothing in common with anything else in this tiny corpus at all"))
-    val idx = Embedding.buildShingleTfIndex(corpus, "doc_id", "text",
-      dim = 65536, k = 3)
-    val collected = scala.collection.mutable.Set.empty[(Long, Long, Long)]
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingDedup.startHashedNearDup(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", "text", idx,
-      tauSqNum = 25L, tauSqDen = 100L) { (matches, _) =>
-      collected ++= matches.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    }
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      mem.addData(b1: _*); q.processAllAvailable() // replay: same matches
-    } finally {
-      q.stop(); idx.release()
-    }
-    val expected = Embedding.hashedShingleNearDupIncremental(
-        (b1 ++ b2).toDF("doc_id", "text"), idx, "doc_id", "text",
-        tauSqNum = 25L, tauSqDen = 100L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    collected.toSet shouldBe expected
-    collected.map(p => (p._1, p._2)) should contain allOf ((11L, 1L), (12L, 4L))
-  }
-
-  test("streaming ANN against a standing IVF index equals the batch probe; q8 tier agrees on ids") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Similarity
-    // deterministic corpus: 30 vectors on distinct rays
-    def vec(seed: Int): Seq[Double] =
-      (0 until 8).map(d => math.sin(seed * 13 + d * 7).abs + 0.1)
-    val corpus = (0L until 30L).map(i => (i, vec(i.toInt))).toDF("id", "vec")
-    val index = Similarity.buildIvfIndex(corpus, nlist = 4)
-    val b1 = Seq((101L, vec(3)), (102L, vec(17)))   // near rays 3 and 17
-    val b2 = Seq((103L, vec(25)))
-    val collected = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = StreamingSimilarity.startTopK(
-      mem.toDF().toDF("id", "vec"), index, k = 3, nprobe = 4) { (topk, _) =>
-      collected ++= topk.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    }
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      mem.addData(b1: _*); q.processAllAvailable() // replay: same matches
-    } finally q.stop()
-    // ground truth: the batch-mode indexed probe over all arrived queries
-    val expected = Similarity.ivfTopKIndexed(
-        (b1 ++ b2).toDF("id", "vec"), index, k = 3, nprobe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    collected.toSet shouldBe expected
-    collected.groupBy(_._1).keySet shouldBe Set(101L, 102L, 103L)
-    // the q8 tier streams through the same wrapper and agrees on the
-    // neighbor SET per query (int8 may reorder near-equal cosines)
-    val collected8 = scala.collection.mutable.Set.empty[(Long, Long)]
-    val mem8 = MemoryStream[(Long, Seq[Double])]
-    val q8 = StreamingSimilarity.startTopK(
-      mem8.toDF().toDF("id", "vec"), index, k = 3, nprobe = 4, q8 = true) { (topk, _) =>
-      collected8 ++= topk.collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-    try { mem8.addData(b1: _*); q8.processAllAvailable() } finally q8.stop()
-    val expected8 = Similarity.ivfTopKIndexedQ8(
-        b1.toDF("id", "vec"), index, k = 3, nprobe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    collected8.toSet shouldBe expected8
-
-    // the RERANK tier streams against a standing IvfRerankIndex with
-    // the same stream ≡ batch + replay-idempotence contract — exact
-    // final ranking, so ranks pin too
-    val rrIndex = Similarity.buildIvfRerankIndex(corpus, nlist = 4,
-      nassign = 2)
-    val collectedRr = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val memRr = MemoryStream[(Long, Seq[Double])]
-    val qRr = StreamingSimilarity.startTopKRerank(
-      memRr.toDF().toDF("id", "vec"), rrIndex, k = 3, nprobe = 2,
-      overFetch = 4) { (topk, _) =>
-      collectedRr ++= topk.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    }
-    try {
-      memRr.addData(b1: _*); qRr.processAllAvailable()
-      memRr.addData(b2: _*); qRr.processAllAvailable()
-      memRr.addData(b1: _*); qRr.processAllAvailable() // replay
-    } finally qRr.stop()
-    val expectedRr = Similarity.ivfTopKIndexedRerank(
-        (b1 ++ b2).toDF("id", "vec"), rrIndex, k = 3, nprobe = 2,
-        overFetch = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    collectedRr.toSet shouldBe expectedRr
-  }
-
-  test("rerank stream under index refresh: loading v2 never changes a running stream") {
-    // the versioned-prefix swap pattern (see StreamingSimilarity's
-    // INDEX REFRESH note): a stream started against a LOADED v1 index
-    // keeps v1 semantics across batches even after a retrained v2 is
-    // saved and loaded under a new prefix — the StreamingUpsample
-    // snapshot discipline for state too big to snapshot
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Similarity
-    def vec(seed: Int): Seq[Double] =
-      (0 until 8).map(d => math.sin(seed * 13 + d * 7).abs + 0.1)
-    val corpusV1 = (0L until 24L).map(i => (i, vec(i.toInt))).toDF("id", "vec")
-    // v2: DISJOINT ids, so any v2 leakage into the running stream is
-    // visible in the neighbor ids themselves, not just in ranks
-    val corpusV2 = (100L until 124L).map(i => (i, vec(i.toInt))).toDF("id", "vec")
-    try {
-      Similarity.saveIvfRerankIndex(
-        Similarity.buildIvfRerankIndex(corpusV1, nlist = 4, nassign = 2),
-        "rrswap_v1", buckets = 2)
-      val v1 = Similarity.loadIvfRerankIndex(spark, "rrswap_v1")
-      val b1 = Seq((201L, vec(3)), (202L, vec(17)))
-      val b2 = Seq((203L, vec(25)))
-      val collected = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-      val mem = MemoryStream[(Long, Seq[Double])]
-      val q = StreamingSimilarity.startTopKRerank(
-        mem.toDF().toDF("id", "vec"), v1, k = 3, nprobe = 2) { (topk, _) =>
-        collected ++= topk.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      }
-      try {
-        mem.addData(b1: _*); q.processAllAvailable()
-        // retrain + publish v2 under a NEW prefix while the stream runs
-        Similarity.saveIvfRerankIndex(
-          Similarity.buildIvfRerankIndex(corpusV2, nlist = 4, nassign = 2),
-          "rrswap_v2", buckets = 2)
-        val v2 = Similarity.loadIvfRerankIndex(spark, "rrswap_v2")
-        v2.centroids.toSeq should not be v1.centroids.toSeq
-        mem.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      // every result the stream ever emitted is a v1 neighbor, and the
-      // whole run equals the batch probe of v1 — including the batch
-      // processed AFTER v2 was published
-      collected.map(_._2).foreach(_ should be < 100L)
-      val expected = Similarity.ivfTopKIndexedRerank(
-          (b1 ++ b2).toDF("id", "vec"), v1, k = 3, nprobe = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      collected.toSet shouldBe expected
-      // and a NEW stream started on v2 probes v2 (the swap completes)
-      val v2 = Similarity.loadIvfRerankIndex(spark, "rrswap_v2")
-      val collected2 = scala.collection.mutable.Set.empty[Long]
-      val mem2 = MemoryStream[(Long, Seq[Double])]
-      val q2 = StreamingSimilarity.startTopKRerank(
-        mem2.toDF().toDF("id", "vec"), v2, k = 3, nprobe = 2) { (topk, _) =>
-        collected2 ++= topk.collect().map(_.getLong(1))
-      }
-      try { mem2.addData(b1: _*); q2.processAllAvailable() } finally q2.stop()
-      collected2 should not be empty
-      collected2.foreach(_ should be >= 100L)
-    } finally Seq("rrswap_v1", "rrswap_v2").foreach(p =>
-      Seq("cells", "vectors", "centroids", "meta").foreach(s =>
-        spark.sql(s"DROP TABLE IF EXISTS ${p}_$s")))
-  }
-
-  test("manifest publish: loadLatest resolves v2, running stream stays v1, crash leaves v1") {
-    // round 12 (VERDICT r11 item 5): the versioned-prefix contract with
-    // the pointer productized — refresh is an atomic manifest append,
-    // not an operator convention
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Similarity
-    def vec(seed: Int): Seq[Double] =
-      (0 until 8).map(d => math.sin(seed * 13 + d * 7).abs + 0.1)
-    val corpusV1 = (0L until 24L).map(i => (i, vec(i.toInt))).toDF("id", "vec")
-    val corpusV2 = (100L until 124L).map(i => (i, vec(i.toInt))).toDF("id", "vec")
-    try {
-      Similarity.saveIvfRerankIndexVersioned(
-        Similarity.buildIvfRerankIndex(corpusV1, nlist = 4, nassign = 2),
-        "rrman", buckets = 2) shouldBe "rrman_v1"
-      val v1 = Similarity.loadLatestIvfRerankIndex(spark, "rrman")
-      val collected = scala.collection.mutable.Set.empty[Long]
-      val mem = MemoryStream[(Long, Seq[Double])]
-      val q = StreamingSimilarity.startTopKRerank(
-        mem.toDF().toDF("id", "vec"), v1, k = 3, nprobe = 2) { (topk, _) =>
-        collected ++= topk.collect().map(_.getLong(1))
-      }
-      try {
-        mem.addData(Seq((201L, vec(3))): _*); q.processAllAvailable()
-        // publish v2 through the manifest while the stream runs
-        Similarity.saveIvfRerankIndexVersioned(
-          Similarity.buildIvfRerankIndex(corpusV2, nlist = 4, nassign = 2),
-          "rrman", buckets = 2) shouldBe "rrman_v2"
-        mem.addData(Seq((202L, vec(17))): _*); q.processAllAvailable()
-      } finally q.stop()
-      // the running stream kept v1 semantics across the publish
-      collected should not be empty
-      collected.foreach(_ should be < 100L)
-      // a reader resolving the pointer now gets v2
-      val v2 = Similarity.loadLatestIvfRerankIndex(spark, "rrman")
-      val v2ids = v2.vectors.select("neighbor_id").collect().map(_.getLong(0))
-      v2ids should not be empty
-      v2ids.foreach(_ should be >= 100L)
-      // CRASH between table writes: a half-written v3 (cells only, no
-      // manifest row) must leave the pointer resolving complete v2
-      Similarity.buildIvfRerankIndex(corpusV1, nlist = 4, nassign = 2)
-        .cells.write.mode("overwrite").saveAsTable("rrman_v3_cells")
-      val after = Similarity.loadLatestIvfRerankIndex(spark, "rrman")
-      after.vectors.select("neighbor_id").collect()
-        .map(_.getLong(0)).foreach(_ should be >= 100L)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS rrman_manifest")
-      spark.sql("DROP TABLE IF EXISTS rrman_v3_cells")
-      Seq("rrman_v1", "rrman_v2").foreach(p =>
-        Seq("cells", "vectors", "centroids", "meta").foreach(s =>
-          spark.sql(s"DROP TABLE IF EXISTS ${p}_$s")))
-    }
-  }
-
-  test("streaming block dedup folds batches into the one-shot result") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Dedup
-    // 4-token blocks; the repeated block "a b c d" crosses batches
-    val d1 = Seq((1L, "a b c d e f g h"))
-    val d2 = Seq((2L, "a b c d x y z w"), (3L, "p q r s"))
-    val d3 = Seq((4L, "p q r s a b c d m n o u"))
-    val allDocs = (d1 ++ d2 ++ d3).toDF("doc_id", "text")
-
-    // empty standing index
-    spark.sql("DROP TABLE IF EXISTS graft_block_idx")
-    Dedup.saveBlockIndex(Seq.empty[Long].toDF("bh"), "graft_block_idx")
-
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("doc_id", "text")
-    val q = StreamingDedup.startBlockDedup(stream, "doc_id", "text",
-        indexTable = "graft_block_idx", blockSize = 4) { (deduped, _) =>
-      collected ++= deduped.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    }
-    try {
-      mem.addData(d1: _*); q.processAllAvailable()
-      mem.addData(d2: _*); q.processAllAvailable()
-      mem.addData(d3: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    val want = Dedup.blockDedup(allDocs, "doc_id", "text", 4)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
-    collected.sortBy(_._1).toSeq shouldBe want
-    // the cross-batch duplicate was actually dropped somewhere
-    want.map(_._4).sum should be >= 2L
-  }
-
-  test("streaming span dedup matches each batch against all earlier ingestion") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Dedup
-    val span = "SHARED-VERBATIM-PASSAGE-ONE-TWO-THREE"
-    val b1 = Seq((1L, s"first host of $span in the corpus"),
-      (2L, "unrelated words entirely different here"))
-    val b2 = Seq((3L, s"second host embedding $span verbatim"))
-    val b3 = Seq((4L, s"third host too: $span appears again"),
-      // no 8-char substring shared with doc 2's text
-      (5L, "zqwvxkjm pbnmtrew ydfghsa cvbnmklo"))
-
-    spark.sql("DROP TABLE IF EXISTS graft_span_idx")
-    // empty standing index with the right schema
-    Dedup.saveSpanIndex(Seq.empty[(Long, String)].toDF("doc_id", "text"),
-      "doc_id", "text", "graft_span_idx", k = 8, sel = "")
-
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingDedup.startSpanDedup(mem.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", indexTable = "graft_span_idx",
-        k = 8, sel = "", minShared = 2) { (matches, _) =>
-      collected ++= matches.collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-      mem.addData(b3: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    // batch 1 sees an empty index; batch 2 matches doc 1; batch 3
-    // matches docs 1 AND 3 (the index grew) — cross-batch visibility
-    collected.toSet shouldBe Set((3L, 1L), (4L, 1L), (4L, 3L))
-  }
-
-  test("streaming semantic dedup drops near-dups of earlier batches' survivors") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Clustering
-    val cents = Array(Seq(1.0, 0.0), Seq(0.0, 1.0))
-    spark.sql("DROP TABLE IF EXISTS graft_sem_idx")
-    Clustering.saveSemanticIndex(
-      Seq.empty[(Long, Seq[Double])].toDF("id", "vec"),
-      cents, "graft_sem_idx", buckets = 2)
-
-    // batch 1: two distinct directions survive; 11 is an internal dup
-    val b1 = Seq((10L, Seq(1.0, 0.0)), (11L, Seq(0.999, 0.01)),
-      (12L, Seq(0.0, 1.0)))
-    // batch 2: 20 duplicates batch 1's survivor 10; 21 is new
-    val b2 = Seq((20L, Seq(0.998, 0.02)), (21L, Seq(0.1, 0.99)))
-
-    val keptIds = scala.collection.mutable.Map.empty[Long, Boolean]
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = StreamingDedup.startSemanticDedup(
-        mem.toDF().toDF("id", "vec"), cents, "graft_sem_idx",
-        tau = 0.999, buckets = 2) { (res, _) =>
-      res.collect().foreach(r => keptIds(r.getLong(0)) = r.getBoolean(2))
-    }
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    keptIds.toMap shouldBe Map(
-      10L -> true, 11L -> false, 12L -> true,  // internal dup dropped
-      20L -> false,                            // cross-batch dup dropped
-      21L -> true)
-    // the index holds exactly the survivors
-    spark.table("graft_sem_idx").select("id").collect()
-      .map(_.getLong(0)).toSet shouldBe Set(10L, 12L, 21L)
-  }
-
-  test("streaming cluster state equals the batch closure over all match pairs") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.ops.Dedup
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and runs far away today"),
-      (4L, "completely different content about spark engines and data quality checks"))
-      .toDF("doc_id", "text")
-    // 11 and 12 arrive in DIFFERENT batches but both match corpus doc 1:
-    // transitivity across batches is exactly what pairwise lists lose
-    val b1 = Seq(
-      (11L, "the quick brown fox jumps over the lazy dog and runs far away tonight"))
-    val b2 = Seq(
-      (12L, "the quick brown fox jumps over the lazy dog and runs far away forever"),
-      (13L, "nothing in common with anything else in this tiny corpus at all"))
-
-    val idx = Dedup.minhashIndex(corpus, "doc_id", "text", k = 3, persistIndex = false)
-    val allPairs = scala.collection.mutable.Set.empty[(Long, Long)]
-    var perBatchAssignments = List.empty[Map[Long, Long]]
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("doc_id", "text")
-    val (q, state) = StreamingDedup.startWithClusters(
-      stream, "doc_id", "text", idx, tau = 0.5) { (matches, assignment, _) =>
-        allPairs ++= matches.collect().map(r => (r.getLong(0), r.getLong(1)))
-        perBatchAssignments ::= assignment.collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    val finalAssignment = state.assignment.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // equals batch-mode connected components over every pair ever matched
-    val expected = Dedup.connectedComponents(
-        allPairs.toSeq.toDF("id_a", "id_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    finalAssignment shouldBe expected
-    // cross-batch transitivity: 11 (batch 1) and 12 (batch 2) share the
-    // cluster keyed by corpus doc 1; unmatched 13 is absent
-    finalAssignment shouldBe Map(1L -> 1L, 11L -> 1L, 12L -> 1L)
-    // the per-batch snapshots grew monotonically to the final state
-    perBatchAssignments.head shouldBe finalAssignment
-    perBatchAssignments.last shouldBe Map(1L -> 1L, 11L -> 1L)
   }
 
   test("WrappedDataFrameStreamWriter builds a StreamingConfig with the reference's chain") {

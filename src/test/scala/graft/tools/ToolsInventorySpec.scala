@@ -1,9 +1,8 @@
 package graft.tools
 
-import java.nio.file.{Files, Path, Paths}
+import graft.SourceTree.{files, read}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import scala.jdk.CollectionConverters._
 
 /** Every runnable tool in `graft.tools` has a user: a spec, a script or
   * the verify skill names it. A one-off probe that nothing names is
@@ -12,19 +11,6 @@ import scala.jdk.CollectionConverters._
 class ToolsInventorySpec extends AnyFunSuite with Matchers {
 
   private val ObjectRe = """(?m)^\s*object\s+(\w+)""".r
-
-  private def files(root: String, ext: String): Seq[Path] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val walk = Files.walk(dir)
-      try walk.iterator().asScala.filter(p =>
-        Files.isRegularFile(p) && p.toString.endsWith(ext)).toList
-      finally walk.close()
-    }
-  }
-
-  private def read(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
 
   /** Objects in `src` that define `main`: each `def main` belongs to the
     * nearest `object` declared before it.
